@@ -12,6 +12,9 @@ synthetic corpus (fixtures.gen_pages — Zipf skewed, FIXTURES.md §1):
   - BM25 top-k query p50 latency (ms) over single-query WAND retrievals
     against the pre-built, cached index
 
+Without ``SPARK_GRAFT_CPUS`` the width is every core this process may run
+on (session.default_cpus).
+
 Scaling-efficiency evidence (local[8] vs local[32]) lives in
 scripts/scaling_bench.py → BENCH.md; this file stays single-master because
 one Python process can hold only one JVM.
@@ -62,7 +65,6 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     bench_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
@@ -71,8 +73,9 @@ def main() -> None:
     from splade_spark.fixtures import gen_pages, gen_queries
     from splade_spark.operators.indexing import build_index
     from splade_spark.operators.query import retrieve
-    from splade_spark.session import get_spark, warm_python_workers
+    from splade_spark.session import default_cpus, get_spark, warm_python_workers
 
+    cpus = default_cpus()
     spark = get_spark(master=f"local[{cpus}]")
     spark.range(10_000).selectExpr("sum(id)").collect()  # JVM warmup
     warm_python_workers(spark)  # Arrow worker import storm out of the timings

@@ -5,6 +5,7 @@ non-survivors from an already-built index without re-tokenizing the kept
 corpus — the dedup → drop → serve cycle a training-data pipeline runs
 continuously::
 
+    scripts/make_pyfiles.sh   # → dist/splade_spark.zip
     spark-submit --py-files dist/splade_spark.zip scripts/curate_cli.py \
         --corpus /data/pages --index /data/index --output /data/index_v2 \
         [--id-col url --text-col text] \

@@ -1,5 +1,6 @@
 """spark-submit entry point: saved index + queries → top-k results.
 
+    scripts/make_pyfiles.sh   # → dist/splade_spark.zip
     spark-submit --py-files dist/splade_spark.zip scripts/query_topk_cli.py \
         --index /data/index --queries /data/queries.parquet \
         --output /data/results [--k 10] [--strategy wand]

@@ -4843,59 +4843,6 @@ def serp_facets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Gate-order curation
-# ---------------------------------------------------------------------------
-# The external driver's correctness gate verifies the FIRST 50 registry
-# entries per round (observed: CORRECTNESS_r04.json gated exactly entries
-# 0-49 of the then-registry) — with 86 entries, 36 are outside any single
-# round's window no matter the order. Rounds are cumulative
-# (CORRECTNESS_r01..r04 stay in the repo), so the registry is reordered to
-# MAXIMIZE cumulative external coverage, not to curate results: round 5
-# fronts every entry the driver has never gated (the 35 added after the
-# round-4 cutoff, plus the new related_terms_pmi) together with 14
-# flagship/changed-this-round entries; the 36 rotated out all carry green
-# rows in CORRECTNESS_r04.json from identical code paths. Independently of
-# the driver, scripts/verify_oracles.py runs the COMPLETE registry — this
-# round all entries were verified green at BOTH sf0.01 (the driver's
-# scale) and sf0.1 (BENCH.md §15d) — and the pytest suite pins every
-# operator again. Registry CONTENT is unchanged — this is a dict-order
-# permutation only.
-
-_GATE_FRONT = [
-    # flagship + round-5-touched core
-    "bm25_sql_topk", "bm25_topk_engine", "bm25_topk_saved",
-    "bm25_topk_merged", "bm25_topk_deduped", "bm25_resumable_engine",
-    "bm25_topk_sharded_dist", "splade_topk_engine", "splade_pooled_terms",
-    "dedup_clusters", "minhash_band_pairs", "retrieval_metrics_bm25",
-    "html_text_extraction", "related_terms_pmi", "packed_sequences",
-    # never-driver-gated before round 5 (added after the r4 cutoff)
-    "events_running_sum", "url_canonicalize", "url_latest_snapshot",
-    "host_doc_stats", "streaming_latest_snapshot", "repetition_quality",
-    "pii_scrub", "doc_chunks", "stratified_sample_mix",
-    "decontaminate_corpus", "unigram_lm_cost", "top_bigrams",
-    "bm25_topk_decontaminated", "embedding_near_dup_lsh",
-    "boilerplate_stripped", "pq_adc_topk", "dup_span_removal",
-    "phrase_match", "bm25_topk_conjunctive", "bm25_topk_web",
-    "term_pair_proximity", "best_snippet", "bm25_topk_proximity",
-    "bm25_topk_msm", "link_extraction", "link_pagerank",
-    "bm25_topk_prior", "anchor_text_enrich", "bm25_topk_diverse",
-    "spell_suggest", "bm25_topk_synonyms", "sequence_packing",
-    "packing_stats", "prefix_suggest", "serp_facets",
-]
-
-
-def _reorder_registry() -> None:
-    assert len(_GATE_FRONT) == len(set(_GATE_FRONT)) == 50, len(_GATE_FRONT)
-    missing = [n for n in _GATE_FRONT if n not in REGISTRY]
-    assert not missing, f"gate-front names not registered: {missing}"
-    rest = [n for n in REGISTRY if n not in set(_GATE_FRONT)]
-    ordered = {n: REGISTRY[n] for n in _GATE_FRONT + rest}
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-
-# ---------------------------------------------------------------------------
 # Related searches (PMI co-occurrence, operators/lm.py)
 # ---------------------------------------------------------------------------
 
@@ -5016,8 +4963,3 @@ def packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 300)
     plan = pack_sequences(docs, seq_len=_PACK_LEN)
     return materialize_packed(docs, plan, seq_len=_PACK_LEN)
-
-# Run the gate-order rotation LAST, after every @register call, so any
-# entry added later in the file (or a future round) is present before the
-# permutation — _reorder_registry asserts every fronted name exists.
-_reorder_registry()

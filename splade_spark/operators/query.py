@@ -644,6 +644,12 @@ def _topk(scores: DataFrame, index: InvertedIndex, k: int) -> DataFrame:
     )
 
 
+# block columns a serving node keeps resident (LocalIndexServer.by_term)
+_SERVED_COLS = (
+    "term_id", "max_weight", "min_doc", "max_doc", "doc_gaps", "weights",
+)
+
+
 def load_term_info(term_dict: DataFrame) -> dict[str, int]:
     """term → term_id dict via one Arrow transfer — the serving processes'
     shared dictionary load (LocalIndexServer, ShardedServer)."""
@@ -658,30 +664,44 @@ class LocalIndexServer:
     reference's own serving shape (it memory-maps term_ptr/postings and
     scores in-process, /root/reference/src/indexing/sparse_index.py:502-536,
     661-755). One server holds ONE index shard; at web scale, shard by
-    doc range and merge per-shard top-k."""
+    doc range and let :class:`~.sharding.ShardedServer` merge per-shard
+    top-k."""
 
     def __init__(self, index: InvertedIndex):
         # Arrow-batched transfers (toPandas) — a row-at-a-time collect() of
         # the block table measured ~10x slower for the same bytes
-        term_info = load_term_info(index.term_dict)
-        bp = index.postings.select(
-            "term_id", "max_weight", "min_doc", "max_doc", "doc_gaps", "weights"
-        ).toPandas()
-        dd = index.doc_dim.select("doc_idx", "doc_id").toPandas()
-        self._init_from_parts(index.meta, term_info, bp, dd)
+        self._load(
+            index.meta,
+            load_term_info(index.term_dict),
+            index.postings.select(*_SERVED_COLS).toPandas(),
+            index.doc_dim.select("doc_idx", "doc_id").toPandas(),
+        )
 
-    def _init_from_parts(
+    @classmethod
+    def _from_frames(
+        cls,
+        meta: dict,
+        term_info: dict[str, int],
+        postings_pdf: pd.DataFrame,
+        doc_dim_pdf: pd.DataFrame,
+    ) -> "LocalIndexServer":
+        """A server over already-loaded pandas frames: the sharded broker
+        loads the term dictionary ONCE and hands each shard node its own
+        postings and doc-id slices (operators/sharding.py)."""
+        srv = cls.__new__(cls)
+        srv._load(meta, term_info, postings_pdf, doc_dim_pdf)
+        return srv
+
+    def _load(
         self,
         meta: dict,
-        term_info: dict | None,
+        term_info: dict[str, int],
         postings_pdf: pd.DataFrame,
         doc_dim_pdf: pd.DataFrame,
     ) -> None:
-        """Build the resident structures from already-loaded pandas frames
-        (the sharded broker loads the whole sharded table ONCE and hands
-        each shard server its slice — see operators/sharding.py).
-        ``doc_ids`` is offset-addressed by ``doc_base`` so a doc-range
-        shard (doc_idx in [lo, hi)) stays dense in memory."""
+        """Build the resident structures. ``doc_ids`` is offset-addressed
+        by ``doc_base`` so a doc-range shard (doc_idx in [lo, hi)) stays
+        dense in memory."""
         self.meta = dict(meta)
         self.term_info = term_info
         self.by_term: dict[int, list] = {}
@@ -697,7 +717,7 @@ class LocalIndexServer:
                 (mw_, lo, hi, bytes(g), bytes(wbytes))
             )
         # per-term impact ceiling (max block max_weight) — the broker's
-        # shard-routing bound (sharding.ShardedServer.search_ids)
+        # shard-routing bound (sharding.ShardedServer._fan_out)
         self.term_max: dict[int, float] = {
             tid: max(b[0] for b in blocks)
             for tid, blocks in self.by_term.items()
@@ -714,26 +734,53 @@ class LocalIndexServer:
         self.top_k_terms = int(self.meta.get("top_k_terms", 1 << 30))
         self.max_tokens = int(self.meta.get("max_tokens", DEFAULT.max_tokens))
 
+    def _parse(self, text: str) -> tuple[dict[int, float], bool]:
+        """Query text → (qtf by term_id, every token known), tokenized
+        under the index's own ``max_tokens`` with ``exclude_terms``
+        dropped. Bag-of-words (OR) queries score the known terms; an
+        implicit AND cannot hold once a token is unknown."""
+        qtf: dict[int, float] = {}
+        known = True
+        for t in tokenize_py(text, self.max_tokens):
+            if t in self.exclude:
+                continue
+            tid = self.term_info.get(t)
+            if tid is None:
+                known = False
+            else:
+                qtf[tid] = qtf.get(tid, 0.0) + 1.0
+        return qtf, known
+
+    def _lookup(self, term_weights: dict[str, float]) -> dict[int, float]:
+        """Pre-expanded query vector (term → weight) → weight by term_id;
+        unknown and excluded terms dropped."""
+        return {
+            self.term_info[t]: float(w)
+            for t, w in term_weights.items()
+            if t in self.term_info and t not in self.exclude
+        }
+
+    def _sparsify(self, qtf_by_tid: dict[int, float]) -> list[tuple[int, float]]:
+        """W3 mirror of the index's encode settings: strict > min_weight,
+        then the top_k_terms heaviest by (qtf desc, term_id asc)."""
+        items = [
+            (tid, w) for tid, w in qtf_by_tid.items() if w > self.min_weight
+        ]
+        if len(items) > self.top_k_terms:
+            items.sort(key=lambda p: (-p[1], p[0]))
+            items = items[: self.top_k_terms]
+        return items
+
     def search(self, text: str, k: int = 10) -> list[tuple[str, float]]:
         """BM25/bag-of-words serving: tokenize → mirror-sparsified query
         vector → WAND → [(doc_id, score f32)] ranked (desc, doc_idx asc)."""
-        qtf: dict[int, float] = {}
-        for t in tokenize_py(text, self.max_tokens):
-            tid = self.term_info.get(t)
-            if tid is not None and t not in self.exclude:
-                qtf[tid] = qtf.get(tid, 0.0) + 1.0
-        return self.search_ids(qtf, k)
+        return self.search_ids(self._parse(text)[0], k)
 
     def search_weighted(
         self, term_weights: dict[str, float], k: int = 10
     ) -> list[tuple[str, float]]:
         """Serving over a pre-expanded query vector (term → weight)."""
-        pairs = {
-            self.term_info[t]: float(w)
-            for t, w in term_weights.items()
-            if t in self.term_info and t not in self.exclude
-        }
-        return self.search_ids(pairs, k)
+        return self.search_ids(self._lookup(term_weights), k)
 
     def search_ids(
         self, qtf_by_tid: dict[int, float], k: int = 10
@@ -750,15 +797,8 @@ class LocalIndexServer:
         """Top-k as (global doc_idx int64, score float32) arrays, ranked
         (score desc, doc_idx asc) — the merge currency of the sharded
         broker (sharding.ShardedServer)."""
-        # W3 mirror: strict > min_weight, then top-k (qtf desc, term_id asc)
-        items = [
-            (tid, w) for tid, w in qtf_by_tid.items() if w > self.min_weight
-        ]
-        if len(items) > self.top_k_terms:
-            items.sort(key=lambda p: (-p[1], p[0]))
-            items = items[: self.top_k_terms]
         qtfs, maxw, mind, maxd, gaps, wts = [], [], [], [], [], []
-        for tid, qw in sorted(items):
+        for tid, qw in sorted(self._sparsify(qtf_by_tid)):
             for mw_, lo, hi, g, wbytes in self.by_term.get(tid, ()):
                 qtfs.append(qw)
                 maxw.append(mw_)

@@ -1,14 +1,18 @@
-"""Doc-range index sharding + fan-out/merge serving tier.
+"""Doc-range index sharding + the one serving broker.
 
 This makes the serving story real at 10^12 docs: ONE process cannot hold
-the whole index, so the index is split into S doc-range shards; every
-serving node holds one shard resident (the reference's own serving shape —
-it memory-maps term_ptr/postings and scores in-process,
-/root/reference/src/indexing/sparse_index.py:502-536,661-755); a broker
-fans a query out to all shards and merges per-shard top-k. The merge is
-EXACT, not approximate: postings are split by doc_idx range, so the full
-score of any doc lives entirely in its shard, and the global top-k is a
-subset of the union of per-shard top-ks.
+the whole index, so the index is split into S doc-range shards and every
+serving node holds one shard resident (the reference's own serving shape
+— it memory-maps term_ptr/postings and scores in-process, reference
+sparse_index.py:502-536,661-755). There are two node types: a
+``LocalIndexServer`` answers bag-of-words (OR) queries over its shard,
+and a ``webserve.WebQueryServer`` adds the shard's positional slice for
+web (AND + phrase) queries. ``ShardedServer`` is the broker for both: it
+bounds each node from per-term impact ceilings, visits nodes in
+descending bound order with a strict θ-cut, and merges per-node top-k.
+The merge is EXACT, not approximate: postings are split by doc_idx
+range, so the full score of any doc lives entirely in its shard, and the
+global top-k is a subset of the union of per-shard top-ks.
 
 Spark-first design notes (100 TB):
 - ``shard_postings`` is a NARROW job — no shuffle. Blocks are already
@@ -36,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.codec import decode_block, encode_block
 from .indexing import POSTINGS_SCHEMA, InvertedIndex
+from .query import _SERVED_COLS, LocalIndexServer, load_term_info
 
 _SHARDED_SCHEMA = "shard_id INT, " + POSTINGS_SCHEMA
 
@@ -200,16 +205,24 @@ def load_sharded_all(spark: SparkSession, out_dir: str) -> InvertedIndex:
 
 
 class ShardedServer:
-    """Broker over S per-shard :class:`LocalIndexServer` handles: fan a
-    query out to every shard, merge per-shard top-k by the global tie
-    rule (score f32 desc, doc_idx asc). Results are EXACTLY the
-    single-server / exhaustive-plan ranking — each doc's postings live
-    entirely in one shard, so per-shard scores are complete and the
-    global top-k ⊆ union of per-shard top-ks.
+    """The serving broker over S doc-range shard nodes, for bag-of-words
+    (OR) and web (AND) queries alike.
 
-    In this sandbox all S servers live in one process; on a real cluster
-    each is a separate node holding ~1/S of the index and the broker is a
-    thin RPC fan-out — the merge below is the broker's exact logic."""
+    A node is a :class:`~.query.LocalIndexServer` holding one shard
+    (``servers``); the web tier (:class:`~.webserve.ShardedWebServer`)
+    pairs each with its positional slice as a
+    :class:`~.webserve.WebQueryServer`. The broker bounds each node from
+    its per-term impact ceilings, visits nodes in descending bound order
+    until the bound falls strictly below the running kth score, and
+    merges per-node top-k by the global tie rule (score f32 desc, doc_idx
+    asc). Results are EXACTLY the single-server ranking: each doc's
+    postings live entirely in one shard, so per-shard scores are complete
+    and the global top-k ⊆ union of per-shard top-ks.
+
+    Here all S nodes live in one process (the demo and test shape); on a
+    real cluster each is a separate node holding ~1/S of the index and
+    the broker is a thin RPC fan-out — the merge below is the broker's
+    exact logic."""
 
     def __init__(self, index: InvertedIndex, n_shards: int):
         """Split an IN-MEMORY index into S resident shard servers.
@@ -219,25 +232,19 @@ class ShardedServer:
         fit one process. For big indexes use ``save_sharded`` +
         ``from_saved`` instead: each shard loads only its own partition
         directory, which is the real fleet's boot path."""
-        from .query import LocalIndexServer, load_term_info
-
         self.n_shards = int(n_shards)
         sharded = shard_postings(index, n_shards).toPandas()
-        dps = _dps(int(index.meta["n_docs"]), n_shards)
         dd = index.doc_dim.select("doc_idx", "doc_id").toPandas()
-        dd["shard_id"] = (dd["doc_idx"].astype(int) // dps).astype(int)
+        shard_of = dd["doc_idx"].astype(int) // _dps(
+            int(index.meta["n_docs"]), n_shards)
         # the term dictionary is global; load ONCE, share across shards
         term_info = load_term_info(index.term_dict)
-        self.servers: list[LocalIndexServer] = []
-        for s in range(self.n_shards):
-            srv = LocalIndexServer.__new__(LocalIndexServer)
-            srv._init_from_parts(
-                index.meta,
-                term_info,
-                sharded[sharded["shard_id"] == s],
-                dd[dd["shard_id"] == s],
-            )
-            self.servers.append(srv)
+        self.servers = [
+            LocalIndexServer._from_frames(
+                index.meta, term_info,
+                sharded[sharded["shard_id"] == s], dd[shard_of == s])
+            for s in range(self.n_shards)
+        ]
 
     @classmethod
     def from_saved(cls, spark: SparkSession, out_dir: str) -> "ShardedServer":
@@ -248,11 +255,8 @@ class ShardedServer:
         each per-shard server lives on its own node."""
         import json
 
-        from .query import LocalIndexServer, load_term_info
-
         with open(os.path.join(out_dir, "index_meta.json")) as f:
-            meta = json.load(f)
-        n_shards = int(meta["n_shards"])
+            n_shards = int(json.load(f)["n_shards"])
         term_info = load_term_info(
             spark.read.parquet(os.path.join(out_dir, "term_dict"))
         )
@@ -261,131 +265,118 @@ class ShardedServer:
         self.servers = []
         for s in range(n_shards):
             shard = load_shard(spark, out_dir, s)
-            srv = LocalIndexServer.__new__(LocalIndexServer)
-            srv._init_from_parts(
-                shard.meta,
-                term_info,
-                shard.postings.select(
-                    "term_id", "max_weight", "min_doc", "max_doc",
-                    "doc_gaps", "weights",
-                ).toPandas(),
+            self.servers.append(LocalIndexServer._from_frames(
+                shard.meta, term_info,
+                shard.postings.select(*_SERVED_COLS).toPandas(),
                 shard.doc_dim.select("doc_idx", "doc_id").toPandas(),
-            )
-            self.servers.append(srv)
+            ))
         return self
 
     def search(
         self, text: str, k: int = 10, route: bool = True
     ) -> list[tuple[str, float]]:
-        from ..functions.tokenize import tokenize_py
-
-        s0 = self.servers[0]
-        qtf: dict[int, float] = {}
-        for t in tokenize_py(text, s0.max_tokens):
-            tid = s0.term_info.get(t)
-            if tid is not None and t not in s0.exclude:
-                qtf[tid] = qtf.get(tid, 0.0) + 1.0
-        return self.search_ids(qtf, k, route=route)
+        return self.search_ids(self.servers[0]._parse(text)[0], k, route=route)
 
     def search_weighted(
         self, term_weights: dict[str, float], k: int = 10
     ) -> list[tuple[str, float]]:
-        s0 = self.servers[0]
-        pairs = {
-            s0.term_info[t]: float(w)
-            for t, w in term_weights.items()
-            if t in s0.term_info and t not in s0.exclude
-        }
-        return self.search_ids(pairs, k)
+        return self.search_ids(self.servers[0]._lookup(term_weights), k)
 
     def search_ids(
         self, qtf_by_tid: dict[int, float], k: int = 10, route: bool = True
     ) -> list[tuple[str, float]]:
-        """Fan-out with RANK-SAFE shard routing (``route=True``).
+        """Bag-of-words (OR) fan-out over the shard servers; ``route=False``
+        visits every shard (the reference the routed fan-out must equal).
+        Each node is bounded by the query vector the kernel itself scores
+        — the W3-sparsified one."""
+        weights = self.servers[0]._sparsify(qtf_by_tid)
+        return self._fan_out(self.servers, qtf_by_tid, weights, k, route,
+                             every_term=False)
+
+    def _fan_out(
+        self, nodes: list, query, weights: list[tuple[int, float]], k: int,
+        route: bool, every_term: bool,
+    ) -> list[tuple[str, float]]:
+        """Visit ``nodes[i].topk_arrays(query, k)`` under RANK-SAFE routing
+        and merge the per-node top-k; ``nodes[i]`` serves the shard of
+        ``servers[i]``.
 
         Every shard knows its per-term impact ceiling (max block
         max_weight — LocalIndexServer.term_max), so the broker bounds any
-        shard's best possible score by ub_s = Σ_t qw_t · max_w(t, s)
-        before touching it:
+        shard's best possible score by ub_s = Σ_t qw_t · max_w(t, s) over
+        the (term_id, qw) ``weights`` before touching it:
 
         - a shard where NO query term has postings (ub_s = 0) cannot
-          contribute a candidate — skipped outright;
+          contribute a candidate — skipped outright; with ``every_term``
+          (implicit AND) so is a shard missing ANY query term;
         - remaining shards are visited in DESCENDING ub order; once k
           results are merged with kth score θ, a shard with
-          f32(ub_s) < θ is skipped. ub_s mirrors the in-kernel
-          ``_wand_topk`` arithmetic exactly: each term contributes the
-          FLOAT32 product f32(qw)·f32(max_w) (the same product a doc
-          whose weight equals the ceiling would contribute), accumulated
-          in float64, and the BOUND is downcast to float32 before the
-          strict compare — because shard scores are themselves f32
-          downcasts. The safety chain: per-term f32 products dominate
-          the doc's products term-by-term, f64 summation is monotone,
-          and f32 rounding is monotone, so every doc score there
-          satisfies f32(Σ) ≤ f32(ub_s) < θ. Comparing the RAW f64 ub_s
-          instead would be wrong at the tie boundary: a ceiling doc's
-          score f32(ub_s) can round UP above ub_s, so ub_s < θ =
-          f32(ub_s) would skip a shard whose doc ties θ and wins the
-          doc_idx tie-break (``<`` is strict: a θ-tying shard stays
-          visitable for exactly that reason).
+          f32(ub_s) < θ is skipped. ub_s mirrors the node kernels'
+          arithmetic exactly: each term contributes the FLOAT32 product
+          f32(qw)·f32(max_w) (the same product a doc whose weight equals
+          the ceiling would contribute), accumulated in float64, and the
+          BOUND is downcast to float32 before the strict compare —
+          because shard scores are themselves f32 downcasts. The safety
+          chain: per-term f32 products dominate the doc's products
+          term-by-term, f64 summation is monotone, and f32 rounding is
+          monotone, so every doc score there satisfies
+          f32(Σ) ≤ f32(ub_s) < θ. Comparing the RAW f64 ub_s instead
+          would be wrong at the tie boundary: a ceiling doc's score
+          f32(ub_s) can round UP above ub_s, so ub_s < θ = f32(ub_s)
+          would skip a shard whose doc ties θ and wins the doc_idx
+          tie-break (``<`` is strict: a θ-tying shard stays visitable for
+          exactly that reason).
 
-        Results are therefore IDENTICAL to the unrouted fan-out; only
-        the number of shards touched changes (``last_shards_visited``).
-        On a serving fleet this is the difference between every query
-        hitting all S nodes and selective queries hitting the few whose
-        doc ranges actually hold their terms — broker-side block-max
-        pruning, one level above each node's own WAND.
+        Results are therefore IDENTICAL to the unrouted fan-out
+        (``route=False``: every node, shard order, no cut); only the
+        number of shards touched changes (``last_shards_visited``). On a
+        serving fleet this is the difference between every query hitting
+        all S nodes and selective queries hitting the few whose doc
+        ranges actually hold their terms — broker-side block-max pruning,
+        one level above each node's own WAND.
         """
-        candidates = list(enumerate(self.servers))
-        self.last_shards_visited = 0
+        order, bounds = range(len(nodes)), None
         if route:
-            s0 = self.servers[0]
-            items = [
-                (tid, w) for tid, w in qtf_by_tid.items()
-                if w > s0.min_weight
-            ]
-            if len(items) > s0.top_k_terms:
-                items.sort(key=lambda p: (-p[1], p[0]))
-                items = items[: s0.top_k_terms]
             ubs = []
-            for si, srv in enumerate(self.servers):
+            for i, srv in enumerate(self.servers):
+                tm = srv.term_max
+                if every_term and any(tid not in tm for tid, _ in weights):
+                    continue  # a missing term kills every AND candidate
                 ub = 0.0  # f64 sum of f32 products — _wand_topk parity
-                for tid, qw in items:
-                    mw = srv.term_max.get(tid)
+                for tid, qw in weights:
+                    mw = tm.get(tid)
                     if mw is not None:
                         ub += float(np.float32(qw) * np.float32(mw))
                 if ub > 0.0:
-                    ubs.append((ub, si))
+                    ubs.append((ub, i))
             ubs.sort(key=lambda p: (-p[0], p[1]))
-            candidates = [(si, self.servers[si]) for _, si in ubs]
+            order = [i for _, i in ubs]
             bounds = [np.float32(ub) for ub, _ in ubs]
-        docs_parts, score_parts, id_parts = [], [], []
-        merged_docs = np.empty(0, dtype=np.int64)
-        merged_scores = np.empty(0, dtype=np.float32)
+        # running top-k, sorted only to trim; ``owner`` is each result's
+        # node, for the doc-id decode
+        docs = np.empty(0, dtype=np.int64)
+        scores = np.empty(0, dtype=np.float32)
+        owner = np.empty(0, dtype=np.int64)
         theta = None
-        for pos, (si, srv) in enumerate(candidates):
-            if route and theta is not None and bounds[pos] < theta:
+        self.last_shards_visited = 0
+        for pos, i in enumerate(order):
+            if theta is not None and bounds[pos] < theta:
                 break
-            d, s = srv.topk_arrays(qtf_by_tid, k)
+            d, s = nodes[i].topk_arrays(query, k)
             self.last_shards_visited += 1
             if not d.size:
                 continue
-            docs_parts.append(d)
-            score_parts.append(s)
-            id_parts.extend(srv.doc_ids[int(i) - srv.doc_base] for i in d)
-            if route:
-                merged_docs = np.concatenate((merged_docs, d))
-                merged_scores = np.concatenate((merged_scores, s))
-                if merged_docs.size >= k:
-                    sel = np.lexsort(
-                        (merged_docs, -merged_scores.astype(np.float64))
-                    )[:k]
-                    merged_docs = merged_docs[sel]
-                    merged_scores = merged_scores[sel]
-                    theta = merged_scores[-1]
-        if not docs_parts:
-            return []
-        docs = np.concatenate(docs_parts)
-        scores = np.concatenate(score_parts)
-        sel = np.lexsort((docs, -scores.astype(np.float64)))[:k]
-        ids = np.asarray(id_parts, dtype=object)
-        return [(ids[i], float(scores[i])) for i in sel]
+            docs = np.concatenate((docs, d))
+            scores = np.concatenate((scores, s))
+            owner = np.concatenate((owner, np.full(d.size, i)))
+            if docs.size > k:
+                sel = np.lexsort((docs, -scores.astype(np.float64)))[:k]
+                docs, scores, owner = docs[sel], scores[sel], owner[sel]
+            if route and docs.size == k:
+                theta = scores.min()  # the kth score
+        sel = np.lexsort((docs, -scores.astype(np.float64)))
+        return [
+            (self.servers[i].doc_ids[int(d) - self.servers[i].doc_base],
+             float(s))
+            for d, s, i in zip(docs[sel], scores[sel], owner[sel])
+        ]

@@ -4,12 +4,19 @@ filtering at millisecond latency.
 The distributed plane answers web-style queries (quoted phrases ∧
 implicit AND ∧ BM25, positional.retrieve_web) as Spark jobs; this
 module is the SERVING mirror, the same shape LocalIndexServer gives the
-bag-of-words path (query.py:615-738): everything warm in one process,
-zero Spark jobs per query. A fleet node pairs one doc-range index shard
-(LocalIndexServer / ShardedServer) with the SAME doc range's positional
-slice; the broker merges per-shard top-k exactly as for OR queries —
-conjunctive and phrase constraints are per-doc predicates, so shard
-merges stay trivially rank-safe.
+bag-of-words path: everything warm in one process, zero Spark jobs per
+query. Serving has two node types and one broker:
+
+- :class:`~.query.LocalIndexServer` — one doc-range index shard,
+  bag-of-words (OR) queries;
+- :class:`WebQueryServer` — that shard plus the SAME doc range's
+  positional slice, web (AND + phrase) queries;
+- :class:`~.sharding.ShardedServer` — the broker for both.
+  :class:`ShardedWebServer` is that broker with WebQueryServer nodes:
+  it routes and merges exactly as for OR queries, with the stronger
+  AND routing rule (a shard missing any query term is skipped).
+  Conjunctive and phrase constraints are per-doc predicates, so shard
+  merges stay rank-safe.
 
 Scale notes: the positional store is the memory analogue of the saved
 layout (positional.save_positional) — load only this shard's doc range,
@@ -38,6 +45,7 @@ from ..functions.codec import decode_block, varint_decode
 from ..functions.tokenize import tokenize_py
 from .positional import parse_web_query
 from .query import LocalIndexServer
+from .sharding import ShardedServer
 
 
 class PositionalStore:
@@ -127,7 +135,8 @@ class PositionalStore:
 
 
 class WebQueryServer:
-    """One serving node: a warm index shard + its positional slice."""
+    """The web (AND + phrase) serving node: a warm index shard
+    (LocalIndexServer) + the same doc range's positional slice."""
 
     def __init__(self, srv: LocalIndexServer, store: PositionalStore):
         self.srv = srv
@@ -155,23 +164,15 @@ class WebQueryServer:
         self, raw: str, k: int = 10
     ) -> tuple[np.ndarray, np.ndarray]:
         """Top-k as (global doc_idx int64, score float32), ranked
-        (score desc, doc_idx asc) — the sharded broker's merge currency
+        (score desc, doc_idx asc) — the broker's merge currency
         (ShardedWebServer), mirroring LocalIndexServer.topk_arrays."""
         srv = self.srv
         empty = (
             np.empty(0, dtype=np.int64),
             np.empty(0, dtype=np.float32),
         )
-        qtf: dict[int, float] = {}
-        req: set[str] = set()
-        for t in tokenize_py(raw, srv.max_tokens):
-            if t in srv.exclude:
-                continue
-            req.add(t)
-            tid = srv.term_info.get(t)
-            if tid is not None:
-                qtf[tid] = qtf.get(tid, 0.0) + 1.0
-        if not req or any(t not in srv.term_info for t in req):
+        qtf, known = srv._parse(raw)
+        if not known or not qtf:
             return empty  # OOV token: implicit AND can never hold
         d_parts, s_parts = [], []
         for tid in sorted(qtf):
@@ -229,23 +230,20 @@ class WebQueryServer:
         return cand[order], scores[order]
 
 
-class ShardedWebServer:
-    """Web-query broker over doc-range shards: each node is a
-    WebQueryServer (index shard + its positional slice); the broker
-    routes, fans out, and merges per-shard top-k by the engine tie rule
-    — results identical to one unsharded server (pytest-pinned).
-
-    Conjunctive routing is STRONGER than the OR broker's
-    (sharding.ShardedServer.search_ids): a shard missing ANY required
-    term cannot hold an AND candidate and is skipped outright, on top of
-    the same Σ qw·max_w(term, shard) upper-bound descent with strict
-    θ-cut. Selective multi-term web queries therefore touch only the
-    shards whose doc ranges hold ALL their terms."""
+class ShardedWebServer(ShardedServer):
+    """The web-query broker: a :class:`~.sharding.ShardedServer` whose
+    visited nodes are WebQueryServers (index shard + its positional
+    slice). Routing and merge are the broker's own, with the AND rule —
+    a shard missing ANY query term cannot hold a candidate and is
+    skipped outright, on top of the Σ qw·max_w(term, shard) bound
+    descent with strict θ-cut. Selective multi-term web queries
+    therefore touch only the shards whose doc ranges hold ALL their
+    terms; results are identical to one unsharded server
+    (pytest-pinned). The inherited ``search_ids`` / ``search_weighted``
+    still answer bag-of-words (OR) queries over the same shards."""
 
     def __init__(self, index, positional_rows, n_shards: int = 4):
-        from .sharding import ShardedServer
-
-        self._broker = ShardedServer(index, n_shards=n_shards)
+        super().__init__(index, n_shards=n_shards)
         self._attach_positional(
             (t, d, np.asarray(ps, dtype=np.int64))
             for t, d, ps in positional_rows
@@ -264,10 +262,7 @@ class ShardedWebServer:
         table once (optionally vocabulary-pruned) and splits it by each
         node's doc set; on a fleet each node instead loads only its own
         doc range's positional files next to its index shard."""
-        from .sharding import ShardedServer
-
-        self = cls.__new__(cls)
-        self._broker = ShardedServer.from_saved(spark, index_dir)
+        self = super().from_saved(spark, index_dir)
         store = PositionalStore.from_saved(pos_dir, terms=terms)
         self._attach_positional(
             (t, d, ps)
@@ -278,84 +273,29 @@ class ShardedWebServer:
 
     def _attach_positional(self, rows) -> None:
         by_doc_shard: dict[str, int] = {}
-        for si, srv in enumerate(self._broker.servers):
+        for si, srv in enumerate(self.servers):
             for d in srv.doc_ids:
                 if d is not None:
                     by_doc_shard[d] = si
-        slices: list[dict] = [dict() for _ in self._broker.servers]
+        slices: list[dict] = [dict() for _ in self.servers]
         for t, d, ps in rows:
             si = by_doc_shard.get(d)
             if si is not None:
                 slices[si].setdefault(t, {})[d] = ps
         self.nodes = [
             WebQueryServer(srv, PositionalStore(slc))
-            for srv, slc in zip(self._broker.servers, slices)
+            for srv, slc in zip(self.servers, slices)
         ]
-        self.last_shards_visited = 0
 
     def search(
         self, raw: str, k: int = 10, route: bool = True
     ) -> list[tuple[str, float]]:
-        s0 = self.nodes[0].srv
-        qtf: dict[int, float] = {}
-        req_ok = True
-        for t in tokenize_py(raw, s0.max_tokens):
-            if t in s0.exclude:
-                continue
-            tid = s0.term_info.get(t)
-            if tid is None:
-                req_ok = False
-                break
-            qtf[tid] = qtf.get(tid, 0.0) + 1.0
-        self.last_shards_visited = 0
-        if not req_ok or not qtf:
+        """'"exact phrase" bare terms' → [(doc_id, score f32)], identical
+        to one unsharded WebQueryServer; ``route=False`` visits every
+        shard."""
+        qtf, known = self.servers[0]._parse(raw)
+        if not known or not qtf:
+            self.last_shards_visited = 0
             return []
-        candidates = list(enumerate(self.nodes))
-        bounds = None
-        if route:
-            ubs = []
-            for si, node in enumerate(self.nodes):
-                tm = node.srv.term_max
-                if any(tid not in tm for tid in qtf):
-                    continue  # a missing term kills every AND candidate
-                # f64 sum of f32 products, downcast to f32 — exactly the
-                # node's scoring arithmetic, so the strict theta cut is
-                # rank-safe at ulp granularity INCLUDING the tie
-                # boundary: scores are f32(sum) and f32 rounding is
-                # monotone, so score <= f32(ub); comparing the raw f64
-                # ub instead could skip a shard whose ceiling doc rounds
-                # up to exactly theta (see sharding.search_ids).
-                ub = sum(
-                    float(np.float32(qw) * np.float32(tm[tid]))
-                    for tid, qw in qtf.items()
-                )
-                ubs.append((ub, si))
-            ubs.sort(key=lambda p: (-p[0], p[1]))
-            candidates = [(si, self.nodes[si]) for _, si in ubs]
-            bounds = [np.float32(ub) for ub, _ in ubs]
-        merged_d = np.empty(0, dtype=np.int64)
-        merged_s = np.empty(0, dtype=np.float32)
-        theta = None
-        for pos, (si, node) in enumerate(candidates):
-            if route and theta is not None and bounds[pos] < theta:
-                break
-            d, s = node.topk_arrays(raw, k)
-            self.last_shards_visited += 1
-            if not d.size:
-                continue
-            merged_d = np.concatenate((merged_d, d))
-            merged_s = np.concatenate((merged_s, s))
-            sel = np.lexsort((merged_d, -merged_s.astype(np.float64)))[:k]
-            merged_d, merged_s = merged_d[sel], merged_s[sel]
-            if merged_d.size >= k:
-                theta = merged_s[-1]
-        out = []
-        for d, s in zip(merged_d, merged_s):
-            si = None
-            for node in self.nodes:
-                base = node.srv.doc_base
-                if base <= int(d) < base + len(node.srv.doc_ids):
-                    si = node
-                    break
-            out.append((si.srv.doc_ids[int(d) - si.srv.doc_base], float(s)))
-        return out
+        return self._fan_out(self.nodes, raw, list(qtf.items()), k, route,
+                             every_term=True)

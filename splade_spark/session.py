@@ -1,7 +1,11 @@
-"""SparkSession factory tuned for the local[N] sandbox.
+"""SparkSession factory tuned for local[N] on one host.
 
 On a real cluster the same builder works with ``--master yarn`` etc. via
-spark-submit; nothing here is local-only except the driver-memory default.
+spark-submit; nothing here is local-only except the defaults for width
+and driver memory, which follow the host: every core this process may run
+on, and a quarter of physical memory for the driver heap. The
+``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM`` environment variables
+override them for a deployment.
 """
 
 from __future__ import annotations
@@ -11,13 +15,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """local[N] width: ``SPARK_GRAFT_CPUS``, else the cores this process
+    may run on."""
+    return int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
+
+
+def default_driver_heap_mb() -> int:
+    """Driver heap: a quarter of MemTotal, clamped to [1 GiB, 8 GiB]. The
+    JVM heap must stay well below physical memory, which also holds the
+    Python driver, the Python workers and the page cache — a heap sized
+    past RAM grows until the kernel's OOM killer ends the JVM."""
+    with open("/proc/meminfo") as f:
+        mem_kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    return min(8192, max(1024, mem_kb // 1024 // 4))
+
+
 def get_spark(
     master: str | None = None,
     app_name: str = "splade_spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or f"local[{default_cpus()}]"
     if shuffle_partitions is None:
         # match core count in local mode; a cluster deployment would size
         # this to ~2-3x total executor cores (or rely on AQE coalescing)
@@ -32,7 +55,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM")
+                or f"{default_driver_heap_mb()}m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Throughput GC: G1's concurrent cycles contend with mutator threads

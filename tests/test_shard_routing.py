@@ -77,8 +77,9 @@ def test_routing_visits_all_when_needed(served):
 
 def test_routing_bound_rank_safe_under_f32_rounding(served):
     """Randomized ulp stress: the broker bound must dominate every doc
-    score on its shard (ADVICE r4 — bound is now a float64 sum of f32
-    products, mirroring _wand_topk, with no final f32 downcast)."""
+    score on its shard. The bound mirrors _wand_topk: a float64 sum of
+    f32 products, downcast to f32 before the strict theta compare (see
+    the next test for why the downcast is needed)."""
     import numpy as np
 
     broker, single = served

@@ -1,8 +1,11 @@
 """Served web queries (WebQueryServer) are rank-identical to the
 distributed composite plane (positional.retrieve_web)."""
 
+import random
+
 import pytest
 
+from splade_spark.functions.tokenize import tokenize_py
 from splade_spark.operators.indexing import build_index
 from splade_spark.operators.positional import (
     positional_postings,
@@ -99,6 +102,31 @@ def test_sharded_web_matches_single(spark, served):
     # OOV query touches no shard at all under routing
     broker.search('"hash join" nosuchtokzz', k=10, route=True)
     assert broker.last_shards_visited == 0
+    # seeded AND-routing stress: 1-4 bare tokens from the index vocabulary
+    # (repeats allowed; every other query draws them from one doc, so the
+    # AND holds somewhere), some with a quoted 2-token phrase taken from a
+    # doc; small k makes the theta cut bite, and so do 6 shards over 8 docs
+    # (bounds nearly exact)
+    fine = ShardedWebServer(idx, rows, n_shards=6)
+    rng = random.Random(11)
+    vocab = sorted(ws.srv.term_info)
+    doc_toks = [tokenize_py(t, ws.srv.max_tokens) for _, t in DOCS]
+    doc_toks = [t for t in doc_toks if len(t) >= 2]
+    for trial in range(100):
+        pool = rng.choice(doc_toks) if trial % 2 else vocab
+        terms = [rng.choice(pool) for _ in range(rng.randint(1, 4))]
+        if trial % 3 == 0:
+            toks = rng.choice(doc_toks)
+            i = rng.randrange(len(toks) - 1)
+            terms.insert(rng.randint(0, len(terms)),
+                         f'"{toks[i]} {toks[i + 1]}"')
+        raw = " ".join(terms)
+        k = rng.choice((1, 2, 10))
+        want = ws.search(raw, k=k)
+        for b in (broker, fine):
+            routed = b.search(raw, k=k, route=True)
+            full = b.search(raw, k=k, route=False)
+            assert routed == full == want, (trial, raw, k, len(b.nodes))
 
 
 def test_sharded_web_from_saved_matches_single(spark, served, tmp_path):
