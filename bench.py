@@ -13,7 +13,9 @@ synthetic corpus (fixtures.gen_pages — Zipf skewed, FIXTURES.md §1):
     against the pre-built, cached index
 
 Without ``SPARK_GRAFT_CPUS`` the width is every core this process may run
-on (session.default_cpus).
+on (session.default_cpus). The line also carries the host it ran on
+(``nproc``, ``mem_total_mb``) and the share of CPU time stolen by the
+hypervisor over the whole run (``steal_pct``), read by perfbench/host.py.
 
 Scaling-efficiency evidence (local[8] vs local[32]) lives in
 scripts/scaling_bench.py → BENCH.md; this file stays single-master because
@@ -68,6 +70,7 @@ def main() -> None:
     bench_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "100000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
+    from perfbench import host
     from splade_spark.config import DEFAULT
     from splade_spark.entry_queries import REGISTRY
     from splade_spark.fixtures import gen_pages, gen_queries
@@ -75,6 +78,7 @@ def main() -> None:
     from splade_spark.operators.query import retrieve
     from splade_spark.session import default_cpus, get_spark, warm_python_workers
 
+    steal0, _, total0 = host.cpu_ticks()
     cpus = default_cpus()
     spark = get_spark(master=f"local[{cpus}]")
     spark.range(10_000).selectExpr("sum(id)").collect()  # JVM warmup
@@ -197,6 +201,7 @@ def main() -> None:
         wsrv.search(q, k=DEFAULT.top_k)
         web_ms.append((time.perf_counter() - t0) * 1000.0)
     web_p50 = statistics.median(web_ms)
+    steal1, _, total1 = host.cpu_ticks()
 
     out = {
         "metric": "headline_suite_wall",
@@ -218,6 +223,11 @@ def main() -> None:
         "webq_p50_ms": round(web_p50, 2),
         "webq_pos_load_sec": round(web_load_sec, 3),
         "cpus": int(cpus),
+        "nproc": len(os.sched_getaffinity(0)),
+        "mem_total_mb": round(host.meminfo_mb()["MemTotal"]),
+        "steal_pct": round(
+            100.0 * (steal1 - steal0) / max(1, total1 - total0), 2
+        ),
     }
     spark.stop()
     print(json.dumps(out))

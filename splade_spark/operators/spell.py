@@ -109,8 +109,9 @@ def prefix_suggestions(
 
     The serving analogue of a search box's completion dropdown. The
     prefix batch is tiny by contract and broadcasts; the dictionary side
-    is a single ``startswith`` semi-filter — no explode, no gram table,
-    one window over (prefix)-partitioned candidates. A fleet would back
+    is hash-joined on the first character, with ``startswith`` as the
+    residual filter — no explode, no gram table, one window over
+    (prefix)-partitioned candidates. A fleet would back
     this with a sorted term file per shard (the dictionary IS already
     sorted by term_id = term rank); here the declarative filter lets
     Catalyst prune the dictionary scan to the two needed columns.
@@ -123,9 +124,13 @@ def prefix_suggestions(
     p = prefixes.select(
         F.col(prefix_col).cast("string").alias("prefix")
     ).filter(F.col("prefix") != "").distinct()
+    # the first-character equality is implied by startswith (prefixes are
+    # non-empty) and gives the planner an equi-join key: a broadcast hash
+    # join with startswith as its residual, not a nested-loop join
     cand = F.broadcast(p).join(
         term_dict.select("term", "df"),
-        F.col("term").startswith(F.col("prefix")),
+        (F.substring("term", 1, 1) == F.substring("prefix", 1, 1))
+        & F.col("term").startswith(F.col("prefix")),
     )
     w = Window.partitionBy("prefix").orderBy(F.desc("df"), F.asc("term"))
     return (

@@ -22,10 +22,11 @@ Scale notes: the positional store is the memory analogue of the saved
 layout (positional.save_positional) — load only this shard's doc range,
 and optionally only a query-vocabulary subset (`terms=`), which at
 serving time is the live query stream's vocabulary, not the corpus's.
-Phrase matching intersects shifted position arrays (NumPy
-``intersect1d`` over sorted unique ints) starting from the rarest slot,
-so cost tracks the phrase's own postings exactly like the distributed
-matcher.
+Each term's positions are one sorted int64 array of packed
+``doc << shift | pos`` keys, so a phrase is matched by one whole-array
+intersect per extra slot (that slot's keys shifted back by its offset)
+— the distributed matcher's shifted-position join, with no Python loop
+over docs or candidates.
 
 Score parity: products f32, accumulation f64, final score f32 — the
 engine's A1 contract — and the (score desc, doc_idx asc) tie rule, so
@@ -37,8 +38,10 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 from dataclasses import replace
+from itertools import chain
 
 import numpy as np
+import pandas as pd
 
 from ..config import DEFAULT
 from ..functions.codec import decode_block, varint_decode
@@ -49,10 +52,39 @@ from .sharding import ShardedServer
 
 
 class PositionalStore:
-    """Warm positional lists: term → {doc_id: ascending int64 positions}."""
+    """Warm positional lists in packed form.
 
-    def __init__(self, by_term: dict[str, dict[str, np.ndarray]]):
-        self.by_term = by_term
+    The store numbers its own docs: ``doc_ids`` is sorted, and a doc's
+    number is its index there. ``keys`` maps each term to one sorted,
+    unique int64 array of ``doc << shift | pos``. ``shift`` is the bit
+    length of the largest stored position, so a position never reaches
+    the doc bits; and a key is shifted back by a slot offset ``off`` only
+    if its position is at least ``off``, so no subtraction borrows from
+    the doc bits and aliases a doc into its neighbour."""
+
+    def __init__(self, doc_ids: np.ndarray, shift: int,
+                 keys: dict[str, np.ndarray]):
+        self.doc_ids = doc_ids
+        self.shift = shift
+        self.keys = keys
+
+    @classmethod
+    def _pack(cls, terms, docs, lengths, positions) -> "PositionalStore":
+        """One row per (term, doc): ``terms[i]`` and ``docs[i]`` name row
+        i, whose strictly ascending positions are the next ``lengths[i]``
+        values of the concatenated int64 ``positions``."""
+        doc, doc_ids = pd.factorize(docs, sort=True)
+        shift = max(1, int(positions.max(initial=0)).bit_length())
+        keys = np.repeat(doc.astype(np.int64), lengths) << shift | positions
+        term, vocab = pd.factorize(terms, sort=True)
+        term = np.repeat(term, lengths)
+        order = np.lexsort((keys, term))
+        bounds = np.searchsorted(term[order], np.arange(vocab.size + 1))
+        keys = keys[order]
+        return cls(doc_ids, shift, {
+            t: keys[lo:hi]
+            for t, lo, hi in zip(vocab.tolist(), bounds[:-1], bounds[1:])
+        })
 
     @classmethod
     def from_saved(
@@ -61,7 +93,11 @@ class PositionalStore:
         """Load a saved positional layout (positional.save_positional:
         term-partitioned parquet, delta+varint position bytes) via Arrow.
         ``terms`` prunes to a vocabulary — the serving fleet loads only
-        the query stream's terms for its own doc range."""
+        the query stream's terms for its own doc range. All rows decode
+        in one ``varint_decode`` over the column's value bytes; a row's
+        value count is the number of terminal (high bit clear) bytes in
+        its byte range, and a running sum restarted at each row turns
+        its deltas back into positions."""
         import pyarrow.dataset as ds
 
         dataset = ds.dataset(pos_dir, format="parquet")
@@ -71,67 +107,77 @@ class PositionalStore:
         tbl = dataset.to_table(
             columns=["term", "doc_id", "positions"], filter=flt
         )
-        by_term: dict[str, dict[str, np.ndarray]] = {}
-        for t, d, p in zip(
-            tbl.column("term").to_pylist(),
-            tbl.column("doc_id").to_pylist(),
-            tbl.column("positions").to_pylist(),
-        ):
-            by_term.setdefault(t, {})[d] = varint_decode(bytes(p)).astype(
-                np.int64
-            ).cumsum()
-        return cls(by_term)
+        col = tbl.column("positions").combine_chunks()
+        _, offs, data = col.buffers()
+        offs = np.frombuffer(offs, np.int32)[col.offset:][:len(col) + 1]
+        b = np.frombuffer(data or b"", np.uint8)[offs[0]:offs[-1]]
+        lengths = np.diff(np.r_[0, np.cumsum(b < 0x80)][offs - offs[0]])
+        total = np.r_[0, np.cumsum(varint_decode(b).astype(np.int64))]
+        row_start = np.cumsum(lengths) - lengths
+        return cls._pack(
+            tbl.column("term").to_numpy(),
+            tbl.column("doc_id").to_numpy(),
+            lengths,
+            total[1:] - np.repeat(total[row_start], lengths),
+        )
 
     @classmethod
     def from_rows(
         cls, rows: "Iterable[tuple[str, str, list[int]]]"
     ) -> "PositionalStore":
-        """(term, doc_id, ascending positions) rows — the test/demo path
-        (collect a positional_postings DataFrame)."""
-        by_term: dict[str, dict[str, np.ndarray]] = {}
-        for t, d, ps in rows:
-            by_term.setdefault(t, {})[d] = np.asarray(ps, dtype=np.int64)
-        return cls(by_term)
+        """(term, doc_id, strictly ascending positions) rows, one per
+        (term, doc) — the test/demo path (collect a positional_postings
+        DataFrame)."""
+        rows = list(rows)
+        ps = [r[2] for r in rows]
+        lengths = np.fromiter(map(len, ps), np.int64, len(ps))
+        return cls._pack(
+            np.array([r[0] for r in rows], dtype=object),
+            np.array([r[1] for r in rows], dtype=object),
+            lengths,
+            np.fromiter(chain.from_iterable(ps), np.int64, lengths.sum()),
+        )
 
     @classmethod
     def from_positional(cls, positional) -> "PositionalStore":
         """Load directly from a positional_postings DataFrame via ONE
-        Arrow transfer (``toPandas`` under
-        spark.sql.execution.arrow.pyspark.enabled) — the warm-load path
-        when no saved layout exists yet. Arrow hands positions over as
-        numpy arrays already; Row-object collection measured ~5x slower
-        at 10^6 (term, doc) rows."""
-        pdf = positional.select("term", "doc_id", "positions").toPandas()
-        return cls.from_rows(
-            zip(
-                pdf["term"].tolist(),
-                pdf["doc_id"].tolist(),
-                pdf["positions"].tolist(),
-            )
+        Arrow transfer (``toArrow``) — the warm-load path when no saved
+        layout exists yet. The position lists arrive as one flat value
+        array plus per-row lengths, which is what the packer takes."""
+        tbl = positional.select("term", "doc_id", "positions").toArrow()
+        ps = tbl.column("positions").combine_chunks()
+        return cls._pack(
+            tbl.column("term").to_numpy(),
+            tbl.column("doc_id").to_numpy(),
+            np.diff(ps.offsets.to_numpy()).astype(np.int64),
+            ps.flatten().to_numpy().astype(np.int64),
         )
 
-    def docs_with_phrase(self, ptoks: list[str]) -> set[str]:
-        """doc_ids containing the exact phrase. Intersection walks start
-        from the rarest slot's postings; shifted-position intersects are
-        linear in the touched lists."""
-        maps = [self.by_term.get(t) for t in ptoks]
-        if not maps or any(m is None for m in maps):
-            return set()
-        seed = min(range(len(maps)), key=lambda i: len(maps[i]))
-        out: set[str] = set()
-        for doc in maps[seed]:
-            if any(doc not in m for m in maps):
-                continue
-            starts = maps[0][doc]
-            for off in range(1, len(maps)):
-                starts = np.intersect1d(
-                    starts, maps[off][doc] - off, assume_unique=True
-                )
-                if starts.size == 0:
-                    break
-            if starts.size:
-                out.add(doc)
-        return out
+    def restrict(self, doc_ids: Iterable[str | None]) -> "PositionalStore":
+        """The slice holding only ``doc_ids`` (one node's doc range),
+        under the same doc numbering."""
+        keep = np.isin(self.doc_ids, [d for d in doc_ids if d is not None])
+        return PositionalStore(self.doc_ids, self.shift, {
+            t: k[keep[k >> self.shift]] for t, k in self.keys.items()
+        })
+
+    def docs_with_phrase(self, ptoks: list[str]) -> np.ndarray:
+        """Store doc numbers (ascending, unique) containing the exact
+        phrase: the first slot's keys are the candidate starts, and each
+        later slot ``off`` keeps the starts found among its own keys
+        shifted back by ``off``."""
+        lists = [self.keys.get(t) for t in ptoks]
+        if not lists or any(k is None for k in lists):
+            return np.empty(0, dtype=np.int64)
+        mask = (1 << self.shift) - 1
+        starts = lists[0]
+        for off, k in enumerate(lists[1:], 1):
+            starts = np.intersect1d(
+                starts, k[(k & mask) >= off] - off, assume_unique=True
+            )
+            if starts.size == 0:
+                break
+        return np.unique(starts >> self.shift)
 
 
 class WebQueryServer:
@@ -148,6 +194,11 @@ class WebQueryServer:
                 "cap) — pruned postings make the all-terms test "
                 "undecidable"
             )
+        node = {d: i for i, d in enumerate(srv.doc_ids, srv.doc_base)}
+        # store doc number -> this node's global doc_idx (-1: not here)
+        self.store_doc_idx = np.array(
+            [node.get(d, -1) for d in store.doc_ids], dtype=np.int64
+        )
 
     def search(self, raw: str, k: int = 10) -> list[tuple[str, float]]:
         """'"exact phrase" bare terms' → [(doc_id, score f32)] — docs
@@ -203,25 +254,11 @@ class WebQueryServer:
         # pruned only under the SAME truncation rule the distributed
         # retrieve_web(cfg=...) path applies, keeping served/distributed
         # rank identity for non-default configs.
-        phrases = parse_web_query(
+        for ph in parse_web_query(
             raw, replace(DEFAULT, max_tokens=srv.max_tokens)
-        )
-        if phrases:
-            allowed: set[str] | None = None
-            for ph in phrases:
-                hit = self.store.docs_with_phrase(
-                    tokenize_py(ph, srv.max_tokens)
-                )
-                allowed = hit if allowed is None else (allowed & hit)
-                if not allowed:
-                    return empty
-            keep = np.array(
-                [
-                    srv.doc_ids[int(d) - srv.doc_base] in allowed
-                    for d in cand
-                ],
-                dtype=bool,
-            )
+        ):
+            hit = self.store.docs_with_phrase(tokenize_py(ph, srv.max_tokens))
+            keep = np.isin(cand, self.store_doc_idx[hit])
             cand, csum = cand[keep], csum[keep]
             if cand.size == 0:
                 return empty
@@ -244,10 +281,7 @@ class ShardedWebServer(ShardedServer):
 
     def __init__(self, index, positional_rows, n_shards: int = 4):
         super().__init__(index, n_shards=n_shards)
-        self._attach_positional(
-            (t, d, np.asarray(ps, dtype=np.int64))
-            for t, d, ps in positional_rows
-        )
+        self._attach_positional(PositionalStore.from_rows(positional_rows))
 
     @classmethod
     def from_saved(
@@ -263,28 +297,13 @@ class ShardedWebServer(ShardedServer):
         node's doc set; on a fleet each node instead loads only its own
         doc range's positional files next to its index shard."""
         self = super().from_saved(spark, index_dir)
-        store = PositionalStore.from_saved(pos_dir, terms=terms)
-        self._attach_positional(
-            (t, d, ps)
-            for t, m in store.by_term.items()
-            for d, ps in m.items()
-        )
+        self._attach_positional(PositionalStore.from_saved(pos_dir, terms))
         return self
 
-    def _attach_positional(self, rows) -> None:
-        by_doc_shard: dict[str, int] = {}
-        for si, srv in enumerate(self.servers):
-            for d in srv.doc_ids:
-                if d is not None:
-                    by_doc_shard[d] = si
-        slices: list[dict] = [dict() for _ in self.servers]
-        for t, d, ps in rows:
-            si = by_doc_shard.get(d)
-            if si is not None:
-                slices[si].setdefault(t, {})[d] = ps
+    def _attach_positional(self, store: PositionalStore) -> None:
         self.nodes = [
-            WebQueryServer(srv, PositionalStore(slc))
-            for srv, slc in zip(self.servers, slices)
+            WebQueryServer(srv, store.restrict(srv.doc_ids))
+            for srv in self.servers
         ]
 
     def search(

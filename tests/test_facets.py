@@ -67,3 +67,16 @@ def test_prefix_suggestions_rules(spark):
         ("hash", 1): ("hash", 30),
         ("hash", 2): ("hashes", 10),
     }
+
+
+def test_prefix_suggestions_plans_no_nested_loop_join(spark):
+    term_dict = spark.createDataFrame(
+        [("hash", 1, 30), ("hat", 2, 30), ("sort", 3, 5)],
+        "term string, term_id long, df long",
+    )
+    prefixes = spark.createDataFrame([("ha",), ("so",)], "prefix string")
+    out = prefix_suggestions(term_dict, prefixes, topn=2)
+    assert len(out.collect()) == 3
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "BroadcastHashJoin" in plan

@@ -52,20 +52,25 @@ def test_served_matches_distributed(spark, served):
             assert abs(gs - wscore) <= 1e-6 * max(1.0, abs(wscore)), qid
 
 
+def _store_rows(store):
+    """{(term, doc_id): ascending positions} unpacked from a store."""
+    mask = (1 << store.shift) - 1
+    out = {}
+    for t, k in store.keys.items():
+        for doc, pos in zip((k >> store.shift).tolist(), (k & mask).tolist()):
+            out.setdefault((t, store.doc_ids[doc]), []).append(pos)
+    return out
+
+
 def test_store_from_saved_matches_from_rows(spark, served, tmp_path):
     docs, idx, positional, ws = served
     out = str(tmp_path / "pos")
     save_positional(positional, out, n_partitions=3)
     loaded = PositionalStore.from_saved(out)
-    assert set(loaded.by_term) == set(ws.store.by_term)
-    for t, m in ws.store.by_term.items():
-        lm = loaded.by_term[t]
-        assert set(m) == set(lm)
-        for d in m:
-            assert list(m[d]) == list(lm[d])
+    assert _store_rows(loaded) == _store_rows(ws.store)
     # vocabulary-pruned load
     pruned = PositionalStore.from_saved(out, terms=["hash", "join"])
-    assert set(pruned.by_term) == {"hash", "join"}
+    assert set(pruned.keys) == {"hash", "join"}
 
 
 def test_server_rejects_pruned_index(spark):
@@ -190,10 +195,103 @@ def test_served_matches_distributed_nondefault_max_tokens(spark):
 
 def test_store_from_positional_matches_from_rows(spark, served):
     docs, idx, positional, ws = served
-    a = ws.store
-    b = PositionalStore.from_positional(positional)
-    assert set(a.by_term) == set(b.by_term)
-    for t, m in a.by_term.items():
-        assert set(m) == set(b.by_term[t])
-        for d, ps in m.items():
-            assert (ps == b.by_term[t][d]).all()
+    rows = {
+        (r["term"], r["doc_id"]): list(r["positions"])
+        for r in positional.collect()
+    }
+    assert _store_rows(ws.store) == rows
+    assert _store_rows(PositionalStore.from_positional(positional)) == rows
+
+
+def _brute_phrase(rows, ptoks):
+    """doc_ids holding ``ptoks`` at consecutive positions: a scan of the
+    (term, doc_id, positions) rows, the reference for docs_with_phrase."""
+    by_doc = {}
+    for t, d, ps in rows:
+        by_doc.setdefault(d, {})[t] = set(ps)
+    return sorted(
+        d for d, m in by_doc.items()
+        if any(
+            all(p + i in m.get(t, ()) for i, t in enumerate(ptoks))
+            for p in m.get(ptoks[0], ())
+        )
+    )
+
+
+def _served_phrase(store, ptoks):
+    return sorted(store.doc_ids[store.docs_with_phrase(ptoks)].tolist())
+
+
+def test_phrase_does_not_straddle_adjacent_docs():
+    # "x" ends d0 at the largest stored position, whose bit length sets
+    # the key shift; d1, next in store numbering, starts with "y"
+    rows = [("w", "d0", [1, 2, 3, 4, 5, 6]), ("x", "d0", [7]),
+            ("y", "d1", [1]), ("z", "d1", [2])]
+    store = PositionalStore.from_rows(rows)
+    assert store.shift == 3
+    for ptoks in (["x", "y"], ["x", "y", "z"], ["w", "x", "y"]):
+        assert _served_phrase(store, ptoks) == _brute_phrase(rows, ptoks)
+        assert _served_phrase(store, ptoks) == []
+    # 0-based positions: "y" at 0 shifted back by 1 would land exactly on
+    # the key of d0's last position without the position >= offset rule
+    rows0 = [("x", "d0", [7]), ("y", "d1", [0]), ("x", "d1", [5])]
+    assert _served_phrase(PositionalStore.from_rows(rows0), ["x", "y"]) == []
+
+
+def test_phrase_positions_beyond_default_max_tokens():
+    from splade_spark.config import DEFAULT
+
+    big = DEFAULT.max_tokens
+    rows = [
+        ("a", "d0", [1, big + 5, 4 * big]), ("b", "d0", [big + 6]),
+        ("a", "d1", [2 * big]), ("b", "d1", [2 * big + 1, 9 * big]),
+        ("b", "d2", [1]), ("a", "d2", [9 * big]),
+    ]
+    store = PositionalStore.from_rows(rows)
+    assert (1 << store.shift) > 9 * big
+    for ptoks in (["a", "b"], ["b", "a"], ["a"], ["b", "b"]):
+        assert _served_phrase(store, ptoks) == _brute_phrase(rows, ptoks)
+    assert _served_phrase(store, ["a", "b"]) == ["d0", "d1"]
+
+
+def test_phrase_repeated_and_three_token():
+    rows = [
+        ("a", "d0", [1, 2, 4]), ("b", "d0", [3, 5]),
+        ("a", "d1", [1, 3]), ("b", "d1", [2]),
+        ("a", "d2", [2]), ("b", "d2", [1, 3]), ("c", "d2", [4]),
+    ]
+    store = PositionalStore.from_rows(rows)
+    cases = {
+        ("a", "a"): ["d0"],
+        ("a", "b", "a"): ["d0", "d1"],
+        ("b", "a", "b"): ["d0", "d2"],
+        ("a", "b", "c"): ["d2"],
+        ("a", "a", "a"): [],
+    }
+    for ptoks, want in cases.items():
+        assert _served_phrase(store, list(ptoks)) == want, ptoks
+        assert _brute_phrase(rows, list(ptoks)) == want, ptoks
+
+
+def test_phrase_matches_brute_force_on_random_corpus():
+    rng = random.Random(7)
+    vocab = ["a", "b", "c", "d", "e"]
+    texts = {
+        f"r{i:03d}": [rng.choice(vocab) for _ in range(rng.randint(0, 40))]
+        for i in range(200)
+    }
+    texts["r199"] = ["a", "b"] * 300  # one long doc sets a wide shift
+    rows = {}
+    for d, toks in texts.items():
+        for p, t in enumerate(toks, 1):
+            rows.setdefault((t, d), []).append(p)
+    rows = [(t, d, ps) for (t, d), ps in rows.items()]
+    rng.shuffle(rows)
+    store = PositionalStore.from_rows(rows)
+    half = {d for d in texts if int(d[1:]) % 2}
+    node = store.restrict(sorted(half) + [None])
+    node_rows = [r for r in rows if r[1] in half]
+    for _ in range(300):
+        ptoks = [rng.choice(vocab + ["zz"]) for _ in range(rng.randint(1, 4))]
+        assert _served_phrase(store, ptoks) == _brute_phrase(rows, ptoks)
+        assert _served_phrase(node, ptoks) == _brute_phrase(node_rows, ptoks)
