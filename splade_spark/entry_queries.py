@@ -2677,7 +2677,8 @@ WITH pages AS (
 SELECT lower('h' || CAST(doc_id % 11 AS STRING) || '.example.org') AS host,
        count(*) AS n_docs,
        sum(length(text)) AS total_chars,
-       CAST(round(avg(length(text)) * 1000) AS BIGINT) AS avg_chars_milli,
+       CAST((2000 * sum(length(text)) + count(*)) // (2 * count(*))
+            AS BIGINT) AS avg_chars_milli,
        count(DISTINCT lang) AS n_langs
 FROM pages
 GROUP BY 1

@@ -39,6 +39,7 @@ import json
 import math
 import os
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
@@ -122,15 +123,20 @@ def doc_term_frequencies(
     return tf, doc_len
 
 
+def _doc_totals(doc_len: DataFrame) -> tuple[int, int]:
+    """(rows, Σ dl) of a frame with a ``dl`` column, in one job."""
+    row = doc_len.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tt")
+    ).collect()[0]
+    return int(row["n"]), int(row["tt"] or 0)
+
+
 def _corpus_stats(doc_len: DataFrame) -> tuple[int, float, int]:
     """One stats job: (n_docs, avgdl, total_tokens). Raises on empty."""
-    row = doc_len.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl"),
-        F.sum("dl").alias("total_tokens"),
-    ).collect()[0]
-    if row["n_docs"] == 0 or row["avgdl"] is None:
+    n_docs, total_tokens = _doc_totals(doc_len)
+    if n_docs == 0:
         raise ValueError("build_index: corpus is empty — nothing to index")
-    return int(row["n_docs"]), float(row["avgdl"]), int(row["total_tokens"])
+    return n_docs, total_tokens / n_docs, total_tokens
 
 
 def _number_docs_with_stats(
@@ -167,44 +173,6 @@ def _number_docs_with_stats(
     return numbered, (n_docs, avgdl, total_tokens)
 
 
-def _tf_from_tokens_arrow(numbered: DataFrame) -> DataFrame:
-    """(doc_idx, dl, tokens) → (doc_idx, dl, term, tf) via Arrow-batched
-    pandas — NO JVM explode, NO (doc, term) shuffle.
-
-    One input row is one whole document, so term frequencies are exact
-    per batch without any cross-row aggregation: the classic
-    explode+groupBy plan (A5) shuffles ~1.5 rows per token, while this
-    emits finished tf rows in a single narrow pass. It also sidesteps a
-    measured single-JVM pathology: exploding O(100M) short strings
-    anti-scales past ~8 local threads (allocation/GC contention), whereas
-    Python workers are separate processes and scale with cores. On a real
-    multi-executor cluster both effects still favor this plan — it is
-    strictly less work and less shuffle."""
-
-    def tf_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            toks = pdf["tokens"]
-            lens = np.fromiter((len(t) for t in toks), dtype=np.int64, count=len(toks))
-            if int(lens.sum()) == 0:
-                continue
-            flat = np.concatenate([np.asarray(t, dtype=object) for t in toks])
-            g = pd.DataFrame(
-                {
-                    "doc_idx": np.repeat(pdf["doc_idx"].to_numpy(), lens),
-                    "dl": np.repeat(pdf["dl"].to_numpy(), lens),
-                    "term": flat,
-                }
-            ).groupby(["doc_idx", "dl", "term"], sort=False, as_index=False)
-            out = g.size().rename(columns={"size": "tf"})
-            yield out[["doc_idx", "dl", "term", "tf"]]
-
-    return numbered.select("doc_idx", "dl", "tokens").mapInPandas(
-        tf_batches, schema="doc_idx long, dl int, term string, tf int"
-    )
-
-
 def build_index(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -230,26 +198,33 @@ def build_index(
         tf, doc_len = doc_term_frequencies(docs, id_col, text_col, cfg)
         return index_from_tf(tf, doc_len, cfg=cfg, weighted_terms=weighted_terms)
 
-    # size the build parallelism to the corpus: ceil(n_docs /
-    # docs_per_partition) partitions, capped by the cluster-side
-    # index_partitions knob — a 5k-doc build runs 4-wide instead of paying
-    # 32 tasks of scheduling overhead per stage, while web-scale corpora
-    # always hit the cap. The sizing count is metadata-cheap on a bare
-    # parquet scan (row-group stats) but a full pass on a filtered or
-    # Iceberg source — callers with such inputs pass ``n_docs_hint``
-    # (any upper-bound estimate works; it only picks a task width) to
-    # skip the pass entirely. The shuffle-partition conf is scoped to the
-    # same width for the build's own stages.
+    # The sizing count is metadata-cheap on a bare parquet scan (row-group
+    # stats) but a full pass on a filtered or Iceberg source — callers with
+    # such inputs pass ``n_docs_hint`` (any upper-bound estimate works; it
+    # only picks a task width) to skip the pass entirely.
     n_est = docs.count() if n_docs_hint is None else int(n_docs_hint)
+    with _build_width(docs.sparkSession, cfg, n_est) as n_part:
+        return _build_index_classic(docs, id_col, text_col, cfg, n_part)
+
+
+@contextmanager
+def _build_width(spark: SparkSession, cfg: EngineConfig, n_docs: int):
+    """Yield the build's task width for an ``n_docs`` corpus, with
+    ``spark.sql.shuffle.partitions`` scoped to it for the build's stages.
+
+    Width = ceil(n_docs / docs_per_partition), at least 4, capped by the
+    cluster-side ``index_partitions`` knob: a 5k-doc build runs 4-wide
+    instead of paying 32 tasks of scheduling overhead per stage, while
+    web-scale corpora always hit the cap. Shared by ``build_index`` and
+    the write-path fold (merge.py)."""
     n_part = max(4, min(
         int(cfg.index_partitions),
-        -(-n_est // max(1, int(cfg.docs_per_partition))),
+        -(-int(n_docs) // max(1, int(cfg.docs_per_partition))),
     ))
-    spark = docs.sparkSession
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
     try:
-        return _build_index_classic(docs, id_col, text_col, cfg, n_part)
+        yield n_part
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
 
@@ -274,47 +249,12 @@ def _build_index_classic(
     # so the wide-cache plan stands.
     numbered, stats = _number_docs_with_stats(toks, n_part)
     doc_dim = numbered.select("doc_idx", "doc_id", "dl").persist()
-    # tf backend (all three measured on this sandbox at 1M docs, local[8],
-    # ADJACENT runs in the same host period — this VM's throughput swings
-    # >2x between periods, so only adjacent comparisons are meaningful):
-    # - "jvm" (default): explode+groupBy(doc,term) — partial agg, one wide
-    #   shuffle keyed by (doc_idx, term). 387s adjacent / 130-145s best
-    #   period. The shuffle is ~1.7 GB after map-side combine; wins.
-    # - "expr": per-doc tf as a pure Column expression (array_distinct +
-    #   filter-count per token array) — each doc is ONE row, so tf needs
-    #   NO shuffle at all. Measured 574s adjacent (1.5x slower than jvm):
-    #   the O(distinct x tokens) string comparisons per doc (~120x256 here)
-    #   cost more than the shuffle they remove. Kept as the zero-shuffle
-    #   option for clusters where shuffle IO, not CPU, binds.
-    # - "arrow": exact per-doc tf inside an Arrow-batched pandas stage; no
-    #   shuffle, but Python workers contend with the JVM at high local
-    #   thread counts (162s@8 vs 256s@32 in the round-1 period).
-    backend = os.environ.get("SPARK_GRAFT_TF_BACKEND", "jvm")
-    if backend == "jvm":
-        tf_idx = (
-            numbered.select("doc_idx", "dl", F.explode("tokens").alias("term"))
-            .groupBy("doc_idx", "dl", "term")
-            .agg(F.count(F.lit(1)).cast("int").alias("tf"))
-            .persist()
-        )
-    elif backend == "arrow":
-        tf_idx = _tf_from_tokens_arrow(numbered).persist()
-    else:
-        tf_structs = F.transform(
-            F.array_distinct("tokens"),
-            lambda t: F.struct(
-                t.alias("term"),
-                F.size(F.filter("tokens", lambda x: x == t)).cast("int").alias("tf"),
-            ),
-        )
-        tf_idx = (
-            numbered.select(
-                "doc_idx", "dl", F.explode(tf_structs).alias("s")
-            )
-            .select("doc_idx", "dl", F.col("s.term").alias("term"),
-                    F.col("s.tf").alias("tf"))
-            .persist()
-        )
+    tf_idx = (
+        numbered.select("doc_idx", "dl", F.explode("tokens").alias("term"))
+        .groupBy("doc_idx", "dl", "term")
+        .agg(F.count(F.lit(1)).cast("int").alias("tf"))
+        .persist()
+    )
     idx = _finish_classic(tf_idx, doc_dim, stats, cfg, n_part)
     tf_idx.unpersist()
     return idx

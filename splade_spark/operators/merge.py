@@ -1,29 +1,35 @@
-"""Incremental index fold: merge a new doc batch into an existing index
-WITHOUT re-processing the old corpus.
+"""Write-path fold: append to, tombstone and upsert a built index
+WITHOUT re-tokenizing the old corpus.
 
 The reference rebuilds its index from all encoded shards
 (/root/reference/script/index.py:104-123); this engine's streaming path
 did the same (stream_index.py). At 10^12 docs a rebuild per micro-batch
-re-pays the three dominant costs for the WHOLE corpus: tokenization
-(CPU), the doc-numbering range sort (corpus-wide shuffle), and the tf
-aggregation (corpus-wide shuffle). The fold here pays none of them for
-existing docs:
+re-pays tokenization (CPU) and the doc-numbering range sort on doc_id
+strings (corpus-wide shuffle) for the WHOLE corpus. All four public
+write verbs are thin callers of ONE private fold, ``_fold(index,
+drop_ids, tf, doc_len)``, which pays neither for existing docs:
 
-- old ``doc_dim`` rows are reused verbatim (new docs are appended after
-  ``n_docs`` — the segment-append numbering every incremental engine
-  uses);
 - old term frequencies are RECONSTRUCTED from the stored blocks instead
-  of re-tokenizing: BM25 impact w = idf·tf·(k1+1)/(tf + K) with
-  K = k1·(1−b+b·dl/avgdl) is strictly monotone in tf, so
-  tf = w′·K/(k1+1−w′) with w′ = w/idf inverts it exactly; tf is an
-  integer, so rounding absorbs the float32 storage error (safe for
-  tf ≲ 4000 — the ``max_tokens`` contract caps tf at 256);
-- only then do global statistics (n_docs, avgdl, df → idf) update and the
-  block build rerun — the irreducible work, because exact BM25 semantics
-  bake corpus statistics into every stored weight. (The alternative —
-  store raw tf and apply idf query-side — makes folds nearly free but
-  changes the reference's impact-ordered static-weight layout; this
-  engine keeps reference semantics and makes the fold exact instead.)
+  of re-tokenizing, in one pass that also drops tombstoned docs: BM25
+  impact w = idf·tf·(k1+1)/(tf + K) with K = k1·(1−b+b·dl/avgdl) is
+  strictly monotone in tf, so tf = w′·K/(k1+1−w′) with w′ = w/idf
+  inverts it exactly; tf is an integer, so rounding absorbs the float32
+  storage error (safe for tf ≲ 4000 — the ``max_tokens`` contract caps
+  tf at 256);
+- kept docs keep their ``doc_dim`` rows verbatim when nothing was
+  dropped; otherwise they renumber by the rank of their OLD doc_idx (an
+  8-byte long, not a URL string) — build numbering is rank of doc_id
+  ascending and rank order survives subset removal, so this reproduces
+  a rebuild's numbering of the kept docs;
+- batch docs are appended after the kept ones, numbered ``n_kept +``
+  rank of doc_id within the batch (the segment-append numbering every
+  incremental engine uses);
+- the statistics (n_docs, avgdl, df → idf) update and the block build
+  runs ONCE — the irreducible work, because exact BM25 semantics bake
+  corpus statistics into every stored weight. (The alternative — store
+  raw tf and apply idf query-side — makes folds nearly free but changes
+  the reference's impact-ordered static-weight layout; this engine
+  keeps reference semantics and makes the fold exact instead.)
 
 Exactness: ``merge_index_with_docs(build(A), B)`` equals
 ``build(A ∪ B)`` bit-for-bit — same doc_idx assignment (when B's doc_ids
@@ -31,8 +37,11 @@ sort after A's in string order, the append case; otherwise scores are
 still identical and only the doc_idx tie-break can reorder exact score
 ties), same term_id assignment (the dictionary pass reruns over the
 merged vocabulary), same weights (same formula, same reconstructed
-inputs). Oracle-gated by the ``bm25_topk_merged`` entry against the
-full-corpus DuckDB BM25 SQL.
+inputs). ``apply_tombstones(build(A), D)`` equals ``build(A \\ D)``
+bit-for-bit, and ``upsert_docs(idx, B)`` equals
+``merge_index_with_docs(apply_tombstones(idx, ids(B)), B)`` bit-for-bit.
+Oracle-gated by the ``bm25_topk_merged`` and ``bm25_topk_deduped``
+entries against full-corpus DuckDB BM25 SQL.
 
 Preconditions (checked): the index must retain its full postings —
 reconstruction can only see what the build kept, so a strict
@@ -52,6 +61,8 @@ from ..functions.codec import decode_block
 from .ids import assign_global_ids
 from .indexing import (
     InvertedIndex,
+    _build_width,
+    _doc_totals,
     _finish_classic,
     doc_term_frequencies,
 )
@@ -160,6 +171,90 @@ def _check_invertible(meta: dict) -> None:
         )
 
 
+def _fold(
+    index: InvertedIndex,
+    drop: DataFrame | None,
+    tf: DataFrame | None,
+    doc_len: DataFrame | None,
+) -> InvertedIndex:
+    """The one write-path fold: remove the docs whose ``doc_id`` is in
+    ``drop``, append the tokenized batch ``tf`` (doc_id, term, tf) /
+    ``doc_len`` (doc_id, dl), and rebuild once (see module docstring).
+    Either side may be None. Batch ids must not collide with kept docs:
+    an upsert drops them first, an append refuses them. Returns
+    ``index`` itself when nothing is dropped and nothing appended."""
+    meta = index.meta
+    _check_invertible(meta)
+    cfg = cfg_from_meta(meta)
+    n_old = int(meta["n_docs"])
+    n_kept, tt_kept = n_old, int(meta["total_tokens"])
+    n_new = tt_new = 0
+    dim = index.doc_dim.select("doc_idx", "doc_id", "dl")
+    if tf is not None:
+        doc_len = doc_len.persist()
+        n_new, tt_new = _doc_totals(doc_len)
+        if n_new == 0:
+            doc_len.unpersist()
+            raise ValueError("merge: batch is empty — nothing to fold")
+        if drop is None and doc_len.join(
+            dim.select("doc_id"), "doc_id", "left_semi"
+        ).limit(1).count():
+            doc_len.unpersist()
+            raise ValueError(
+                "merge: batch contains doc_ids already present in the "
+                "index — this fold appends documents, it does not upsert"
+            )
+    if drop is not None:
+        kept = dim.join(drop, "doc_id", "left_anti").persist()
+        n_kept, tt_kept = _doc_totals(kept)
+        if n_kept + n_new == 0:
+            kept.unpersist()
+            raise ValueError(
+                "apply_tombstones: drop list removes every document"
+            )
+        if n_kept == n_old:
+            kept.unpersist()
+            if tf is None:
+                return index
+
+    n_docs, tt = n_kept + n_new, tt_kept + tt_new
+    old_tf = reconstruct_tf(index)
+    with _build_width(index.postings.sparkSession, cfg, n_docs) as n_part:
+        if n_kept < n_old:
+            remap = assign_global_ids(
+                kept.withColumnRenamed("doc_idx", "_old_idx"),
+                key="_old_idx", id_col="doc_idx", num_partitions=n_part,
+            ).persist()  # materialized size lets AQE broadcast it below
+            dim = remap.select("doc_idx", "doc_id", "dl")
+            old_tf = (
+                old_tf.withColumnRenamed("doc_idx", "_old_idx")
+                .join(remap.select("_old_idx", "doc_idx"), "_old_idx")
+                .select("doc_idx", "dl", "term", "tf")
+            )
+        if tf is not None:
+            new_dim = assign_global_ids(
+                doc_len, key="doc_id", id_col="_bidx", num_partitions=n_part
+            ).select(
+                (F.col("_bidx") + F.lit(n_kept)).cast("long").alias("doc_idx"),
+                "doc_id", "dl",
+            )
+            dim = dim.unionByName(new_dim)
+            old_tf = old_tf.unionByName(
+                tf.join(new_dim, "doc_id").select("doc_idx", "dl", "term", "tf")
+            )
+        tf_all = old_tf.persist()
+        out = _finish_classic(
+            tf_all, dim.persist(), (n_docs, tt / n_docs, tt), cfg, n_part
+        )
+    tf_all.unpersist()
+    if n_kept < n_old:
+        kept.unpersist()
+        remap.unpersist()
+    if tf is not None:
+        doc_len.unpersist()
+    return out
+
+
 def merge_index_with_tf(
     index: InvertedIndex,
     tf: DataFrame,
@@ -168,65 +263,9 @@ def merge_index_with_tf(
     """Fold a tokenized micro-batch — ``tf`` (doc_id string, term, tf int)
     and ``doc_len`` (doc_id string, dl int) — into ``index``, returning
     the merged index. Equals a full rebuild over old ∪ batch (see module
-    docstring for the exactness contract and its preconditions)."""
-    meta = index.meta
-    _check_invertible(meta)
-    cfg = cfg_from_meta(meta)
-    spark = tf.sparkSession
-
-    n_old = int(meta["n_docs"])
-    tt_old = int(meta["total_tokens"])
-
-    doc_len = doc_len.persist()
-    brow = doc_len.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tt")
-    ).collect()[0]
-    n_new, tt_new = int(brow["n"]), int(brow["tt"] or 0)
-    if n_new == 0:
-        raise ValueError("merge: batch is empty — nothing to fold")
-    dup = (
-        doc_len.join(index.doc_dim.select("doc_id"), "doc_id", "left_semi")
-        .limit(1).count()
-    )
-    if dup:
-        raise ValueError(
-            "merge: batch contains doc_ids already present in the index — "
-            "this fold appends documents, it does not upsert"
-        )
-
-    stats = (n_old + n_new, (tt_old + tt_new) / (n_old + n_new),
-             tt_old + tt_new)
-    n_part = max(4, min(
-        int(cfg.index_partitions),
-        -(-stats[0] // max(1, int(cfg.docs_per_partition))),
-    ))
-
-    # segment-append numbering: batch ids ranked among themselves, offset
-    # past the existing corpus — old doc_idx (and old doc_dim rows) are
-    # reused untouched
-    new_dim = (
-        assign_global_ids(
-            doc_len, key="doc_id", id_col="_bidx", num_partitions=n_part
-        )
-        .withColumn("doc_idx", (F.col("_bidx") + F.lit(n_old)).cast("long"))
-        .select("doc_idx", "doc_id", "dl")
-    )
-    doc_dim = index.doc_dim.select("doc_idx", "doc_id", "dl").unionByName(
-        new_dim
-    ).persist()
-
-    new_tf = tf.join(new_dim, "doc_id").select("doc_idx", "dl", "term", "tf")
-    tf_all = reconstruct_tf(index).unionByName(new_tf).persist()
-
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-    try:
-        merged = _finish_classic(tf_all, doc_dim, stats, cfg, n_part)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    tf_all.unpersist()
-    doc_len.unpersist()
-    return merged
+    docstring for the exactness contract and its preconditions). Refuses
+    an empty batch and a batch with doc_ids already in the index."""
+    return _fold(index, None, tf, doc_len)
 
 
 def apply_tombstones(
@@ -244,20 +283,9 @@ def apply_tombstones(
     EVERY term and the length-normalization K for EVERY posting; exact
     BM25 semantics bake those corpus statistics into each stored impact,
     so no decode-only-touched-blocks shortcut exists for the weights.
-    What the tombstone fold skips vs a rebuild is the two costs that
-    dominate at corpus scale: re-tokenizing every surviving document
-    (CPU) and the corpus-wide doc_id STRING range-sort (shuffle):
-
-    - exact integer tf comes back from the stored impacts
-      (``reconstruct_tf`` — narrow block decode + two int-keyed
-      equi-joins, no tokenizer);
-    - kept docs renumber by ranking their OLD doc_idx (an 8-byte long):
-      build numbering is rank of doc_id ascending, and rank order is
-      preserved under subset removal, so ranking the kept old indexes
-      reproduces the rebuild's doc_idx assignment while the range-sort
-      moves longs instead of URL strings;
-    - the dictionary / stats / block passes rerun over kept postings
-      only — the irreducible work.
+    The fold skips re-tokenizing every surviving document and the
+    corpus-wide doc_id STRING range sort (kept docs renumber by their old
+    integer doc_idx); see the module docstring.
 
     ``drop_ids`` is a one-column DataFrame of doc_ids to REMOVE (e.g.
     ``dedup_drop_list(...).filter(~F.col("keep")).select("doc_id")``).
@@ -268,54 +296,8 @@ def apply_tombstones(
     surviving corpus exactly — the reference's index artifact contract
     (/root/reference/src/indexing/sparse_index.py:437-452).
     """
-    meta = index.meta
-    _check_invertible(meta)
-    cfg = cfg_from_meta(meta)
-    spark = index.postings.sparkSession
-
-    drop = drop_ids.select(
-        F.col(id_col).cast("string").alias("doc_id")
-    ).distinct()
-    kept = index.doc_dim.join(drop, "doc_id", "left_anti").persist()
-    row = kept.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tt")
-    ).collect()[0]
-    n_kept, tt_kept = int(row["n"]), int(row["tt"] or 0)
-    if n_kept == 0:
-        kept.unpersist()
-        raise ValueError(
-            "apply_tombstones: drop list removes every document"
-        )
-    if n_kept == int(meta["n_docs"]):
-        kept.unpersist()
-        return index
-    stats = (n_kept, tt_kept / n_kept, tt_kept)
-    n_part = max(4, min(
-        int(cfg.index_partitions),
-        -(-n_kept // max(1, int(cfg.docs_per_partition))),
-    ))
-
-    remap = assign_global_ids(
-        kept.select(F.col("doc_idx").alias("_old_idx"), "doc_id", "dl"),
-        key="_old_idx", id_col="doc_idx", num_partitions=n_part,
-    ).persist()
-    doc_dim = remap.select("doc_idx", "doc_id", "dl")
-    tf_kept = (
-        reconstruct_tf(index)
-        .withColumnRenamed("doc_idx", "_old_idx")
-        .join(remap.select("_old_idx", "doc_idx"), "_old_idx")
-        .select("doc_idx", "dl", "term", "tf")
-        .persist()
-    )
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
-    try:
-        out = _finish_classic(tf_kept, doc_dim, stats, cfg, n_part)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-    tf_kept.unpersist()
-    kept.unpersist()
-    return out
+    drop = drop_ids.select(F.col(id_col).cast("string").alias("doc_id"))
+    return _fold(index, drop, None, None)
 
 
 def merge_index_with_docs(
@@ -337,22 +319,21 @@ def upsert_docs(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> InvertedIndex:
-    """Replace-or-insert a doc batch: the mutation API's third verb,
-    composed from the two exact primitives — ids already in the index are
-    tombstoned out (``apply_tombstones``), then the whole batch folds in
-    (``merge_index_with_docs``). A re-crawled page therefore replaces its
-    old postings atomically with respect to the returned handle.
+    """Replace-or-insert a doc batch: tokenize ONLY the batch, then ONE
+    fold drops every indexed doc whose id is in the batch and appends the
+    whole batch. A re-crawled page therefore replaces its old postings
+    atomically with respect to the returned handle; re-crawling every
+    doc is allowed.
 
-    Statistics (n_docs, avgdl, df/idf, every stored impact) equal a full
-    rebuild over ``(old \\ batch ids) ∪ batch`` exactly; decoded postings
-    as (term, doc_id, weight) sets are identical to that rebuild's
-    (doc_idx ASSIGNMENT can differ when batch ids interleave the kept
-    ids' sort order — the merge module's documented tie-break caveat).
-    Same invertibility preconditions as both primitives."""
-    ids = docs.select(F.col(id_col).cast("string").alias("doc_id")).distinct()
-    overlapping = index.doc_dim.join(ids, "doc_id", "left_semi").select(
-        "doc_id"
-    )
-    if overlapping.limit(1).count():
-        index = apply_tombstones(index, overlapping)
-    return merge_index_with_docs(index, docs, id_col=id_col, text_col=text_col)
+    Equals ``merge_index_with_docs(apply_tombstones(index, overlap),
+    docs)`` bit-for-bit, with ``overlap`` the batch ids already indexed:
+    kept docs renumber by old doc_idx, batch docs append after them.
+    Statistics (n_docs, avgdl, df/idf, every stored impact) therefore
+    equal a full rebuild over ``(old \\ batch ids) ∪ batch`` exactly, and
+    decoded postings as (term, doc_id, weight) sets are identical to that
+    rebuild's (doc_idx ASSIGNMENT can differ when batch ids interleave
+    the kept ids' sort order — the module's documented tie-break caveat).
+    Same invertibility preconditions as the other verbs."""
+    cfg = cfg_from_meta(index.meta)
+    tf, doc_len = doc_term_frequencies(docs, id_col, text_col, cfg)
+    return _fold(index, doc_len.select("doc_id"), tf, doc_len)

@@ -162,7 +162,10 @@ def host_stats(
     aggs = [
         F.count("*").alias("n_docs"),
         F.sum("__chars").alias("total_chars"),
-        F.round(F.avg("__chars") * 1000).cast("long").alias("avg_chars_milli"),
+        # mean × 1000 rounded half-up in BIGINT arithmetic: round() of a
+        # float mean can land on either side of a .5 tie
+        F.expr("(2000 * sum(__chars) + count(*)) div (2 * count(*))")
+        .alias("avg_chars_milli"),
     ]
     if lang_col is not None:
         aggs.append(F.countDistinct(lang_col).alias("n_langs"))

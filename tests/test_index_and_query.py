@@ -156,21 +156,6 @@ def test_oov_query_empty(spark, spark_index):
     assert retrieve(spark_index, qdf, k=5).count() == 0
 
 
-@pytest.mark.parametrize("backend", ["expr", "arrow"])
-def test_tf_backends_identical(spark, corpus, spark_index, backend, monkeypatch):
-    """All tf backends (jvm shuffle / expr zero-shuffle / arrow pandas)
-    must produce byte-identical indexes: same nnz, same postings blocks."""
-    monkeypatch.setenv("SPARK_GRAFT_TF_BACKEND", backend)
-    pages, _ = corpus
-    docs = spark.createDataFrame(pages[["url", "text"]])
-    alt = build_index(docs, id_col="url", text_col="text", cfg=CFG)
-    assert alt.meta["nnz"] == spark_index.meta["nnz"]
-    cols = ["term_id", "block_id", "n_postings", "min_doc", "max_doc"]
-    a = sorted(tuple(r) for r in spark_index.postings.select(*cols).collect())
-    b = sorted(tuple(r) for r in alt.postings.select(*cols).collect())
-    assert a == b
-
-
 # ---------------------------------------------------------------------------
 # fp16 posting weights (reference encoding.value_dtype parity)
 # ---------------------------------------------------------------------------

@@ -236,6 +236,42 @@ def test_upsert_pure_insert_is_plain_fold(spark, corpus):
     assert _index_state(a) == _index_state(b)
 
 
+def test_upsert_numbers_docs_as_tombstone_then_fold(spark, corpus):
+    """upsert is one fold, but it must assign doc_idx exactly as the
+    two-step composition does: kept docs by rank of their old doc_idx,
+    then the whole batch appended in doc_id order. A scattered recrawl
+    interleaves batch ids with kept ids, so this numbering differs from
+    a rebuild's and only the composition pins it."""
+    _, old, new = corpus
+    idx = build_index(old, id_col="url", text_col="text", cfg=CFG)
+    recrawled = old.filter(F.crc32("url") % 3 == 0).select(
+        "url", F.concat(F.col("text"), F.lit(" fresh crawl")).alias("text")
+    )
+    batch = recrawled.unionByName(new)
+    want = merge_index_with_docs(
+        apply_tombstones(idx, recrawled.select(F.col("url").alias("doc_id"))),
+        batch, id_col="url", text_col="text",
+    )
+    got = upsert_docs(idx, batch, id_col="url", text_col="text")
+    assert got.meta == want.meta
+    assert _index_state(got) == _index_state(want)
+
+
+def test_upsert_recrawling_every_doc_equals_rebuild(spark, corpus):
+    """A batch that re-crawls every indexed doc leaves no old doc behind
+    but a non-empty result: the upsert must succeed and equal a build
+    over the new texts."""
+    _, old, _ = corpus
+    idx = build_index(old, id_col="url", text_col="text", cfg=CFG)
+    batch = old.select(
+        "url", F.concat(F.lit("changed words "), F.col("text")).alias("text")
+    )
+    got = upsert_docs(idx, batch, id_col="url", text_col="text")
+    rebuilt = build_index(batch, id_col="url", text_col="text", cfg=CFG)
+    assert got.meta["n_docs"] == rebuilt.meta["n_docs"] == N_OLD
+    assert _index_state(got) == _index_state(rebuilt)
+
+
 def test_inversion_exact_over_weight_grid():
     """Property: the BM25 impact inversion recovers tf EXACTLY from the
     float32-stored weight across the realistic parameter grid (tf bounded

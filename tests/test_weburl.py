@@ -128,6 +128,19 @@ def test_host_stats_aggregates(spark):
     assert got["h2.org"]["n_langs"] == 1
 
 
+def test_host_stats_avg_chars_half_tie(spark):
+    """Exact .5 ties in avg_chars_milli round up. t.org: 16 docs of total
+    length 1, mean 62.5 → 63. u.org: 80 docs of total length 323, mean
+    4037.5 → 4038, where a float mean × 1000 reads 4037.4999999999995."""
+    rows = [(f"https://t.org/p{i}", "x" if i == 0 else "") for i in range(16)]
+    sizes = [100, 100, 100, 23] + [0] * 76
+    rows += [(f"https://u.org/p{i}", "x" * n) for i, n in enumerate(sizes)]
+    df = spark.createDataFrame(rows, "url string, text string")
+    got = {r["host"]: (r["n_docs"], r["total_chars"], r["avg_chars_milli"])
+           for r in host_stats(df, lang_col=None).collect()}
+    assert got == {"t.org": (16, 1, 63), "u.org": (80, 323, 4038)}
+
+
 def test_host_stats_no_lang(spark):
     df = spark.createDataFrame(
         [("https://h.org/a", "abc")], "url string, text string"
