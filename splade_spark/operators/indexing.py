@@ -43,14 +43,13 @@ from contextlib import contextmanager
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..config import DEFAULT, TERMS_PER_TOKEN_BOUND, EngineConfig
-from ..functions.codec import encode_block
+from ..functions.codec import decode_blocks, encode_blocks, weight_width
 from ..functions.tokenize import tokens_col
 from .ids import _ROW_MASK, assign_global_ids, ranged_prefix_offsets
 
@@ -71,7 +70,8 @@ class InvertedIndex:
 
     def save(self, out_dir: str) -> None:
         (self.postings
-         .repartition(int(self.meta["index_partitions"]), "term_id")
+         .repartition(_task_width(self.meta["n_docs"],
+                                  self.meta["index_partitions"]), "term_id")
          .sortWithinPartitions("term_id", F.desc("max_weight"))  # impact-ordered
          .write.mode("overwrite").parquet(os.path.join(out_dir, "postings")))
         self.term_dict.write.mode("overwrite").parquet(os.path.join(out_dir, "term_dict"))
@@ -207,26 +207,47 @@ def build_index(
         return _build_index_classic(docs, id_col, text_col, cfg, n_part)
 
 
+def _task_width(
+    n_docs: int, cap: int, docs_per_partition: int = DEFAULT.docs_per_partition
+) -> int:
+    """Task width for an ``n_docs`` corpus: ceil(n_docs /
+    docs_per_partition), at least 4, capped by the cluster-side
+    ``index_partitions`` knob ``cap``. A 5k-doc build runs 4-wide instead
+    of paying 32 tasks of scheduling overhead per stage, while web-scale
+    corpora always hit the cap. Shared by the build, the write-path fold
+    (merge.py) and ``InvertedIndex.save``."""
+    per = max(1, int(docs_per_partition))
+    return max(4, min(int(cap), -(-int(n_docs) // per)))
+
+
 @contextmanager
 def _build_width(spark: SparkSession, cfg: EngineConfig, n_docs: int):
-    """Yield the build's task width for an ``n_docs`` corpus, with
-    ``spark.sql.shuffle.partitions`` scoped to it for the build's stages.
-
-    Width = ceil(n_docs / docs_per_partition), at least 4, capped by the
-    cluster-side ``index_partitions`` knob: a 5k-doc build runs 4-wide
-    instead of paying 32 tasks of scheduling overhead per stage, while
-    web-scale corpora always hit the cap. Shared by ``build_index`` and
-    the write-path fold (merge.py)."""
-    n_part = max(4, min(
-        int(cfg.index_partitions),
-        -(-int(n_docs) // max(1, int(cfg.docs_per_partition))),
-    ))
+    """Yield ``_task_width`` of an ``n_docs`` corpus, with
+    ``spark.sql.shuffle.partitions`` scoped to it for the build's stages."""
+    n_part = _task_width(n_docs, cfg.index_partitions, cfg.docs_per_partition)
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
     try:
         yield n_part
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+
+
+def _require_complete(meta: dict, who: str) -> None:
+    """Raise unless the index kept every posting: ``min_weight`` == 0 and
+    a per-doc term cap (``top_k_terms``) that cannot bind below
+    ``max_tokens``. Term-presence tests (AND, minimum-should-match) and
+    the write-path tf reconstruction both need every posting."""
+    min_w = float(meta.get("min_weight", 0.0))
+    cap = int(meta.get("top_k_terms", 1 << 30))
+    max_t = int(meta.get("max_tokens", DEFAULT.max_tokens))
+    if min_w > 0.0 or cap < max_t:
+        raise ValueError(
+            f"{who}: needs a complete index (min_weight == 0 and a "
+            f"non-binding per-doc term cap), got min_weight={min_w}, "
+            f"top_k_terms={cap}, max_tokens={max_t} — pruned postings "
+            "make term presence undecidable and cannot be reconstructed"
+        )
 
 
 def _build_index_classic(
@@ -346,7 +367,7 @@ def _finish_classic(
         ).cast("float").alias("weight"),
         "df",
     )
-    return _assemble(weighted, term_dict, doc_dim, stats, cfg, "bm25", n_part)
+    return _assemble(weighted, term_dict, doc_dim, stats, cfg, "bm25")
 
 
 def _finish_weighted(
@@ -369,7 +390,6 @@ def _finish_weighted(
 def _assemble(
     weighted: DataFrame, term_dict: DataFrame, doc_dim: DataFrame,
     stats: tuple[int, float, int], cfg: EngineConfig, weighting: str,
-    n_part: int | None = None,
 ) -> InvertedIndex:
     n_docs, avgdl, total_tokens = stats
     # strict > min_weight filter (sparse_index.py:65-68)
@@ -408,7 +428,7 @@ def _assemble(
         "exclude_terms": list(cfg.exclude_terms),
         "tokenizer": "lower_alnum_v1",
         "weighting": weighting,
-        "index_partitions": int(n_part or cfg.index_partitions),
+        "index_partitions": int(cfg.index_partitions),
         # sparsify settings frozen into metadata and mirrored at query time,
         # as the reference does (script/index.py:111-121, retrieval.py:133-144)
     }
@@ -424,9 +444,13 @@ def build_posting_blocks(
     The shuffle key is (term_id, block_id): block_id is a doc-range split
     sized from df, so head terms scatter across ceil(df/block_size)
     reducers — this IS the salted repartition-by-term + skew split.
+    Each block's postings arrive as one sorted ``plist`` list; a
+    ``mapInArrow`` pass encodes every block of an Arrow batch at once
+    from the list's flat values and offsets (``codec.encode_blocks``),
+    with no Python loop over blocks.
     """
     bs = int(cfg.block_size)
-    vdt = str(cfg.value_dtype)
+    width = weight_width(str(cfg.value_dtype))
     # n_blocks = ceil(df / block_size); range_per_block = ceil(n_docs / n_blocks)
     blocks = weighted.withColumn(
         "_nb", F.ceil(F.col("df") / F.lit(bs)).cast("long")
@@ -437,33 +461,52 @@ def build_posting_blocks(
     )
 
     grouped = blocks.groupBy("term_id", "block_id").agg(
-        F.sort_array(F.collect_list(F.struct("doc_idx", "weight"))).alias("plist"),
         F.count(F.lit(1)).cast("int").alias("n_postings"),
         F.min("doc_idx").alias("min_doc"),
         F.max("doc_idx").alias("max_doc"),
         F.max("weight").alias("max_weight"),
+        F.sort_array(F.collect_list(F.struct("doc_idx", "weight"))).alias("plist"),
     )
+    names = grouped.columns[:-1] + ["doc_gaps", "weights"]
 
-    @F.pandas_udf("doc_gaps binary, weights binary")
-    def encode_udf(docs: pd.Series, ws: pd.Series) -> pd.DataFrame:
-        gaps_out, w_out = [], []
-        for d, w in zip(docs, ws):
-            g, wb = encode_block(
-                np.asarray(d, dtype=np.int64), np.asarray(w, dtype=np.float32),
-                value_dtype=vdt,
+    def encode(batches):
+        for b in batches:
+            plist = b.column("plist")
+            flat = plist.flatten()
+            gaps, wts = encode_blocks(
+                flat.field("doc_idx").to_numpy(),
+                flat.field("weight").to_numpy(),
+                np.diff(plist.offsets.to_numpy()),
+                width,
             )
-            gaps_out.append(g)
-            w_out.append(wb)
-        return pd.DataFrame({"doc_gaps": gaps_out, "weights": w_out})
+            yield pa.RecordBatch.from_arrays(
+                b.columns[:-1] + [gaps, wts], names=names
+            )
 
-    enc = grouped.select(
-        "term_id", "block_id", "n_postings", "min_doc", "max_doc", "max_weight",
-        encode_udf(
-            F.col("plist").getField("doc_idx"), F.col("plist").getField("weight")
-        ).alias("_enc"),
+    return grouped.mapInArrow(encode, POSTINGS_SCHEMA)
+
+
+def explode_postings(
+    postings: DataFrame, keys: tuple[str, ...] = ("term_id",)
+) -> DataFrame:
+    """Block rows → (*keys, doc_idx bigint, weight float), one row per
+    posting: one narrow pass that decodes each Arrow batch of blocks at
+    once (``codec.decode_blocks``) and repeats each block's ``keys``
+    columns over its postings. No shuffle."""
+    out = postings.select(*keys).schema.add("doc_idx", "long").add(
+        "weight", "float"
     )
-    return enc.select(
-        "term_id", "block_id", "n_postings", "min_doc", "max_doc", "max_weight",
-        F.col("_enc.doc_gaps").alias("doc_gaps"),
-        F.col("_enc.weights").alias("weights"),
+
+    def explode(batches):
+        for b in batches:
+            d, w, n = decode_blocks(b.column("doc_gaps"), b.column("weights"))
+            rows = np.repeat(np.arange(b.num_rows), n)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(k).take(rows) for k in keys]
+                + [pa.array(d), pa.array(w)],
+                names=out.fieldNames(),
+            )
+
+    return postings.select(*keys, "doc_gaps", "weights").mapInArrow(
+        explode, out
     )

@@ -43,28 +43,28 @@ bit-for-bit, and ``upsert_docs(idx, B)`` equals
 Oracle-gated by the ``bm25_topk_merged`` and ``bm25_topk_deduped``
 entries against full-corpus DuckDB BM25 SQL.
 
-Preconditions (checked): the index must retain its full postings —
-reconstruction can only see what the build kept, so a strict
-``min_weight`` > 0 or a binding per-doc term cap would make the fold
-diverge from a true rebuild. Default BM25 config never drops anything
-(all BM25 weights are positive; top_k_terms=4096 > max_tokens=256).
+Preconditions (checked, ``indexing._require_complete``): the index
+must retain its full postings — reconstruction can only see what the
+build kept, so a strict ``min_weight`` > 0 or a binding per-doc term
+cap would make the fold diverge from a true rebuild. Default BM25
+config never drops anything (all BM25 weights are positive;
+top_k_terms=4096 > max_tokens=256).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import EngineConfig
-from ..functions.codec import decode_block
 from .ids import assign_global_ids
 from .indexing import (
     InvertedIndex,
     _build_width,
     _doc_totals,
     _finish_classic,
+    _require_complete,
     doc_term_frequencies,
+    explode_postings,
 )
 
 
@@ -81,39 +81,6 @@ def cfg_from_meta(meta: dict) -> EngineConfig:
         block_size=int(meta["block_size"]),
         value_dtype=str(meta.get("value_dtype", "float32")),
         index_partitions=int(meta["index_partitions"]),
-    )
-
-
-def explode_postings(postings: DataFrame) -> DataFrame:
-    """Block rows → (term_id, doc_idx, weight float): one narrow
-    Arrow-batched decode pass, no shuffle."""
-
-    def decode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            tids, docs, ws = [], [], []
-            for tid, gaps, wts in zip(
-                pdf["term_id"], pdf["doc_gaps"], pdf["weights"]
-            ):
-                d, w = decode_block(gaps, wts)
-                if d.size == 0:
-                    continue
-                tids.append(np.repeat(np.int64(tid), d.size))
-                docs.append(d)
-                ws.append(w)
-            if not docs:
-                continue
-            yield pd.DataFrame(
-                {
-                    "term_id": np.concatenate(tids),
-                    "doc_idx": np.concatenate(docs),
-                    "weight": np.concatenate(ws),
-                }
-            )
-
-    return postings.select("term_id", "doc_gaps", "weights").mapInPandas(
-        decode, schema="term_id bigint, doc_idx bigint, weight float"
     )
 
 
@@ -149,19 +116,7 @@ def _check_invertible(meta: dict) -> None:
             "merge: only BM25-weighted indexes fold exactly "
             f"(weighting={meta.get('weighting')!r})"
         )
-    if float(meta["min_weight"]) > 0.0:
-        raise ValueError(
-            "merge: index was built with min_weight "
-            f"{meta['min_weight']} > 0 — dropped postings cannot be "
-            "reconstructed, a fold would diverge from a rebuild"
-        )
-    if int(meta["top_k_terms"]) < int(meta["max_tokens"]):
-        raise ValueError(
-            "merge: per-doc term cap bound at build time "
-            f"(top_k_terms={meta['top_k_terms']} < max_tokens="
-            f"{meta['max_tokens']}) — capped-away postings cannot be "
-            "reconstructed"
-        )
+    _require_complete(meta, "merge")
     if meta.get("value_dtype", "float32") != "float32":
         raise ValueError(
             "merge: index stores "

@@ -34,10 +34,10 @@ Spark-first plan shape (100 TB):
   Nothing quadratic, nothing driver-side.
 
 Storage: position lists compress like doc gaps — ascending ints →
-delta + LEB128 varint (``encode_positions``/``decode_positions`` reuse
-the posting codec, functions/codec.py). At 10^12 docs the positional
-plane is the index's largest table (one entry per token, not per
-(term, doc)); varint gaps on 1-based positions bound it near the
+delta + LEB128 varint (``encode_positional``/``decode_positional`` call
+the posting codec's row functions, functions/codec.py). At 10^12 docs
+the positional plane is the index's largest table (one entry per token,
+not per (term, doc)); varint gaps on 1-based positions bound it near the
 token-stream entropy.
 """
 
@@ -46,12 +46,17 @@ from __future__ import annotations
 import re
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..config import DEFAULT, EngineConfig
-from ..functions.codec import varint_decode, varint_encode
+from ..functions.codec import (
+    binary_array,
+    binary_buffers,
+    decode_rows,
+    encode_rows,
+)
 from ..functions.tokenize import tokenize_py, tokens_col
 
 
@@ -182,33 +187,27 @@ def phrase_search(
 def encode_positional(positional: DataFrame) -> DataFrame:
     """(…, positions array<int>) → (…, positions binary): delta+varint
     bytes of [first_pos, gap1, …] — the storage form for a saved
-    positional layout (same codec family as posting doc gaps)."""
+    positional layout, in the row format of posting doc gaps. An Arrow
+    UDF encodes each batch's lists from their flat values and offsets
+    with one ``codec.encode_rows``."""
 
-    @F.pandas_udf("binary")
-    def enc(ps: pd.Series) -> pd.Series:
-        out = []
-        for p in ps:
-            a = np.asarray(p, dtype=np.int64)
-            gaps = np.empty_like(a)
-            if a.size:
-                gaps[0] = a[0]
-                np.subtract(a[1:], a[:-1], out=gaps[1:])
-            out.append(varint_encode(gaps))
-        return pd.Series(out)
+    @F.arrow_udf("binary")
+    def enc(ps: pa.Array) -> pa.Array:
+        lengths = np.diff(ps.offsets.to_numpy())
+        return binary_array(*encode_rows(ps.flatten().to_numpy(), lengths))
 
     return positional.withColumn("positions", enc("positions"))
 
 
 def decode_positional(encoded: DataFrame) -> DataFrame:
-    """Inverse of ``encode_positional``: binary → array<int> positions."""
+    """Inverse of ``encode_positional``: binary → array<int> positions,
+    one ``codec.decode_rows`` per Arrow batch."""
 
-    @F.pandas_udf("array<int>")
-    def dec(bs: pd.Series) -> pd.Series:
-        out = []
-        for b in bs:
-            gaps = varint_decode(bytes(b))
-            out.append(np.cumsum(gaps, dtype=np.int64).astype(np.int32))
-        return pd.Series(out)
+    @F.arrow_udf("array<int>")
+    def dec(bs: pa.Array) -> pa.Array:
+        values, lengths = decode_rows(*binary_buffers(bs))
+        offs = np.r_[0, np.cumsum(lengths)].astype(np.int32)
+        return pa.ListArray.from_arrays(offs, values.astype(np.int32))
 
     return encoded.withColumn("positions", dec("positions"))
 

@@ -19,9 +19,10 @@ Reference semantics reproduced:
   /root/reference/src/indexing/sparse_index.py:705-714) — inner join drops them
 
 Three physical strategies over the same compressed index:
-- ``score_exhaustive``: decode every candidate block (mapInPandas,
-  vectorized) → JVM hash aggregate → window top-k. The correctness
-  baseline; fully distributed — the scale-safe plan for ANY query.
+- ``score_exhaustive``: decode every candidate block (one Arrow-batched
+  pass, indexing.explode_postings) → JVM hash aggregate → window top-k.
+  The correctness baseline; fully distributed — the scale-safe plan for
+  ANY query.
 - ``score_wand``: block-max pruned scoring (engine addition, north rule).
   Per query, blocks are processed in descending upper-bound order
   (ub = qtf · block max_weight); once the suffix upper-bound sum falls
@@ -61,7 +62,7 @@ from pyspark.sql.window import Window
 from ..config import DEFAULT, TERMS_PER_TOKEN_BOUND, EngineConfig
 from ..functions.codec import decode_block
 from ..functions.tokenize import tokenize_py, tokens_col
-from .indexing import InvertedIndex
+from .indexing import InvertedIndex, _require_complete, explode_postings
 
 _Q_SCHEMA = "query_id string, term_id bigint, qtf float, df bigint"
 _RESULT_SCHEMA = "query_id string, rank int, doc_id string, score float"
@@ -231,36 +232,13 @@ def _exhaustive_scores(
     index: InvertedIndex, q_terms: DataFrame, rows: list | None = None,
     with_counts: bool = False,
 ) -> DataFrame:
-    cand = _candidate_blocks(index, q_terms, rows).select(
-        "query_id", "qtf", "doc_gaps", "weights"
-    )
-
-    def decode_partial(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qids, docs, partials = [], [], []
-            for qid, qtf, gaps, wts in zip(
-                pdf["query_id"], pdf["qtf"], pdf["doc_gaps"], pdf["weights"]
-            ):
-                d, w = decode_block(gaps, wts)
-                if d.size == 0:
-                    continue
-                qids.append(np.repeat(qid, d.size))
-                docs.append(d)
-                partials.append(np.float32(qtf) * w)
-            if not docs:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qids),
-                    "doc_idx": np.concatenate(docs),
-                    "partial": np.concatenate(partials),
-                }
-            )
-
-    partials = cand.mapInPandas(
-        decode_partial, schema="query_id string, doc_idx bigint, partial float"
+    # qtf · weight as a float Column: the same IEEE f32 product the
+    # served kernels form in NumPy
+    partials = explode_postings(
+        _candidate_blocks(index, q_terms, rows), keys=("query_id", "qtf")
+    ).select(
+        "query_id", "doc_idx",
+        (F.col("qtf") * F.col("weight")).alias("partial"),
     )
     aggs = [F.sum("partial").cast("float").alias("score")]
     if with_counts:
@@ -290,14 +268,7 @@ def retrieve_msm(
     conjunctive path (a pruned index makes term-presence undecidable).
     """
     meta = index.meta
-    if float(meta.get("min_weight", 0.0)) > 0.0 or int(
-        meta.get("top_k_terms", 1 << 30)
-    ) < int(meta.get("max_tokens", cfg.max_tokens)):
-        raise ValueError(
-            "retrieve_msm: needs a complete index (min_weight == 0, "
-            "non-binding per-doc term cap) — pruned postings make the "
-            "term-presence count undecidable"
-        )
+    _require_complete(meta, "retrieve_msm")
     if msm < 1:
         raise ValueError("retrieve_msm: msm must be >= 1")
     q_terms = sparsify_query_terms(
@@ -353,20 +324,8 @@ def conjunctive_scores(
     drop docs that should rise into the k. Raises on indexes whose
     pruning knobs would make the all-terms test undecidable."""
     meta = index.meta
-    if float(meta.get("min_weight", 0.0)) > 0.0:
-        raise ValueError(
-            "conjunctive retrieval: index built with min_weight "
-            f"{meta['min_weight']} > 0 — dropped postings would make the "
-            "all-terms test undecidable"
-        )
+    _require_complete(meta, "conjunctive retrieval")
     max_tokens = int(meta.get("max_tokens", cfg.max_tokens))
-    if int(meta.get("top_k_terms", 1 << 30)) < max_tokens:
-        raise ValueError(
-            "conjunctive retrieval: per-doc term cap binds "
-            f"(top_k_terms={meta['top_k_terms']} < max_tokens="
-            f"{max_tokens}) — capped-away postings would make the "
-            "all-terms test undecidable"
-        )
     q_terms = sparsify_query_terms(
         encode_queries(queries, index.term_dict, cfg, meta), meta
     )
@@ -614,7 +573,7 @@ def _wand_scores_sharded(
         base = base.filter(F.col("term_id").isin(terms))
     else:
         # term pruning MUST land below the shard split regardless — the
-        # split's mapInPandas is a barrier Catalyst can't push the later
+        # split's mapInArrow is a barrier Catalyst can't push the later
         # join through, and splitting the whole table decodes every
         # boundary block corpus-wide
         base = base.join(

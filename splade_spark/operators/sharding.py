@@ -34,11 +34,12 @@ import math
 import os
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codec import decode_block, encode_block
+from ..functions.codec import decode_blocks, encode_blocks
 from .indexing import POSTINGS_SCHEMA, InvertedIndex
 from .query import _SERVED_COLS, LocalIndexServer, load_term_info
 
@@ -57,9 +58,10 @@ def shard_postings(index: InvertedIndex, n_shards: int) -> DataFrame:
     Shard s owns doc_idx in [s·dps, (s+1)·dps) with
     dps = ceil(n_docs / n_shards). Blocks fully inside a shard pass
     through untouched (no decode — min_doc/max_doc metadata is enough);
-    boundary-crossing blocks are decoded once, split with searchsorted,
-    and re-encoded per side with fresh (n_postings, min_doc, max_doc,
-    max_weight) block metadata."""
+    the boundary-crossing blocks of an Arrow batch are decoded together,
+    cut wherever (block, shard) changes, and re-encoded together, each
+    piece at its source block's weight width (fp16 stays fp16), with
+    fresh (n_postings, min_doc, max_doc, max_weight) block metadata."""
     return shard_blocks(index.postings, int(index.meta["n_docs"]), n_shards)
 
 
@@ -74,47 +76,41 @@ def shard_blocks(postings: DataFrame, n_docs: int, n_shards: int) -> DataFrame:
     postings = postings.select(*_COLS[1:])  # POSTINGS_SCHEMA order
 
     def split_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            shard = b.column("min_doc").to_numpy() // dps
+            inside = shard == b.column("max_doc").to_numpy() // dps
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(shard[inside].astype(np.int32))]
+                + b.filter(inside).columns, names=_COLS,
+            )
+            if inside.all():
                 continue
-            lo_shard = pdf["min_doc"].to_numpy() // dps
-            hi_shard = pdf["max_doc"].to_numpy() // dps
-            inside = lo_shard == hi_shard
-            if inside.any():
-                out = pdf.loc[inside].copy()
-                out.insert(0, "shard_id", lo_shard[inside].astype(np.int32))
-                yield out
-            cross = pdf.loc[~inside]
-            if len(cross) == 0:
-                continue
-            rows: dict[str, list] = {c: [] for c in _COLS}
-            for r in cross.itertuples(index=False):
-                d, w = decode_block(r.doc_gaps, r.weights)
-                s_lo = int(d[0] // dps)
-                s_hi = int(d[-1] // dps)
-                # cut points at each shard boundary inside [d[0], d[-1]]
-                bounds = np.arange(s_lo + 1, s_hi + 1, dtype=np.int64) * dps
-                cuts = np.searchsorted(d, bounds, side="left")
-                starts = np.concatenate(([0], cuts))
-                ends = np.concatenate((cuts, [d.size]))
-                for s, a, b in zip(range(s_lo, s_hi + 1), starts, ends):
-                    if a >= b:
-                        continue
-                    dd, ww = d[a:b], w[a:b]
-                    g, wb = encode_block(dd, ww)
-                    rows["shard_id"].append(s)
-                    rows["term_id"].append(r.term_id)
-                    rows["block_id"].append(r.block_id)
-                    rows["n_postings"].append(int(dd.size))
-                    rows["min_doc"].append(int(dd[0]))
-                    rows["max_doc"].append(int(dd[-1]))
-                    rows["max_weight"].append(float(ww.max()))
-                    rows["doc_gaps"].append(g)
-                    rows["weights"].append(wb)
-            if rows["shard_id"]:
-                yield pd.DataFrame(rows)[_COLS]
+            # boundary blocks: one decode, a cut wherever (block, shard)
+            # changes, one encode at each source block's weight width
+            cross = b.filter(~inside)
+            wcol = cross.column("weights")
+            d, w, n = decode_blocks(cross.column("doc_gaps"), wcol)
+            row = np.repeat(np.arange(cross.num_rows), n)
+            s = d // dps
+            head = np.flatnonzero(
+                np.r_[True, (row[1:] != row[:-1]) | (s[1:] != s[:-1])]
+            )
+            size = np.diff(np.r_[head, d.size])
+            src = row[head]
+            width = pc.binary_length(wcol).to_numpy() // n
+            gaps, wts = encode_blocks(d, w, size, width[src])
+            yield pa.RecordBatch.from_arrays([
+                pa.array(s[head].astype(np.int32)),
+                cross.column("term_id").take(src),
+                cross.column("block_id").take(src),
+                pa.array(size.astype(np.int32)),
+                pa.array(d[head]),
+                pa.array(d[head + size - 1]),
+                pa.array(np.maximum.reduceat(w, head)),
+                gaps, wts,
+            ], names=_COLS)
 
-    return postings.mapInPandas(split_batches, schema=_SHARDED_SCHEMA)
+    return postings.mapInArrow(split_batches, _SHARDED_SCHEMA)
 
 
 _COLS = [

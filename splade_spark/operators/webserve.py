@@ -44,8 +44,9 @@ import numpy as np
 import pandas as pd
 
 from ..config import DEFAULT
-from ..functions.codec import decode_block, varint_decode
+from ..functions.codec import binary_buffers, decode_block, decode_rows
 from ..functions.tokenize import tokenize_py
+from .indexing import _require_complete
 from .positional import parse_web_query
 from .query import LocalIndexServer
 from .sharding import ShardedServer
@@ -94,10 +95,7 @@ class PositionalStore:
         term-partitioned parquet, delta+varint position bytes) via Arrow.
         ``terms`` prunes to a vocabulary — the serving fleet loads only
         the query stream's terms for its own doc range. All rows decode
-        in one ``varint_decode`` over the column's value bytes; a row's
-        value count is the number of terminal (high bit clear) bytes in
-        its byte range, and a running sum restarted at each row turns
-        its deltas back into positions."""
+        in one ``codec.decode_rows`` over the column's value bytes."""
         import pyarrow.dataset as ds
 
         dataset = ds.dataset(pos_dir, format="parquet")
@@ -107,19 +105,11 @@ class PositionalStore:
         tbl = dataset.to_table(
             columns=["term", "doc_id", "positions"], filter=flt
         )
-        col = tbl.column("positions").combine_chunks()
-        _, offs, data = col.buffers()
-        offs = np.frombuffer(offs, np.int32)[col.offset:][:len(col) + 1]
-        b = np.frombuffer(data or b"", np.uint8)[offs[0]:offs[-1]]
-        lengths = np.diff(np.r_[0, np.cumsum(b < 0x80)][offs - offs[0]])
-        total = np.r_[0, np.cumsum(varint_decode(b).astype(np.int64))]
-        row_start = np.cumsum(lengths) - lengths
-        return cls._pack(
-            tbl.column("term").to_numpy(),
-            tbl.column("doc_id").to_numpy(),
-            lengths,
-            total[1:] - np.repeat(total[row_start], lengths),
+        positions, lengths = decode_rows(
+            *binary_buffers(tbl.column("positions"))
         )
+        return cls._pack(tbl.column("term").to_numpy(),
+                         tbl.column("doc_id").to_numpy(), lengths, positions)
 
     @classmethod
     def from_rows(
@@ -187,13 +177,7 @@ class WebQueryServer:
     def __init__(self, srv: LocalIndexServer, store: PositionalStore):
         self.srv = srv
         self.store = store
-        if float(srv.min_weight) > 0.0 or srv.top_k_terms < srv.max_tokens:
-            raise ValueError(
-                "WebQueryServer: conjunctive serving needs a complete "
-                "index (min_weight == 0 and a non-binding per-doc term "
-                "cap) — pruned postings make the all-terms test "
-                "undecidable"
-            )
+        _require_complete(srv.meta, "WebQueryServer")
         node = {d: i for i, d in enumerate(srv.doc_ids, srv.doc_base)}
         # store doc number -> this node's global doc_idx (-1: not here)
         self.store_doc_idx = np.array(

@@ -1,5 +1,9 @@
+import pathlib
+import re
+
 import numpy as np
 
+import splade_spark
 from splade_spark.functions.codec import (
     decode_block,
     encode_block,
@@ -49,3 +53,17 @@ def test_block_compression_beats_raw():
     w = np.ones(100_000, dtype=np.float32)
     gaps, _ = encode_block(docs, w)
     assert len(gaps) < 100_000 * 2
+
+
+def test_codec_module_owns_the_varint_format():
+    """Every other module goes through the row and block functions of
+    functions/codec.py; none calls the varint primitives itself."""
+    root = pathlib.Path(splade_spark.__file__).parent
+    owner = root / "functions" / "codec.py"
+    offenders = [
+        str(p.relative_to(root))
+        for p in sorted(root.rglob("*.py"))
+        if p != owner
+        and re.search(r"\bvarint_(encode|decode)\b", p.read_text())
+    ]
+    assert offenders == []

@@ -16,6 +16,7 @@ from splade_spark.functions.codec import decode_block
 from splade_spark.operators.indexing import build_index, doc_term_frequencies
 from splade_spark.operators.merge import (
     apply_tombstones,
+    cfg_from_meta,
     merge_index_with_docs,
     merge_index_with_tf,
     reconstruct_tf,
@@ -135,6 +136,20 @@ def test_fold_guards(spark, corpus):
     )
     with pytest.raises(ValueError, match="cap"):
         merge_index_with_docs(capped, new, id_col="url", text_col="text")
+
+
+def test_meta_keeps_the_partition_cap(spark, corpus):
+    """``meta["index_partitions"]`` is the cluster-side cap the build was
+    given, not the width a small build ran at, so a fold of an index
+    first built small can still run wider once its corpus grows."""
+    full, _, new = corpus
+    idx = build_index(full, id_col="url", text_col="text",
+                      cfg=EngineConfig(block_size=64))
+    assert cfg_from_meta(idx.meta).index_partitions == 32
+    folded = upsert_docs(idx, new, id_col="url", text_col="text")
+    assert cfg_from_meta(folded.meta).index_partitions == 32
+    folded.unpersist()
+    idx.unpersist()
 
 
 def test_tombstone_fold_equals_rebuild_on_kept(spark, corpus):

@@ -10,8 +10,13 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from splade_spark.functions.codec import (
+    binary_array,
     decode_block,
+    decode_blocks,
+    decode_rows,
     encode_block,
+    encode_blocks,
+    encode_rows,
     varint_decode,
     varint_encode,
 )
@@ -60,6 +65,67 @@ def test_block_round_trip_both_dtypes(docs, seed, dtype):
     else:
         # exact fp16 rounding, upcast back to f32
         assert np.array_equal(ww, w.astype(np.float16).astype(np.float32))
+
+
+_rows_strategy = st.lists(
+    st.tuples(
+        st.lists(
+            st.integers(min_value=0, max_value=2**62), max_size=12,
+            unique=True,
+        ).map(sorted),
+        st.booleans(),  # fp16 row?
+    ),
+    max_size=25,
+)
+
+
+@given(rows=_rows_strategy, seed=st.integers(min_value=0, max_value=2**31 - 1))
+@settings(max_examples=200, deadline=None)
+def test_row_codec_matches_per_block_codec(rows, seed):
+    """The batch row codec against the one-block codec, on rows that
+    include empty rows, single values and values up to 2^62: each row's
+    bytes equal ``encode_block``'s, ``decode_rows`` inverts
+    ``encode_rows``, and the block decoder on a batch mixing fp16 and f32
+    rows equals ``decode_block`` row by row."""
+    docs = [np.asarray(r, dtype=np.int64) for r, _ in rows]
+    lengths = np.array([d.size for d in docs], dtype=np.int64)
+    flat = np.concatenate(docs + [np.empty(0, dtype=np.int64)])
+    w = np.random.RandomState(seed).uniform(0.001, 30.0, flat.size).astype(
+        np.float32
+    )
+    ws = np.split(w, np.cumsum(lengths)[:-1]) if rows else []
+    per_block = [
+        encode_block(d, wi, "float16" if half else "float32")
+        for d, wi, (_, half) in zip(docs, ws, rows)
+    ]
+
+    buf, offs = encode_rows(flat, lengths)
+    assert offs.size == len(rows) + 1
+    for i, (g, _) in enumerate(per_block):
+        assert buf[offs[i]:offs[i + 1]] == g
+    values, got_lengths = decode_rows(buf, offs)
+    assert np.array_equal(values, flat)
+    assert np.array_equal(got_lengths, lengths)
+
+    widths = [2 if half else 4 for _, half in rows]
+    gaps_col, w_col = encode_blocks(flat, w, lengths, np.array(widths, int))
+    assert gaps_col.to_pylist() == [g for g, _ in per_block]
+    assert w_col.to_pylist() == [wb for _, wb in per_block]
+
+    def column(items):
+        data = b"".join(items)
+        return binary_array(data, np.r_[0, np.cumsum([len(x) for x in items])])
+
+    d, dw, n = decode_blocks(
+        column([g for g, _ in per_block]), column([wb for _, wb in per_block])
+    )
+    want = [decode_block(g, wb) for g, wb in per_block]
+    assert np.array_equal(n, lengths)
+    assert np.array_equal(d, flat)
+    assert dw.dtype == np.float32
+    assert np.array_equal(
+        dw, np.concatenate([x[1] for x in want] + [np.empty(0, np.float32)])
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -5,6 +5,7 @@ Reference serving semantics preserved across the shard boundary:
 accumulate + top-k with the deterministic tie rule
 (/root/reference/src/indexing/sparse_index.py:661-755, SURVEY.md §4.3.2)."""
 
+import dataclasses
 import math
 import os
 import tempfile
@@ -116,6 +117,28 @@ def test_sharded_server_parity(spark, index, corpus):
         ]
         got = [(d, np.float32(s)) for d, s in sharded.search(row["text"], k=K)]
         assert got == want
+
+
+def test_shard_split_keeps_fp16_width(spark, corpus):
+    """Boundary pieces of an fp16 index are re-encoded at their source
+    block's 2 bytes per posting, not widened to f32, and the broker over
+    the split still answers exactly like the single server."""
+    pages, queries = corpus
+    docs = spark.createDataFrame(pages[["url", "text"]])
+    idx16 = build_index(docs, id_col="url", text_col="text",
+                        cfg=dataclasses.replace(CFG, value_dtype="float16"))
+    try:
+        sharded = shard_postings(idx16, 3).toPandas()
+        assert len(sharded) > idx16.postings.count()  # boundaries were cut
+        assert (
+            sharded["weights"].map(len) == 2 * sharded["n_postings"]
+        ).all()
+        srv = local_server(idx16)
+        broker = ShardedServer(idx16, n_shards=3)
+        for text in list(queries["text"]) + ["zzz-out-of-vocab", ""]:
+            assert broker.search(text, k=K) == srv.search(text, k=K)
+    finally:
+        idx16.unpersist()
 
 
 def test_sharded_server_weighted_parity(index):
