@@ -7,7 +7,9 @@ same semantics. Column names and types are aligned on both sides (the
 driver hashes values after sorting columns by name).
 
 Floats are emitted as ``*_milli`` / ``*_micro`` BIGINTs (round(x*10^k)) so
-double-vs-double sum-order noise cannot flip a value hash.
+double-vs-double sum-order noise cannot flip a value hash. A ratio of
+integers is rounded in integer arithmetic instead (``_half_up_ratio``), so
+an exact .5 tie cannot land on either side of a float product.
 
 Operator coverage per query is noted in each docstring by SURVEY §2 IDs.
 """
@@ -44,6 +46,14 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def _half_up_ratio(num: str, den: str, scale: int, div: str = "div") -> str:
+    """SQL for ``scale · num / den`` rounded half up, in integer
+    arithmetic (``num >= 0``, ``den > 0``): ``(2·num·scale + den) div
+    (2·den)``. ``div`` is Spark SQL's integer division; DuckDB spells it
+    ``//``."""
+    return f"(2 * ({num}) * {scale} + ({den})) {div} (2 * ({den}))"
 
 
 # ---------------------------------------------------------------------------
@@ -224,7 +234,8 @@ def bm25_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH tok AS (SELECT doc_id, unnest({tokens_sql('text')}) AS term FROM documents),
 dl AS (SELECT doc_id, count(*) AS dl FROM tok GROUP BY doc_id)
 SELECT (SELECT count(*) FROM documents) AS n_docs,
-       CAST(round(avg(dl) * 1000000) AS BIGINT) AS avgdl_micro,
+       CAST({_half_up_ratio('sum(dl)', 'count(*)', 10**6, '//')} AS BIGINT)
+         AS avgdl_micro,
        CAST(sum(dl) AS BIGINT) AS total_tokens,
        (SELECT count(DISTINCT term) FROM tok) AS vocab_size
 FROM dl
@@ -242,7 +253,8 @@ def corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg("dl") * 1e6).cast("bigint").alias("avgdl_micro"),
+        F.expr(_half_up_ratio("sum(dl)", "count(1)", 10**6))
+        .cast("bigint").alias("avgdl_micro"),
         F.sum("dl").cast("bigint").alias("total_tokens"),
     )
     return agg.crossJoin(vocab)
@@ -4719,8 +4731,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_sequences,
        CAST(SUM(filled) AS BIGINT) AS total_tokens,
        CAST(SUM(n_docs) AS BIGINT) AS total_spans,
        CAST(MAX(n_docs) AS BIGINT) AS max_docs_per_seq,
-       CAST(round(SUM(filled) * 1000.0 / (COUNT(*) * {_PACK_LEN}), 0)
-            AS BIGINT) AS fill_rate_milli
+       CAST({_half_up_ratio('SUM(filled)', f'COUNT(*) * {_PACK_LEN}', 1000,
+                            '//')} AS BIGINT) AS fill_rate_milli
 FROM seqs
 """
 
@@ -4729,8 +4741,8 @@ FROM seqs
 def packing_stats_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packing-plan budget summary (packing.packing_stats): sequence
     count, packed-token totals, span count, worst-case docs per
-    sequence, and the fill rate (milli-units, rounded BIGINT so the
-    float never enters the hash compare)."""
+    sequence, and the fill rate ``total_tokens / (n_sequences ·
+    seq_len)`` in milli-units, rounded half up in integer arithmetic."""
     from .operators.packing import pack_sequences, packing_stats
 
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 300)
@@ -4738,9 +4750,9 @@ def packing_stats_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = packing_stats(plan, seq_len=_PACK_LEN)
     return s.select(
         "n_sequences", "total_tokens", "total_spans", "max_docs_per_seq",
-        F.round(F.col("fill_rate") * 1000.0, 0).cast("bigint").alias(
-            "fill_rate_milli"
-        ),
+        F.expr(_half_up_ratio(
+            "total_tokens", f"n_sequences * {_PACK_LEN}", 1000
+        )).cast("bigint").alias("fill_rate_milli"),
     )
 
 

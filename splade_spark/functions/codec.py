@@ -64,23 +64,26 @@ def varint_encode(values: np.ndarray) -> bytes:
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
-    """Decode concatenated LEB128 varints back to uint64."""
+    """Decode concatenated LEB128 varints back to uint64.
+
+    A value's 7-bit groups share no bits, so the sum of its shifted
+    groups equals their OR: one ``add.reduceat`` over each value's byte
+    group. A buffer of terminal bytes only (one-byte values) is returned
+    as is. Raises ``ValueError`` when the last byte still has its
+    continuation bit set (a truncated varint)."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    ends = np.nonzero(is_last)[0]
-    n_values = ends.size
-    value_idx = np.zeros(b.size, dtype=np.int64)
-    value_idx[1:] = np.cumsum(is_last[:-1].astype(np.int64))
-    starts = np.empty(n_values, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    within = np.arange(b.size, dtype=np.int64) - starts[value_idx]
+    if b.size == 0 or b.max() < 0x80:
+        return b.astype(np.uint64)
+    if b[-1] >= 0x80:
+        raise ValueError(
+            "varint_decode: truncated input, the last byte has its "
+            "continuation bit set"
+        )
+    ends = (b < 0x80).nonzero()[0]
+    starts = np.concatenate(([0], ends[:-1] + 1))
+    within = np.arange(b.size) - starts.repeat(ends - starts + 1)
     contrib = (b & 0x7F).astype(np.uint64) << (within.astype(np.uint64) * _SEVEN)
-    values = np.zeros(n_values, dtype=np.uint64)
-    np.bitwise_or.at(values, value_idx, contrib)
-    return values
+    return np.add.reduceat(contrib, starts)
 
 
 def weight_width(value_dtype: str) -> int:
@@ -117,8 +120,7 @@ def decode_block(doc_gaps: bytes, weights: bytes) -> tuple[np.ndarray, np.ndarra
     way out — the reference's read path, script/index.py:88-94), 4 is f32.
     Consumers therefore always see float32 regardless of the storage knob.
     """
-    gaps = varint_decode(doc_gaps).astype(np.int64)
-    doc_idx = np.cumsum(gaps)
+    doc_idx = varint_decode(doc_gaps).view(np.int64).cumsum()
     if doc_idx.size and len(weights) == 2 * doc_idx.size:
         w = np.frombuffer(weights, dtype="<f2").astype("<f4")
     else:

@@ -45,10 +45,12 @@ Three physical strategies over the same compressed index:
   in-process against a memory-mapped index
   (/root/reference/src/indexing/sparse_index.py:502-536,661-755). The
   server holds ONE index (or index shard) resident: term dictionary,
-  compressed blocks, doc-id map; each query runs the same WAND kernel
-  with ZERO Spark jobs → p50 in the low milliseconds. At web scale you
-  run one server per doc-range shard and merge per-shard top-k (scores
-  of a doc live entirely in its shard).
+  compressed blocks, doc-id map; each query decodes its terms' blocks
+  into a dense score buffer over the node's doc range (the reference's
+  ``scores[doc] += q_w·d_w`` loop) with ZERO Spark jobs → p50 below a
+  millisecond at 5k docs. At web scale you run one server per doc-range
+  shard and merge per-shard top-k (scores of a doc live entirely in its
+  shard).
 """
 
 from __future__ import annotations
@@ -358,7 +360,11 @@ def _wand_topk(
     wts: list,
     k: int,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Shared block-max WAND kernel over one query's candidate blocks.
+    """The distributed block-max WAND kernel (``score_wand``, via
+    ``_wand_group``) over one query's candidate blocks. Served nodes use
+    the dense ``LocalIndexServer._accumulate`` instead: at serving sizes
+    the θ-cut skipped no block while its merges cost more than a dense
+    buffer.
 
     Returns (doc_idx int64, score float32) of the top-k, ranked by
     (score desc, doc_idx asc). LINEAR in decoded postings: candidates are
@@ -619,12 +625,16 @@ def load_term_info(term_dict: DataFrame) -> dict[str, int]:
 class LocalIndexServer:
     """Warm in-process serving handle: the whole index (term dict,
     compressed blocks, doc-id map) resident in this process, queries
-    answered by the shared WAND kernel with zero Spark jobs — the
-    reference's own serving shape (it memory-maps term_ptr/postings and
-    scores in-process, /root/reference/src/indexing/sparse_index.py:502-536,
-    661-755). One server holds ONE index shard; at web scale, shard by
-    doc range and let :class:`~.sharding.ShardedServer` merge per-shard
-    top-k."""
+    answered with zero Spark jobs — the reference's own serving shape (it
+    memory-maps term_ptr/postings and scores in-process into a dense
+    score buffer, reference sparse_index.py:502-536,661-755). Blocks
+    stay compressed and are decoded per query; ``_accumulate`` adds them
+    into a dense f64 buffer over this node's doc range (the one kernel
+    of OR nodes, AND (web) nodes and the broker's nodes) and ``_rank``
+    takes the top-k. One server holds ONE index shard; at web scale,
+    shard by doc range and let :class:`~.sharding.ShardedServer` merge
+    per-shard top-k (its routing bound is the shard-level block-max
+    pruning)."""
 
     def __init__(self, index: InvertedIndex):
         # Arrow-batched transfers (toPandas) — a row-at-a-time collect() of
@@ -732,7 +742,8 @@ class LocalIndexServer:
 
     def search(self, text: str, k: int = 10) -> list[tuple[str, float]]:
         """BM25/bag-of-words serving: tokenize → mirror-sparsified query
-        vector → WAND → [(doc_id, score f32)] ranked (desc, doc_idx asc)."""
+        vector → dense accumulate → [(doc_id, score f32)] ranked
+        (score desc, doc_idx asc)."""
         return self.search_ids(self._parse(text)[0], k)
 
     def search_weighted(
@@ -756,24 +767,55 @@ class LocalIndexServer:
         """Top-k as (global doc_idx int64, score float32) arrays, ranked
         (score desc, doc_idx asc) — the merge currency of the sharded
         broker (sharding.ShardedServer)."""
-        qtfs, maxw, mind, maxd, gaps, wts = [], [], [], [], [], []
-        for tid, qw in sorted(self._sparsify(qtf_by_tid)):
-            for mw_, lo, hi, g, wbytes in self.by_term.get(tid, ()):
-                qtfs.append(qw)
-                maxw.append(mw_)
-                mind.append(lo)
-                maxd.append(hi)
-                gaps.append(g)
-                wts.append(wbytes)
-        if not gaps:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
-        return _wand_topk(
-            np.asarray(qtfs, dtype=np.float32),
-            np.asarray(maxw, dtype=np.float32),
-            np.asarray(mind, dtype=np.int64),
-            np.asarray(maxd, dtype=np.int64),
-            gaps, wts, k,
-        )
+        return self._rank(*self._accumulate(self._sparsify(qtf_by_tid)), k)
+
+    def _accumulate(
+        self, weights, every_term: bool = False
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """The served scoring kernel, shared by OR (this class) and AND
+        (webserve.WebQueryServer) nodes: (global doc_idx ascending, f64
+        score sums) of the candidates of a (term_id, qw) query vector.
+
+        Every block of every query term is decoded and added into a dense
+        f64 buffer over this node's doc range — f32 products, f64 sums
+        (the A1 contract) — while an int32 buffer counts the query terms
+        each doc holds. A plain fancy-index ``+=`` is exact: a block holds
+        distinct docs and a term's blocks are disjoint. Candidates are
+        docs hit by any term, or with ``every_term`` (implicit AND) by
+        every term; counting hits rather than testing ``sum > 0`` keeps a
+        doc whose only posting weighs 0, as the exhaustive plan does.
+        Cost: two arrays of ``len(doc_ids)`` per query (12 bytes per doc)."""
+        weights = sorted(weights)
+        need = len(weights) if every_term else 1
+        acc = np.zeros(len(self.doc_ids), dtype=np.float64)
+        hits = np.zeros(len(self.doc_ids), dtype=np.int32)
+        for tid, qw in weights:
+            blocks = self.by_term.get(tid, ())
+            if every_term and not blocks:
+                return np.empty(0, dtype=np.int64), np.empty(0)
+            qw = np.float32(qw)
+            for _, _, _, g, wbytes in blocks:
+                d, w = decode_block(g, wbytes)
+                d -= self.doc_base
+                acc[d] += qw * w
+                hits[d] += 1
+        cand = np.flatnonzero(hits >= max(need, 1))
+        return cand + self.doc_base, acc[cand]
+
+    @staticmethod
+    def _rank(
+        docs: np.ndarray, sums: np.ndarray, k: int
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """Top-k of (doc_idx, f64 sums) as (doc_idx, f32 score) ranked
+        (score desc, doc_idx asc). Ties are broken on the ROUNDED f32
+        score, as in the exhaustive plan; the k-th value's ties all
+        survive the partition cut so the doc_idx rule decides them."""
+        scores = sums.astype(np.float32)
+        if 0 < k < scores.size:
+            keep = scores >= np.partition(scores, scores.size - k)[-k]
+            docs, scores = docs[keep], scores[keep]
+        sel = np.lexsort((docs, -scores))[:k]
+        return docs[sel], scores[sel]
 
 
 def local_server(index: InvertedIndex) -> LocalIndexServer:
@@ -789,8 +831,8 @@ def score_local(index: InvertedIndex, q_terms: DataFrame, k: int = 10) -> DataFr
     """Low-latency serving path as a DataFrame: run the warm
     LocalIndexServer per query and lift results back into Spark (one
     createDataFrame, no joins — doc ids decode from the server's resident
-    map). Rank-identical to score_wand/score_exhaustive (same kernel,
-    same f64 accumulation, same tie rule)."""
+    map). Rank-identical to score_wand/score_exhaustive (the served dense
+    kernel: f32 products, f64 accumulation, the same tie rule)."""
     spark = index.postings.sparkSession
     srv = local_server(index)
     by_query: dict[str, dict[int, float]] = {}

@@ -25,7 +25,8 @@ Spark-first design notes (100 TB):
   reads ONLY its shard's files (partition pruning on load); doc_dim is
   partitioned the same way.
 - the tie rule is preserved end-to-end: (score f32 desc, doc_idx asc),
-  identical to the WAND kernel and the exhaustive plan (SURVEY.md §4.3.2).
+  identical to the node kernel, the WAND kernel and the exhaustive plan
+  (SURVEY.md §4.3.2).
 """
 
 from __future__ import annotations
@@ -328,8 +329,9 @@ class ShardedServer:
         number of shards touched changes (``last_shards_visited``). On a
         serving fleet this is the difference between every query hitting
         all S nodes and selective queries hitting the few whose doc
-        ranges actually hold their terms — broker-side block-max pruning,
-        one level above each node's own WAND.
+        ranges actually hold their terms — block-max pruning at shard
+        granularity; inside a visited node the dense kernel
+        (LocalIndexServer._accumulate) scores every block.
         """
         order, bounds = range(len(nodes)), None
         if route:
@@ -338,7 +340,9 @@ class ShardedServer:
                 tm = srv.term_max
                 if every_term and any(tid not in tm for tid, _ in weights):
                     continue  # a missing term kills every AND candidate
-                ub = 0.0  # f64 sum of f32 products — _wand_topk parity
+                # f64 sum of f32 products, the node kernel's arithmetic
+                # (LocalIndexServer._accumulate)
+                ub = 0.0
                 for tid, qw in weights:
                     mw = tm.get(tid)
                     if mw is not None:

@@ -44,7 +44,14 @@ import numpy as np
 import pandas as pd
 
 from ..config import DEFAULT
-from ..functions.codec import binary_buffers, decode_block, decode_rows
+# decode_block is not called here (LocalIndexServer._accumulate decodes
+# for this node too), but perfbench/tracing.py wraps it by this module's
+# name, so the import stays
+from ..functions.codec import (  # noqa: F401
+    binary_buffers,
+    decode_block,
+    decode_rows,
+)
 from ..functions.tokenize import tokenize_py
 from .indexing import _require_complete
 from .positional import parse_web_query
@@ -172,7 +179,11 @@ class PositionalStore:
 
 class WebQueryServer:
     """The web (AND + phrase) serving node: a warm index shard
-    (LocalIndexServer) + the same doc range's positional slice."""
+    (LocalIndexServer) + the same doc range's positional slice. A query
+    runs the shard's own dense kernel in AND mode
+    (``LocalIndexServer._accumulate(every_term=True)``), keeps the
+    candidates holding every quoted phrase, and ranks them with
+    ``LocalIndexServer._rank``."""
 
     def __init__(self, srv: LocalIndexServer, store: PositionalStore):
         self.srv = srv
@@ -202,53 +213,29 @@ class WebQueryServer:
         (score desc, doc_idx asc) — the broker's merge currency
         (ShardedWebServer), mirroring LocalIndexServer.topk_arrays."""
         srv = self.srv
-        empty = (
-            np.empty(0, dtype=np.int64),
-            np.empty(0, dtype=np.float32),
-        )
         qtf, known = srv._parse(raw)
-        if not known or not qtf:
-            return empty  # OOV token: implicit AND can never hold
-        d_parts, s_parts = [], []
-        for tid in sorted(qtf):
-            blocks = srv.by_term.get(tid, ())
-            if not blocks:
-                return empty  # term absent from this shard: no AND match
-            qw = np.float32(qtf[tid])
-            for _, _, _, g, wbytes in blocks:
-                d, w = decode_block(g, wbytes)
-                d_parts.append(d)
-                # A1 contract: f32 products, f64 accumulation
-                s_parts.append(
-                    (qw * w.astype(np.float32)).astype(np.float64)
+        # an unknown token: implicit AND can never hold (no weights → no
+        # candidates); otherwise the AND candidates of the shared kernel
+        cand, csum = srv._accumulate(
+            qtf.items() if known else (), every_term=True
+        )
+        if cand.size:
+            # the index's own max_tokens (from saved meta) must govern the
+            # phrase parse too — an empty-after-tokenize quoted segment is
+            # pruned only under the SAME truncation rule the distributed
+            # retrieve_web(cfg=...) path applies, keeping served/distributed
+            # rank identity for non-default configs.
+            for ph in parse_web_query(
+                raw, replace(DEFAULT, max_tokens=srv.max_tokens)
+            ):
+                hit = self.store.docs_with_phrase(
+                    tokenize_py(ph, srv.max_tokens)
                 )
-        docs = np.concatenate(d_parts)
-        prods = np.concatenate(s_parts)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        sums = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(sums, inv, prods)
-        cnt = np.zeros(uniq.size, dtype=np.int64)
-        np.add.at(cnt, inv, 1)  # blocks hold disjoint docs within a term
-        mask = cnt == len(qtf)
-        cand, csum = uniq[mask], sums[mask]
-        if cand.size == 0:
-            return empty
-        # the index's own max_tokens (from saved meta) must govern the
-        # phrase parse too — an empty-after-tokenize quoted segment is
-        # pruned only under the SAME truncation rule the distributed
-        # retrieve_web(cfg=...) path applies, keeping served/distributed
-        # rank identity for non-default configs.
-        for ph in parse_web_query(
-            raw, replace(DEFAULT, max_tokens=srv.max_tokens)
-        ):
-            hit = self.store.docs_with_phrase(tokenize_py(ph, srv.max_tokens))
-            keep = np.isin(cand, self.store_doc_idx[hit])
-            cand, csum = cand[keep], csum[keep]
-            if cand.size == 0:
-                return empty
-        scores = csum.astype(np.float32)
-        order = np.lexsort((cand, -scores.astype(np.float64)))[:k]
-        return cand[order], scores[order]
+                keep = np.isin(cand, self.store_doc_idx[hit])
+                cand, csum = cand[keep], csum[keep]
+                if cand.size == 0:
+                    break
+        return srv._rank(cand, csum, k)
 
 
 class ShardedWebServer(ShardedServer):

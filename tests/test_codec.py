@@ -2,6 +2,7 @@ import pathlib
 import re
 
 import numpy as np
+import pytest
 
 import splade_spark
 from splade_spark.functions.codec import (
@@ -28,6 +29,35 @@ def test_varint_roundtrip_random():
 def test_varint_empty():
     assert varint_encode(np.array([], dtype=np.uint64)) == b""
     assert varint_decode(b"").size == 0
+
+
+def test_varint_boundary_values():
+    """The one-byte limit, the first two-byte value and the 64-bit top:
+    2^63 and 2^64 - 1 take ten bytes, the last holding bit 63."""
+    vals = np.array([0, 127, 128, 2**63, 2**64 - 1], dtype=np.uint64)
+    buf = varint_encode(vals)
+    assert len(buf) == 1 + 1 + 2 + 10 + 10
+    out = varint_decode(buf)
+    assert out.dtype == np.uint64
+    assert np.array_equal(out, vals)
+    for v in vals:
+        assert varint_decode(varint_encode(np.array([v], np.uint64)))[0] == v
+
+
+def test_varint_all_one_byte_and_empty_buffers():
+    buf = bytes(range(128)) * 3
+    out = varint_decode(buf)
+    assert out.dtype == np.uint64
+    assert np.array_equal(out, np.tile(np.arange(128, dtype=np.uint64), 3))
+    empty = varint_decode(b"")
+    assert empty.dtype == np.uint64 and empty.size == 0
+
+
+@pytest.mark.parametrize("buf", [b"\x80", b"\x05\xff", b"\x01\x80\x80"])
+def test_varint_truncated_input_raises(buf):
+    """A last byte with its continuation bit set is a truncated varint."""
+    with pytest.raises(ValueError, match="truncated"):
+        varint_decode(buf)
 
 
 def test_varint_single_byte_values_compact():

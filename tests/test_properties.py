@@ -1,11 +1,12 @@
 """Property-based tests (hypothesis) for the pure-Python/NumPy kernels —
 the pieces whose edge cases hand-picked examples miss: the varint/block
-codec (both storage dtypes), the block-max WAND kernel vs a brute-force
-accumulator, and the WordPiece splitter vs an independent implementation
+codec (both storage dtypes), the block-max WAND kernel and the served
+dense kernel vs a brute-force accumulator, and the WordPiece splitter vs an independent implementation
 of the published HF rules. No Spark session needed — these run in
 milliseconds per example."""
 
 import numpy as np
+import pandas as pd
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -21,7 +22,7 @@ from splade_spark.functions.codec import (
     varint_encode,
 )
 from splade_spark.functions.subword import split_word_wordpiece
-from splade_spark.operators.query import _wand_topk
+from splade_spark.operators.query import LocalIndexServer, _wand_topk
 
 # ---------------------------------------------------------------------------
 # codec
@@ -195,6 +196,94 @@ def test_wand_kernel_equals_brute_force(blocks):
     assert len(got) == len(want)
     for (gs, gd), (ws, wd) in zip(got, want):
         assert gd == wd and np.float32(gs) == ws, (got, want)
+
+
+# ---------------------------------------------------------------------------
+# served dense kernel (LocalIndexServer) vs brute force
+# ---------------------------------------------------------------------------
+
+
+@st.composite
+def _served_node(draw):
+    """A node over doc range [base, base + n_docs) with base > 0: per
+    term, postings split into 1-3 doc-disjoint blocks, weights on a
+    small grid (heavy score ties), one posting of weight 0, and a query
+    over some of the terms plus one term with no postings."""
+    base = draw(st.integers(min_value=1, max_value=10**6))
+    n_docs = draw(st.integers(min_value=1, max_value=60))
+    n_terms = draw(st.integers(min_value=1, max_value=5))
+    rng = np.random.RandomState(
+        draw(st.integers(min_value=0, max_value=2**31 - 1))
+    )
+    postings = {}  # term_id -> (doc_idx, f32 weights)
+    for tid in range(n_terms):
+        docs = np.flatnonzero(rng.rand(n_docs) < rng.uniform(0.05, 0.9))
+        if docs.size:
+            w = (rng.randint(1, 40, size=docs.size) / 8.0).astype(np.float32)
+            postings[tid] = (docs.astype(np.int64) + base, w)
+    if postings:
+        t0 = sorted(postings)[rng.randint(len(postings))]
+        postings[t0][1][rng.randint(postings[t0][0].size)] = 0.0
+    rows = []
+    for tid, (docs, w) in postings.items():
+        cuts = np.sort(rng.choice(
+            np.arange(1, docs.size), size=min(rng.randint(3), docs.size - 1),
+            replace=False,
+        ))
+        for d, wb in zip(np.split(docs, cuts), np.split(w, cuts)):
+            g, wbytes = encode_block(d, wb)
+            rows.append((tid, float(wb.max()), int(d[0]), int(d[-1]), g,
+                         wbytes))
+    pdf = pd.DataFrame(rows, columns=[
+        "term_id", "max_weight", "min_doc", "max_doc", "doc_gaps", "weights",
+    ])
+    doc_idx = np.arange(base, base + n_docs)
+    dd = pd.DataFrame({"doc_idx": doc_idx, "doc_id": [f"d{i}" for i in doc_idx]})
+    srv = LocalIndexServer._from_frames({}, {}, pdf, dd)
+    picked = [t for t in range(n_terms) if rng.rand() < 0.7] or [0]
+    qtf = {t: float(rng.randint(1, 4)) for t in picked + [n_terms]}
+    k = draw(st.integers(min_value=1, max_value=15))
+    return srv, postings, qtf, k
+
+
+@given(_served_node())
+@settings(max_examples=150, deadline=None)
+def test_served_kernel_equals_brute_force(node):
+    """OR top-k equals the brute-force f64 sum of f32 products under the
+    tie rule (score f32 desc, doc_idx asc), k above the candidate count
+    included; the AND kernel returns exactly the docs holding every
+    query term, with the same sums; a weight-0 posting still makes its
+    doc a candidate."""
+    srv, postings, qtf, k = node
+    sums: dict[int, float] = {}
+    terms_of: dict[int, int] = {}
+    for tid in sorted(qtf):
+        docs, w = postings.get(tid, ((), ()))
+        for d, wi in zip(docs, w):
+            p = float(np.float32(np.float32(qtf[tid]) * wi))
+            sums[int(d)] = sums.get(int(d), 0.0) + p
+            terms_of[int(d)] = terms_of.get(int(d), 0) + 1
+    want = sorted(
+        ((np.float32(s), d) for d, s in sums.items()),
+        key=lambda t: (-t[0], t[1]),
+    )[:k]
+    docs, scores = srv.topk_arrays(qtf, k)
+    assert docs.dtype == np.int64 and scores.dtype == np.float32
+    assert list(zip(scores.tolist(), docs.tolist())) == [
+        (float(s), d) for s, d in want
+    ]
+
+    every = len(qtf) if all(t in postings for t in qtf) else -1
+    and_docs = sorted(d for d, n in terms_of.items() if n == every)
+    got_d, got_s = srv._accumulate(qtf.items(), every_term=True)
+    assert got_d.tolist() == and_docs
+    assert got_s.tolist() == [sums[d] for d in and_docs]
+    # the query with its posting-less term dropped has AND candidates too
+    known = {t: q for t, q in qtf.items() if t in postings}
+    and_known = sorted(d for d, n in terms_of.items() if n == len(known))
+    got_d, got_s = srv._accumulate(known.items(), every_term=True)
+    assert got_d.tolist() == and_known
+    assert got_s.tolist() == [sums[d] for d in and_known]
 
 
 # ---------------------------------------------------------------------------
