@@ -73,9 +73,3 @@ class EngineConfig:
 
 
 DEFAULT = EngineConfig()
-
-
-def bm25_idf_expr_sql(n_docs: str, df: str) -> str:
-    """Robertson-Sparck-Jones IDF as a SQL fragment (ANSI, runs on both
-    Spark SQL and DuckDB): ln(1 + (N - df + 0.5) / (df + 0.5))."""
-    return f"ln(1.0 + ({n_docs} - {df} + 0.5) / ({df} + 0.5))"

@@ -732,8 +732,8 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM per_doc) AS n_docs,
        CAST(round(CAST(s.mx AS DOUBLE) * 1000000) AS BIGINT) AS max_weight_micro,
        CAST(round(sqrt(s.sww / s.n_entries - (s.sw / s.n_entries) * (s.sw / s.n_entries))
                   * 1000000) AS BIGINT) AS stddev_weight_micro,
-       CAST(round((SELECT avg(CAST(n AS DOUBLE)) FROM per_doc) * 1000) AS BIGINT)
-         AS avg_active_milli
+       (SELECT CAST({_half_up_ratio('sum(n)', 'count(*)', 1000, '//')} AS BIGINT)
+          FROM per_doc) AS avg_active_milli
 FROM s
 """
 
@@ -743,7 +743,9 @@ def expansion_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running moment / activation statistics over the expansion weights
     (A8/A11, reference script/experiment/logit_stats.py:18-109: streaming
     count/sum/sumsq/min/max + active-terms-per-doc). Stddev via the
-    explicit sumsq formula on both sides so the algorithms match."""
+    explicit sumsq formula on both sides so the algorithms match;
+    ``avg_active_milli`` is a ratio of integers, so it is rounded half up
+    in integer arithmetic (``_half_up_ratio``)."""
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 200).select(
         "doc_id", "text"
     )
@@ -759,7 +761,8 @@ def expansion_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pd_agg = per_doc.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-        F.avg(F.col("n").cast("double")).alias("avg_active"),
+        F.expr(_half_up_ratio("sum(n)", "count(1)", 1000))
+        .cast("bigint").alias("avg_active_milli"),
     )
     mean = F.col("sw") / F.col("n_entries")
     return s.crossJoin(pd_agg).select(
@@ -771,7 +774,7 @@ def expansion_moment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.sqrt(F.col("sww") / F.col("n_entries") - mean * mean) * 1e6
         ).cast("bigint").alias("stddev_weight_micro"),
-        F.round(F.col("avg_active") * 1000).cast("bigint").alias("avg_active_milli"),
+        "avg_active_milli",
     )
 
 

@@ -88,8 +88,3 @@ def gen_qrels(queries: pd.DataFrame, pages: pd.DataFrame, seed: int = 44) -> pd.
             rel = 2.0 if j == 0 else float(rng.integers(0, 3))
             rows.append((qid, urls[int(p)], rel))
     return pd.DataFrame(rows, columns=["query_id", "doc_id", "relevance"])
-
-
-def pages_to_spark(spark, pdf: pd.DataFrame):
-    sdf = spark.createDataFrame(pdf)
-    return sdf

@@ -11,8 +11,10 @@ produce the same global rank for a given key set).
 Physical plan (terasort pattern, all JVM — no Python workers):
   repartitionByRange(key) → sortWithinPartitions(key) → persist →
   per-partition counts (1 small job) → driver prefix-sums →
-  monotonically_increasing_id decomposed into (partition, row) +
-  broadcast join against the tiny (partition → offset) table.
+  ``id = offsets[spark_partition_id()] + row``, where ``row`` is the low
+  bits of monotonically_increasing_id and ``offsets`` is the exclusive
+  prefix-sum array, inlined in the plan as one literal (8 bytes per
+  partition) — no offsets table, no join, no broadcast exchange.
 
 A ``Window.orderBy(key)`` row_number would funnel 10^12 rows through ONE
 partition; this stays fully parallel, and the only driver-side state is
@@ -21,6 +23,7 @@ one long per partition.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -36,7 +39,7 @@ def ranged_prefix_offsets(
     num_partitions: int,
     measures: dict[str, Column],
     checkpoint: bool = True,
-) -> tuple[DataFrame, DataFrame, dict[str, int]]:
+) -> tuple[DataFrame, dict[str, list[int]], dict[str, int]]:
     """The terasort prefix-sum scaffold shared by every global-prefix
     operator (doc numbering here, the fused build numbering in
     operators/indexing.py, sequence packing in operators/packing.py):
@@ -46,40 +49,59 @@ def ranged_prefix_offsets(
       driver-side prefix sums (one long per partition per measure).
 
     ``measures`` maps name → aggregate Column (e.g. ``F.count(lit(1))``,
-    ``F.sum("dl")``). Returns ``(ranged, offsets_df, totals)`` where
-    ``offsets_df`` is the tiny broadcastable table
-    ``(_pid, <name>_off …)`` holding each measure's EXCLUSIVE prefix sum
-    in partition order, and ``totals`` the grand totals.
+    ``F.sum("dl")``). Returns ``(ranged, offsets, totals)`` where
+    ``offsets`` maps each measure to its EXCLUSIVE prefix sums in
+    partition order, one per partition id below ``num_partitions`` (a
+    partition with no rows gets the running total), for
+    :func:`partition_prefix`; and ``totals`` the grand totals.
 
     The checkpoint is the scaffold's load-bearing invariant (see
     assign_global_ids below for the full failure modes): without it the
     counts job and later data jobs re-sample range boundaries under
     different column-pruned plans and the per-partition offsets no
-    longer describe the data the join sees. Callers that skip it
+    longer describe the data the later jobs see. Callers that skip it
     (``checkpoint=False``) take on that risk knowingly.
     """
-    names = list(measures)
     ranged = df.repartitionByRange(
         num_partitions, F.col(key)
     ).sortWithinPartitions(key)
     if checkpoint:
         ranged = ranged.localCheckpoint(eager=False)
-    rows = (
-        ranged.groupBy(F.spark_partition_id().alias("_pid"))
+    rows = {
+        int(r["_pid"]): r
+        for r in ranged.groupBy(F.spark_partition_id().alias("_pid"))
         .agg(*[expr.alias(n) for n, expr in measures.items()])
         .collect()
-    )
-    accs = {n: 0 for n in names}
-    offsets = []
-    for r in sorted(rows, key=lambda r: r["_pid"]):
-        offsets.append(
-            tuple([int(r["_pid"])] + [accs[n] for n in names])
-        )
-        for n in names:
-            accs[n] += int(r[n] or 0)
-    schema = ", ".join(["_pid INT"] + [f"{n}_off LONG" for n in names])
-    offsets_df = df.sparkSession.createDataFrame(offsets, schema)
-    return ranged, offsets_df, accs
+    }
+    accs = {n: 0 for n in measures}
+    offsets = {n: [] for n in measures}
+    for pid in range(num_partitions):
+        for n in measures:
+            offsets[n].append(accs[n])
+            if pid in rows:
+                accs[n] += int(rows[pid][n] or 0)
+    return ranged, offsets, accs
+
+
+def partition_prefix(offsets: list[int], pid: Column) -> Column:
+    """The long ``offsets[pid]``, looked up in a literal array. Under
+    ANSI mode an out-of-range ``pid`` raises instead of yielding null."""
+    return F.element_at(F.lit(np.array(offsets, dtype=np.int64)), pid + 1)
+
+
+def row_in_partition() -> Column:
+    """0-based row index within the current partition."""
+    return F.monotonically_increasing_id().bitwiseAND(F.lit(_ROW_MASK))
+
+
+def global_rank(offsets: list[int]) -> Column:
+    """Long 0-based rank of each row of a ``ranged_prefix_offsets``
+    result in key order: its partition's exclusive count prefix plus its
+    row index in the partition. Valid only while each row still sits in
+    its ranged partition (no shuffle in between)."""
+    return (
+        partition_prefix(offsets, F.spark_partition_id()) + row_in_partition()
+    ).cast("long")
 
 
 def assign_global_ids(
@@ -112,16 +134,7 @@ def assign_global_ids(
     n_part = num_partitions or spark.sparkContext.defaultParallelism
     # eager=False checkpoint: materializes inside the counts job (single
     # pass), then the lineage is truncated at the checkpointed blocks
-    ranged, offsets_df, _totals = ranged_prefix_offsets(
+    ranged, offsets, _totals = ranged_prefix_offsets(
         df, key, n_part, {"_n": F.count(F.lit(1))}, checkpoint=persist
     )
-    numbered = ranged.select(
-        "*",
-        F.spark_partition_id().alias("_pid"),
-        F.monotonically_increasing_id().bitwiseAND(F.lit(_ROW_MASK)).alias("_row"),
-    )
-    return (
-        numbered.join(F.broadcast(offsets_df), "_pid")
-        .withColumn(id_col, (F.col("_n_off") + F.col("_row")).cast("long"))
-        .drop("_pid", "_row", "_n_off")
-    )
+    return ranged.withColumn(id_col, global_rank(offsets["_n"]))

@@ -51,7 +51,7 @@ from pyspark.sql.window import Window
 from ..config import DEFAULT, TERMS_PER_TOKEN_BOUND, EngineConfig
 from ..functions.codec import decode_blocks, encode_blocks, weight_width
 from ..functions.tokenize import tokens_col
-from .ids import _ROW_MASK, assign_global_ids, ranged_prefix_offsets
+from .ids import assign_global_ids, global_rank, ranged_prefix_offsets
 
 POSTINGS_SCHEMA = (
     "term_id BIGINT, block_id INT, n_postings INT, min_doc BIGINT, "
@@ -151,7 +151,7 @@ def _number_docs_with_stats(
     # corpus-stats totals riding the same per-partition counts job; the
     # lazy localCheckpoint inside it carries the id-stability +
     # cache-invalidation rationale documented on ids.assign_global_ids
-    ranged, offsets_df, totals = ranged_prefix_offsets(
+    ranged, offsets, totals = ranged_prefix_offsets(
         toks, "doc_id", num_partitions,
         {"_n": F.count(F.lit(1)), "_dl": F.sum("dl")},
     )
@@ -160,16 +160,7 @@ def _number_docs_with_stats(
         raise ValueError("build_index: corpus is empty — nothing to index")
     total_tokens = totals["_dl"]
     avgdl = total_tokens / n_docs
-    numbered = ranged.select(
-        "*",
-        F.spark_partition_id().alias("_pid"),
-        F.monotonically_increasing_id().bitwiseAND(F.lit(_ROW_MASK)).alias("_row"),
-    )
-    numbered = (
-        numbered.join(F.broadcast(offsets_df), "_pid")
-        .withColumn("doc_idx", (F.col("_n_off") + F.col("_row")).cast("long"))
-        .drop("_pid", "_row", "_n_off", "_dl_off")
-    )
+    numbered = ranged.withColumn("doc_idx", global_rank(offsets["_n"]))
     return numbered, (n_docs, avgdl, total_tokens)
 
 

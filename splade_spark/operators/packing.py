@@ -25,15 +25,15 @@ partition; this module reuses the terasort pattern from
 ``operators.ids.assign_global_ids`` — repartitionByRange(id) →
 sortWithinPartitions → one small per-partition totals job → driver
 prefix-sums the per-PARTITION token totals (one long per partition) →
-broadcast the offsets back. The in-partition cumsum is a window
-partitioned BY the physical partition, so it runs fully parallel
-(plan-audited: Window(partitionBy _pid) + BroadcastHashJoin for the
-offsets). Catalyst cannot see the checkpointed RDD's partitioning, so
-the window inserts one extra hash exchange on _pid — but that shuffle
-carries only (key, dl, pid, row), never the corpus, and hashing on
-_pid keeps whole partitions together. Two narrow shuffles total; the
-explode that follows emits one row per (doc, overlapped sequence) —
-~1 + dl/seq_len rows per doc.
+inline them in the plan as one literal array indexed by partition id.
+The in-partition cumsum is a window partitioned BY the physical
+partition, so it runs fully parallel (plan-audited: Window(partitionBy
+_pid), no join for the offsets). Catalyst cannot see the checkpointed
+RDD's partitioning, so the window inserts one extra hash exchange on
+_pid — but that shuffle carries only (key, dl, pid, row), never the
+corpus, and hashing on _pid keeps whole partitions together. Two narrow
+shuffles total; the explode that follows emits one row per (doc,
+overlapped sequence) — ~1 + dl/seq_len rows per doc.
 """
 
 from __future__ import annotations
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
 from ..functions.tokenize import tokens_col
-from .ids import _ROW_MASK, ranged_prefix_offsets
+from .ids import partition_prefix, ranged_prefix_offsets, row_in_partition
 
 
 def pack_sequences(
@@ -85,7 +85,7 @@ def pack_sequences(
     # (ids.ranged_prefix_offsets) whose lazy checkpoint guards against
     # range-boundary re-sampling across jobs (failure modes documented
     # on ids.assign_global_ids).
-    ranged, offsets_df, _totals = ranged_prefix_offsets(
+    ranged, offsets, _totals = ranged_prefix_offsets(
         dl, "_key", n_part, {"_tok": F.sum("dl")}
     )
 
@@ -97,9 +97,7 @@ def pack_sequences(
     part = ranged.select(
         "*",
         F.spark_partition_id().alias("_pid"),
-        F.monotonically_increasing_id()
-        .bitwiseAND(F.lit(_ROW_MASK))
-        .alias("_row"),
+        row_in_partition().alias("_row"),
     )
     w = (
         Window.partitionBy("_pid")
@@ -108,11 +106,13 @@ def pack_sequences(
     )
     off = (
         part.withColumn("_local_off", F.coalesce(F.sum("dl").over(w), F.lit(0)))
-        .join(F.broadcast(offsets_df), "_pid")
         .select(
             F.col("_key"),
             F.col("dl"),
-            (F.col("_tok_off") + F.col("_local_off")).alias("off"),
+            # the window re-shuffled the rows, so the partition is the
+            # _pid column, not spark_partition_id()
+            (partition_prefix(offsets["_tok"], F.col("_pid"))
+             + F.col("_local_off")).alias("off"),
         )
         .filter(F.col("dl") > 0)
     )

@@ -57,6 +57,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -174,6 +175,18 @@ def _collect_q_terms(q_terms: DataFrame) -> list:
     return rows
 
 
+def _q_local(spark, rows: list) -> DataFrame:
+    """The collected (query_id, term_id, qtf) rows as a literal local
+    relation. It is built from a pyarrow table: a ``LocalRelation`` that
+    runs no Python task, where a Python list would become a Python-RDD
+    scan paying a Python worker task per partition on every execution."""
+    return spark.createDataFrame(pa.table({
+        "query_id": pa.array([r["query_id"] for r in rows], pa.string()),
+        "term_id": pa.array([r["term_id"] for r in rows], pa.int64()),
+        "qtf": pa.array([r["qtf"] for r in rows], pa.float32()),
+    }))
+
+
 def _candidate_blocks(
     index: InvertedIndex, q_terms: DataFrame, rows: list | None = None
 ) -> DataFrame:
@@ -193,10 +206,7 @@ def _candidate_blocks(
         return spark.createDataFrame([], schema=_Q_SCHEMA).join(
             index.postings, "term_id"
         )
-    q_local = spark.createDataFrame(
-        [(r["query_id"], r["term_id"], r["qtf"]) for r in rows],
-        schema="query_id string, term_id bigint, qtf float",
-    )
+    q_local = _q_local(spark, rows)
     terms = sorted({r["term_id"] for r in rows})
     base = index.postings
     if len(terms) <= _ISIN_PUSHDOWN_CAP:
@@ -569,10 +579,7 @@ def _wand_scores_sharded(
     from .sharding import shard_blocks
 
     spark = index.postings.sparkSession
-    q_local = spark.createDataFrame(
-        [(r["query_id"], r["term_id"], r["qtf"]) for r in rows],
-        schema="query_id string, term_id bigint, qtf float",
-    )
+    q_local = _q_local(spark, rows)
     base = index.postings
     terms = sorted({r["term_id"] for r in rows})
     if len(terms) <= _ISIN_PUSHDOWN_CAP:

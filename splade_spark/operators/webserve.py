@@ -23,10 +23,12 @@ layout (positional.save_positional) — load only this shard's doc range,
 and optionally only a query-vocabulary subset (`terms=`), which at
 serving time is the live query stream's vocabulary, not the corpus's.
 Each term's positions are one sorted int64 array of packed
-``doc << shift | pos`` keys, so a phrase is matched by one whole-array
-intersect per extra slot (that slot's keys shifted back by its offset)
-— the distributed matcher's shifted-position join, with no Python loop
-over docs or candidates.
+``doc << shift | pos`` keys. A phrase is anchored on its rarest slot:
+that slot's keys, shifted back by its offset and kept only for docs
+that are already AND candidates, are the phrase starts, and every other
+slot is probed with one ``searchsorted`` over its keys — the
+distributed matcher's shifted-position join, with no Python loop over
+docs or candidates and no sort of a whole key array per query.
 
 Score parity: products f32, accumulation f64, final score f32 — the
 engine's A1 contract — and the (score desc, doc_idx asc) tie rule, so
@@ -66,9 +68,11 @@ class PositionalStore:
     number is its index there. ``keys`` maps each term to one sorted,
     unique int64 array of ``doc << shift | pos``. ``shift`` is the bit
     length of the largest stored position, so a position never reaches
-    the doc bits; and a key is shifted back by a slot offset ``off`` only
-    if its position is at least ``off``, so no subtraction borrows from
-    the doc bits and aliases a doc into its neighbour."""
+    the doc bits. A key is shifted back by a slot offset ``off`` only if
+    its position is at least ``off``, and forward only if its position
+    plus ``off`` still fits under the doc bits, so no subtraction borrows
+    from (and no addition carries into) the doc bits and aliases a doc
+    into its neighbour."""
 
     def __init__(self, doc_ids: np.ndarray, shift: int,
                  keys: dict[str, np.ndarray]):
@@ -158,23 +162,46 @@ class PositionalStore:
             t: k[keep[k >> self.shift]] for t, k in self.keys.items()
         })
 
-    def docs_with_phrase(self, ptoks: list[str]) -> np.ndarray:
+    def docs_with_phrase(
+        self, ptoks: list[str], among: np.ndarray | None = None
+    ) -> np.ndarray:
         """Store doc numbers (ascending, unique) containing the exact
-        phrase: the first slot's keys are the candidate starts, and each
-        later slot ``off`` keeps the starts found among its own keys
-        shifted back by ``off``."""
+        phrase, restricted to the sorted store doc numbers ``among`` when
+        given.
+
+        The phrase is anchored on its rarest slot ``a``: that slot's keys
+        at position ``>= a``, shifted back by ``a``, are the candidate
+        starts (no borrow from the doc bits). Each other slot ``off``
+        drops the starts whose position plus ``off`` would carry into the
+        doc bits — no stored position is that large — and keeps a start
+        only if ``start + off`` is among its own keys, found by one binary
+        search per start. The cost is O(anchors · log keys) per extra
+        slot, not a sort of both slots' keys."""
         lists = [self.keys.get(t) for t in ptoks]
         if not lists or any(k is None for k in lists):
             return np.empty(0, dtype=np.int64)
         mask = (1 << self.shift) - 1
-        starts = lists[0]
-        for off, k in enumerate(lists[1:], 1):
-            starts = np.intersect1d(
-                starts, k[(k & mask) >= off] - off, assume_unique=True
-            )
+        a = int(np.argmin([k.size for k in lists]))
+        starts = lists[a][(lists[a] & mask) >= a] - a
+        if among is not None:
+            starts = starts[_in_sorted(starts >> self.shift, among)]
+        for off, k in enumerate(lists):
+            if off == a:
+                continue
+            starts = starts[(starts & mask) + off <= mask]
+            starts = starts[_in_sorted(starts + off, k)]
             if starts.size == 0:
                 break
         return np.unique(starts >> self.shift)
+
+
+def _in_sorted(values: np.ndarray, keys: np.ndarray) -> np.ndarray:
+    """Boolean mask of ``values`` present in the sorted array ``keys``:
+    one ``searchsorted`` plus an equality check."""
+    i = np.searchsorted(keys, values)
+    hit = i < keys.size
+    hit[hit] = keys[i[hit]] == values[hit]
+    return hit
 
 
 class WebQueryServer:
@@ -182,7 +209,8 @@ class WebQueryServer:
     (LocalIndexServer) + the same doc range's positional slice. A query
     runs the shard's own dense kernel in AND mode
     (``LocalIndexServer._accumulate(every_term=True)``), keeps the
-    candidates holding every quoted phrase, and ranks them with
+    candidates holding every quoted phrase (each phrase is matched only
+    among the surviving candidates), and ranks them with
     ``LocalIndexServer._rank``."""
 
     def __init__(self, srv: LocalIndexServer, store: PositionalStore):
@@ -194,6 +222,11 @@ class WebQueryServer:
         self.store_doc_idx = np.array(
             [node.get(d, -1) for d in store.doc_ids], dtype=np.int64
         )
+        # and its inverse over the node's doc range: doc_idx - doc_base ->
+        # store doc number (-1: no positional rows)
+        here = np.flatnonzero(self.store_doc_idx >= 0)
+        self.doc_store = np.full(len(srv.doc_ids), -1, dtype=np.int64)
+        self.doc_store[self.store_doc_idx[here] - srv.doc_base] = here
 
     def search(self, raw: str, k: int = 10) -> list[tuple[str, float]]:
         """'"exact phrase" bare terms' → [(doc_id, score f32)] — docs
@@ -228,8 +261,10 @@ class WebQueryServer:
             for ph in parse_web_query(
                 raw, replace(DEFAULT, max_tokens=srv.max_tokens)
             ):
+                among = self.doc_store[cand - srv.doc_base]
                 hit = self.store.docs_with_phrase(
-                    tokenize_py(ph, srv.max_tokens)
+                    tokenize_py(ph, srv.max_tokens),
+                    np.sort(among[among >= 0]),
                 )
                 keep = np.isin(cand, self.store_doc_idx[hit])
                 cand, csum = cand[keep], csum[keep]

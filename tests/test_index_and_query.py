@@ -151,6 +151,35 @@ def test_strategies_equal_exhaustive(spark, corpus, spark_index, other):
             assert np.isclose(sa, sb, rtol=0, atol=2e-6), key
 
 
+def test_assign_global_ids_sparse_ranges_without_broadcast(spark):
+    from splade_spark.operators.ids import assign_global_ids
+
+    keys = spark.createDataFrame([("k2",), ("k0",), ("k1",)], "key string")
+    numbered = assign_global_ids(keys, "key", "id", num_partitions=8)
+    got = sorted((r["id"], r["key"]) for r in numbered.collect())
+    assert got == [(0, "k0"), (1, "k1"), (2, "k2")]
+    # the per-partition offsets are one literal, not a joined table
+    plan = numbered._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan
+
+
+def test_candidate_blocks_query_side_is_local_relation(spark, corpus,
+                                                       spark_index):
+    import re
+
+    from splade_spark.operators.query import _candidate_blocks, encode_queries
+
+    _, queries = corpus
+    qdf = spark.createDataFrame(queries[["query_id", "text"]].head(5))
+    q_terms = encode_queries(qdf, spark_index.term_dict, CFG, spark_index.meta)
+    plan = _candidate_blocks(spark_index, q_terms)._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    # collected query rows re-enter the plan as a LocalRelation, which no
+    # Python task scans; a Python list would show a LogicalRDD instead
+    assert re.search(r"LocalRelation \[[^\]]*term_id", plan), plan
+    assert not re.search(r"LogicalRDD \[[^\]]*qtf", plan), plan
+
+
 def test_oov_query_empty(spark, spark_index):
     qdf = spark.createDataFrame([("qx", "zzznotaword qqqalsonot")], "query_id string, text string")
     assert retrieve(spark_index, qdf, k=5).count() == 0

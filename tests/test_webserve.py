@@ -3,6 +3,7 @@ distributed composite plane (positional.retrieve_web)."""
 
 import random
 
+import numpy as np
 import pytest
 
 from splade_spark.functions.tokenize import tokenize_py
@@ -218,8 +219,10 @@ def _brute_phrase(rows, ptoks):
     )
 
 
-def _served_phrase(store, ptoks):
-    return sorted(store.doc_ids[store.docs_with_phrase(ptoks)].tolist())
+def _served_phrase(store, ptoks, among=None):
+    return sorted(
+        store.doc_ids[store.docs_with_phrase(ptoks, among)].tolist()
+    )
 
 
 def test_phrase_does_not_straddle_adjacent_docs():
@@ -236,6 +239,14 @@ def test_phrase_does_not_straddle_adjacent_docs():
     # the key of d0's last position without the position >= offset rule
     rows0 = [("x", "d0", [7]), ("y", "d1", [0]), ("x", "d1", [5])]
     assert _served_phrase(PositionalStore.from_rows(rows0), ["x", "y"]) == []
+    # 0-based, anchored on the rarer "x" at the largest position: its key
+    # plus 1 is exactly the key of "y" at position 0 in d1, so only the
+    # carry rule keeps the phrase from straddling into d1
+    rows1 = [("x", "d0", [7]), ("y", "d1", [0]), ("y", "d0", [3])]
+    store1 = PositionalStore.from_rows(rows1)
+    assert store1.shift == 3
+    assert _served_phrase(store1, ["x", "y"]) == []
+    assert _brute_phrase(rows1, ["x", "y"]) == []
 
 
 def test_phrase_positions_beyond_default_max_tokens():
@@ -291,7 +302,16 @@ def test_phrase_matches_brute_force_on_random_corpus():
     half = {d for d in texts if int(d[1:]) % 2}
     node = store.restrict(sorted(half) + [None])
     node_rows = [r for r in rows if r[1] in half]
+    n = len(store.doc_ids)
     for _ in range(300):
         ptoks = [rng.choice(vocab + ["zz"]) for _ in range(rng.randint(1, 4))]
-        assert _served_phrase(store, ptoks) == _brute_phrase(rows, ptoks)
+        want = _brute_phrase(rows, ptoks)
+        assert _served_phrase(store, ptoks) == want
         assert _served_phrase(node, ptoks) == _brute_phrase(node_rows, ptoks)
+        # restricted to a random sorted subset of store doc numbers
+        among = np.array(sorted(rng.sample(range(n), rng.randint(0, n))),
+                         dtype=np.int64)
+        subset = set(store.doc_ids[among].tolist())
+        assert _served_phrase(store, ptoks, among) == [
+            d for d in want if d in subset
+        ]
