@@ -24,6 +24,7 @@ from .config import DEFAULT, EngineConfig
 from .operators.indexing import InvertedIndex, build_index
 from .operators.metrics import retrieval_metrics
 from .operators.query import retrieve
+from .session import local_frame
 
 STRATEGIES = ("wand", "exhaustive", "served")
 
@@ -60,7 +61,7 @@ def strategy_results(
             broker.search(r["text"], k=k), start=1
         ):
             rows.append((r["query_id"], rank, str(doc_id), float(score)))
-    return spark.createDataFrame(rows, schema=_RESULT_SCHEMA)
+    return local_frame(spark, rows, _RESULT_SCHEMA)
 
 
 def evaluate_retrieval(

@@ -26,7 +26,9 @@ Protocol:
   3. The build_log row is appended ONLY after the shard write completes:
      the log row IS the commit record (write → audit → commit).
   4. Stage 2 (``build_index_from_shards``) reads all committed shards and
-     runs the ordinary index build (indexing.index_from_tf).
+     runs the ordinary index build (indexing.index_from_tf): the same
+     doc numbering, task width and finisher as ``build_index``, so the
+     resumed index equals a direct build of the same corpus.
 
 At 10^12 docs the bucket count is sized so one bucket ≈ one retryable
 unit of work (e.g. 10k buckets of ~10^8 docs); the log table stays tiny.
@@ -42,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..config import DEFAULT, EngineConfig
 from ..functions.tokenize import tokens_col
+from ..session import local_frame
 from .indexing import InvertedIndex, index_from_tf
 
 LOG_SCHEMA = (
@@ -63,7 +66,7 @@ def read_build_log(spark: SparkSession, out_dir: str) -> DataFrame:
     coalesced into ``run_wall_ms`` so resumes read one stable shape."""
     path = _log_dir(out_dir)
     if not os.path.isdir(path):
-        return spark.createDataFrame([], schema=LOG_SCHEMA)
+        return local_frame(spark, [], LOG_SCHEMA)
     log = spark.read.option("mergeSchema", "true").parquet(path)
     if "wall_ms" in log.columns:
         if "run_wall_ms" in log.columns:
@@ -186,9 +189,8 @@ def encode_corpus_resumable(
         if b not in audited
     ]
     # commit: append the log rows LAST
-    spark.createDataFrame(log_rows, schema=LOG_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(_log_dir(out_dir))
+    log = local_frame(spark, log_rows, LOG_SCHEMA).coalesce(1)
+    log.write.mode("append").parquet(_log_dir(out_dir))
 
     summary["doc_count"] = int(sum(r["doc_count"] for r in audit))
     summary["nnz"] = int(sum((r["nnz"] or 0) for r in audit))
@@ -200,9 +202,11 @@ def encode_corpus_resumable(
 def build_index_from_shards(
     spark: SparkSession, out_dir: str, cfg: EngineConfig = DEFAULT
 ) -> InvertedIndex:
-    """Stage 2: committed tf/dl shards → inverted index. Only committed
-    buckets are read (pushed-down isin on the bucket partition column), so
-    a log corrupted by a torn shard write can never leak half a bucket."""
+    """Stage 2: committed tf/dl shards → inverted index, built by
+    ``index_from_tf`` (numbered, sized and finished like ``build_index``).
+    Only committed buckets are read (pushed-down isin on the bucket
+    partition column), so a log corrupted by a torn shard write can never
+    leak half a bucket."""
     done = sorted(committed_buckets(spark, out_dir))
     if not done:
         raise ValueError(f"no committed buckets under {out_dir}")

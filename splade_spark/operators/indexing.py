@@ -25,6 +25,12 @@ Engine additions (north rule, not in the reference):
   block-max metadata; blocks laid out impact-ordered (desc max_weight)
   within a term (SURVEY.md §2.6 O2 — documented layout deviation).
 - per-partition lineage checkpoints → resumable builds (see checkpoint.py).
+- one build core: ``build_index`` and the stage-2 ``index_from_tf``
+  (resumable and streaming builds) number docs by rank of doc_id with
+  ``_number_docs_with_stats`` and size their tasks from the corpus with
+  ``_build_width``; they and the write-path fold (merge.py) finish in one
+  ``_finish``. The stage-2 entry therefore gives ``build_index``'s index
+  and pays only the doc_id string join.
 
 At 100 TB: the only wide shuffles are groupBy(url/term) aggregations and
 the (term_id, block_id) block build — all key-partitioned hash aggregates
@@ -36,9 +42,7 @@ sort-merge when not.
 from __future__ import annotations
 
 import json
-import math
 import os
-import time
 from contextlib import contextmanager
 from dataclasses import dataclass
 
@@ -129,14 +133,6 @@ def _doc_totals(doc_len: DataFrame) -> tuple[int, int]:
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("tt")
     ).collect()[0]
     return int(row["n"]), int(row["tt"] or 0)
-
-
-def _corpus_stats(doc_len: DataFrame) -> tuple[int, float, int]:
-    """One stats job: (n_docs, avgdl, total_tokens). Raises on empty."""
-    n_docs, total_tokens = _doc_totals(doc_len)
-    if n_docs == 0:
-        raise ValueError("build_index: corpus is empty — nothing to index")
-    return n_docs, total_tokens / n_docs, total_tokens
 
 
 def _number_docs_with_stats(
@@ -267,7 +263,7 @@ def _build_index_classic(
         .agg(F.count(F.lit(1)).cast("int").alias("tf"))
         .persist()
     )
-    idx = _finish_classic(tf_idx, doc_dim, stats, cfg, n_part)
+    idx = _finish(tf_idx, doc_dim, stats, cfg, n_part)
     tf_idx.unpersist()
     return idx
 
@@ -285,43 +281,37 @@ def index_from_tf(
     mirroring the reference's encode→index split
     (/root/reference/script/index.py vs script/encode.py). Pays one
     doc_id-string equi-join to reach integer doc space (the fused
-    build_index path avoids it when raw text is available)."""
-    doc_len = doc_len.persist()
-    stats = _corpus_stats(doc_len)
-    doc_dim = assign_global_ids(
-        doc_len, key="doc_id", id_col="doc_idx",
-        num_partitions=cfg.index_partitions,
-    ).select("doc_idx", "doc_id", "dl").persist()
-
-    if weighted_terms is None:
-        tf_idx = (
-            tf.join(doc_dim.select("doc_id", "doc_idx", "dl"), "doc_id")
-            .select("doc_idx", "dl", "term", "tf")
-            .persist()
-        )
-        idx = _finish_classic(tf_idx, doc_dim, stats, cfg)
-    else:
-        tf_idx = (
-            weighted_terms.join(doc_dim.select("doc_id", "doc_idx"), "doc_id")
-            .select("doc_idx", "term", F.col("weight").cast("float").alias("weight"))
-            .persist()
-        )
-        idx = _finish_weighted(tf_idx, doc_dim, stats, cfg)
-    tf_idx.unpersist()
-    doc_len.unpersist()
+    build_index path avoids it when raw text is available) and nothing
+    else: it numbers and sizes like ``build_index``
+    (``_number_docs_with_stats`` under ``_build_width``) and finishes in
+    the same ``_finish``, so its index equals ``build_index``'s."""
+    with _build_width(doc_len.sparkSession, cfg, doc_len.count()) as n_part:
+        numbered, stats = _number_docs_with_stats(doc_len, n_part)
+        doc_dim = numbered.select("doc_idx", "doc_id", "dl").persist()
+        if weighted_terms is None:
+            source = tf.join(doc_dim, "doc_id").select(
+                "doc_idx", "dl", "term", "tf"
+            )
+        else:
+            source = weighted_terms.join(
+                doc_dim.select("doc_id", "doc_idx"), "doc_id"
+            ).select(
+                "doc_idx", "term", F.col("weight").cast("float").alias("weight")
+            )
+        source = source.persist()
+        idx = _finish(source, doc_dim, stats, cfg, n_part)
+    source.unpersist()
     return idx
 
 
-def _term_dict(source: DataFrame, n_docs: int, cfg: EngineConfig,
-               n_part: int | None = None) -> DataFrame:
+def _term_dict(source: DataFrame, n_docs: int, n_part: int) -> DataFrame:
     """pass 1 — document frequency per term (sparse_index.py:621-632),
     then dictionary-code terms: deterministic term_id = rank of term asc.
     AQE broadcasts the dictionary join downstream while the vocab is
     small; at web scale it becomes a shuffled hash join on the term key."""
     df_counts = source.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     return assign_global_ids(
-        df_counts, key="term", id_col="term_id",
-        num_partitions=n_part or cfg.index_partitions,
+        df_counts, key="term", id_col="term_id", num_partitions=n_part,
     ).select(
         "term_id", "term", "df",
         F.log(
@@ -331,58 +321,36 @@ def _term_dict(source: DataFrame, n_docs: int, cfg: EngineConfig,
     ).persist()
 
 
-def _finish_classic(
-    tf_idx: DataFrame, doc_dim: DataFrame, stats: tuple[int, float, int],
-    cfg: EngineConfig, n_part: int | None = None,
+def _finish(
+    source: DataFrame, doc_dim: DataFrame, stats: tuple[int, float, int],
+    cfg: EngineConfig, n_part: int,
 ) -> InvertedIndex:
-    """(doc_idx, dl, term, tf) → index. BM25 impact weight per (doc, term):
-    idf · tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) — SURVEY §4.3.1.
+    """The one build finisher: (doc_idx, dl, term, tf) or (doc_idx, term,
+    weight) rows → index. A ``tf`` source gets BM25 impacts, idf ·
+    tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl)) (SURVEY §4.3.1); a ``weight``
+    source keeps the weights of an external encoder (e.g. the SPLADE-style
+    expander).
 
     Excluded terms (P2, the reference's special-token masking analogue,
     sparse_index.py:61-63) are dropped BEFORE the dictionary pass: they
     never get a term_id, a df count, or postings. dl still counts them —
     exclusion masks the sparse vector, not the length normalization,
     mirroring the reference where exclusion zeroes encoder outputs."""
-    n_docs, avgdl, _ = stats
+    n_docs, avgdl, total_tokens = stats
+    bm25 = "tf" in source.columns
     if cfg.exclude_terms:
-        tf_idx = tf_idx.filter(~F.col("term").isin(*cfg.exclude_terms))
-    term_dict = _term_dict(tf_idx, n_docs, cfg, n_part)
-    k1, b = float(cfg.k1), float(cfg.b)
-    weighted = tf_idx.join(
-        term_dict.select("term", "term_id", "df", "idf"), "term"
-    ).select(
-        "term_id", "doc_idx",
-        (
+        source = source.filter(~F.col("term").isin(*cfg.exclude_terms))
+    term_dict = _term_dict(source, n_docs, n_part)
+    weight = F.col("weight")
+    if bm25:
+        k1, b = float(cfg.k1), float(cfg.b)
+        weight = (
             F.col("idf") * F.col("tf") * (k1 + 1.0)
             / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-        ).cast("float").alias("weight"),
-        "df",
-    )
-    return _assemble(weighted, term_dict, doc_dim, stats, cfg, "bm25")
-
-
-def _finish_weighted(
-    wt_idx: DataFrame, doc_dim: DataFrame, stats: tuple[int, float, int],
-    cfg: EngineConfig,
-) -> InvertedIndex:
-    """(doc_idx, term, weight) → index, weights carried from an external
-    encoder (e.g. the SPLADE-style expander). Excluded terms dropped
-    before the dictionary pass (see _finish_classic)."""
-    n_docs = stats[0]
-    if cfg.exclude_terms:
-        wt_idx = wt_idx.filter(~F.col("term").isin(*cfg.exclude_terms))
-    term_dict = _term_dict(wt_idx, n_docs, cfg)
-    weighted = wt_idx.join(
-        term_dict.select("term", "term_id", "df"), "term"
-    ).select("term_id", "doc_idx", "weight", "df")
-    return _assemble(weighted, term_dict, doc_dim, stats, cfg, "external")
-
-
-def _assemble(
-    weighted: DataFrame, term_dict: DataFrame, doc_dim: DataFrame,
-    stats: tuple[int, float, int], cfg: EngineConfig, weighting: str,
-) -> InvertedIndex:
-    n_docs, avgdl, total_tokens = stats
+        ).cast("float")
+    weighted = source.join(
+        term_dict.select("term", "term_id", "df", "idf"), "term"
+    ).select("term_id", "doc_idx", weight.alias("weight"), "df")
     # strict > min_weight filter (sparse_index.py:65-68)
     weighted = weighted.filter(F.col("weight") > float(cfg.min_weight))
 
@@ -390,7 +358,7 @@ def _assemble(
     # when the cap provably cannot bind: classic tokenize yields ≤max_tokens
     # distinct terms per doc; the engine's expanders emit ≤TERMS_PER_TOKEN
     # per token (a real neural encoder would use vocab_size as the bound).
-    cap_bound = cfg.max_tokens if weighting == "bm25" else (
+    cap_bound = cfg.max_tokens if bm25 else (
         TERMS_PER_TOKEN_BOUND * cfg.max_tokens
     )
     if cfg.top_k_terms < cap_bound:
@@ -418,7 +386,7 @@ def _assemble(
         "value_dtype": cfg.value_dtype,
         "exclude_terms": list(cfg.exclude_terms),
         "tokenizer": "lower_alnum_v1",
-        "weighting": weighting,
+        "weighting": "bm25" if bm25 else "external",
         "index_partitions": int(cfg.index_partitions),
         # sparsify settings frozen into metadata and mirrored at query time,
         # as the reference does (script/index.py:111-121, retrieval.py:133-144)

@@ -61,7 +61,7 @@ from .indexing import (
     InvertedIndex,
     _build_width,
     _doc_totals,
-    _finish_classic,
+    _finish,
     _require_complete,
     doc_term_frequencies,
     explode_postings,
@@ -198,7 +198,7 @@ def _fold(
                 tf.join(new_dim, "doc_id").select("doc_idx", "dl", "term", "tf")
             )
         tf_all = old_tf.persist()
-        out = _finish_classic(
+        out = _finish(
             tf_all, dim.persist(), (n_docs, tt / n_docs, tt), cfg, n_part
         )
     tf_all.unpersist()

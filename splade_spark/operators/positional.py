@@ -58,6 +58,7 @@ from ..functions.codec import (
     encode_rows,
 )
 from ..functions.tokenize import tokenize_py, tokens_col
+from ..session import local_frame
 
 
 def positional_postings(
@@ -176,7 +177,7 @@ def phrase_search(
     """End-to-end: build the position lists, match a literal phrase set.
     Returns (query_id, doc_id, n_occurrences)."""
     spark = docs.sparkSession
-    pdf = spark.createDataFrame(phrases, "query_id string, phrase string")
+    pdf = local_frame(spark, phrases, "query_id string, phrase string")
     need = sorted(
         {t for _, p in phrases for t in tokenize_py(p, cfg.max_tokens)}
     )
@@ -254,7 +255,7 @@ def phrase_search_saved(
         {t for _, p in phrases for t in tokenize_py(p, cfg.max_tokens)}
     )
     positional = load_positional(spark, out_dir, terms=need)
-    pdf = spark.createDataFrame(phrases, "query_id string, phrase string")
+    pdf = local_frame(spark, phrases, "query_id string, phrase string")
     return phrase_occurrences(positional, pdf, cfg=cfg)
 
 
@@ -277,8 +278,8 @@ def pair_proximity(
     a stopword pair's tf product would be quadratic but tf sum is not.
     """
     spark = positional.sparkSession
-    pdf = spark.createDataFrame(
-        pairs, "query_id string, term_a string, term_b string"
+    pdf = local_frame(
+        spark, pairs, "query_id string, term_a string, term_b string"
     )
     if any(a == b for _, a, b in pairs):
         raise ValueError("pair_proximity: term_a must differ from term_b")
@@ -357,9 +358,7 @@ def best_snippet(
     """
     spark = docs.sparkSession
     if isinstance(queries, list):
-        queries = spark.createDataFrame(
-            queries, "query_id string, text string"
-        )
+        queries = local_frame(spark, queries, "query_id string, text string")
     toks = docs.select(
         F.col(id_col).cast("string").alias("doc_id"),
         tokens_col(text_col, cfg.max_tokens).alias("tokens"),
@@ -544,7 +543,7 @@ def retrieve_proximity(
     from .query import _topk, conjunctive_scores
 
     spark = positional.sparkSession
-    qdf = spark.createDataFrame(queries, "query_id string, text string")
+    qdf = local_frame(spark, queries, "query_id string, text string")
     scores = conjunctive_scores(index, qdf, cfg)
     gaps = min_term_gap(positional, qdf, cfg).join(
         index.doc_dim.select("doc_id", "doc_idx"), "doc_id"
@@ -617,7 +616,7 @@ def retrieve_web(
             "retrieve_web: '#' is reserved for synthetic phrase ids"
         )
     spark = positional.sparkSession
-    qdf = spark.createDataFrame(queries, "query_id string, text string")
+    qdf = local_frame(spark, queries, "query_id string, text string")
     scores = conjunctive_scores(index, qdf, cfg)
 
     phrase_rows = [
@@ -633,9 +632,7 @@ def retrieve_web(
     ]
     hits = phrase_occurrences(
         positional,
-        spark.createDataFrame(
-            phrase_rows, "query_id string, phrase string"
-        ),
+        local_frame(spark, phrase_rows, "query_id string, phrase string"),
         cfg=cfg,
     )
     sat = (
@@ -647,7 +644,7 @@ def retrieve_web(
         .groupBy("query_id", "doc_id")
         .agg(F.count_distinct("_pid").cast("int").alias("_nsat"))
     )
-    req = spark.createDataFrame(n_phr, "query_id string, _nphr int")
+    req = local_frame(spark, n_phr, "query_id string, _nphr int")
     ok = (
         sat.join(F.broadcast(req.filter("_nphr > 0")), "query_id")
         .filter(F.col("_nsat") == F.col("_nphr"))

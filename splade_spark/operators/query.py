@@ -57,7 +57,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -65,6 +64,7 @@ from pyspark.sql.window import Window
 from ..config import DEFAULT, TERMS_PER_TOKEN_BOUND, EngineConfig
 from ..functions.codec import decode_block
 from ..functions.tokenize import tokenize_py, tokens_col
+from ..session import local_frame
 from .indexing import InvertedIndex, _require_complete, explode_postings
 
 _Q_SCHEMA = "query_id string, term_id bigint, qtf float, df bigint"
@@ -139,7 +139,7 @@ def sparsify_query_terms(
     qk = int(meta.get("top_k_terms", 1 << 30))
     max_tokens = int(meta.get("max_tokens", DEFAULT.max_tokens))
     # a cap at or above the encoder's terms-per-query bound can never
-    # bind — skip the window (the mirror of indexing._assemble's skip)
+    # bind — skip the window (the mirror of indexing._finish's skip)
     if not bounded_by_encoder or qk < TERMS_PER_TOKEN_BOUND * max_tokens:
         w = Window.partitionBy("query_id").orderBy(
             F.desc("qtf"), F.asc("term_id")
@@ -176,15 +176,12 @@ def _collect_q_terms(q_terms: DataFrame) -> list:
 
 
 def _q_local(spark, rows: list) -> DataFrame:
-    """The collected (query_id, term_id, qtf) rows as a literal local
-    relation. It is built from a pyarrow table: a ``LocalRelation`` that
-    runs no Python task, where a Python list would become a Python-RDD
-    scan paying a Python worker task per partition on every execution."""
-    return spark.createDataFrame(pa.table({
-        "query_id": pa.array([r["query_id"] for r in rows], pa.string()),
-        "term_id": pa.array([r["term_id"] for r in rows], pa.int64()),
-        "qtf": pa.array([r["qtf"] for r in rows], pa.float32()),
-    }))
+    """The collected (query_id, term_id, qtf) rows as a ``LocalRelation``
+    (``session.local_frame``)."""
+    return local_frame(
+        spark, [(r["query_id"], r["term_id"], r["qtf"]) for r in rows],
+        "query_id string, term_id bigint, qtf float",
+    )
 
 
 def _candidate_blocks(
@@ -203,7 +200,7 @@ def _candidate_blocks(
     if rows is None:
         rows = _collect_q_terms(q_terms)
     if not rows:
-        return spark.createDataFrame([], schema=_Q_SCHEMA).join(
+        return local_frame(spark, [], _Q_SCHEMA).join(
             index.postings, "term_id"
         )
     q_local = _q_local(spark, rows)
@@ -459,11 +456,8 @@ def _wand_topk(
         )
         np.add.at(acc, pos[ok], (qtf[oi] * w[ok]).astype(np.float64))
 
-    # final scores are float32 (reference dtype); ties broken on the
-    # ROUNDED value so rank order matches the exhaustive plan exactly
-    scores32 = acc.astype(np.float32)
-    sel = np.lexsort((cand_docs, -scores32.astype(np.float64)))[:k]
-    return cand_docs[sel], scores32[sel]
+    # the served kernel's tie rule: f32 scores, ties on the rounded value
+    return LocalIndexServer._rank(cand_docs, acc, k)
 
 
 def score_wand(
@@ -484,7 +478,7 @@ def score_wand(
     spark = index.postings.sparkSession
     rows = _collect_q_terms(q_terms)
     if not rows:
-        return spark.createDataFrame([], schema=_RESULT_SCHEMA)
+        return local_frame(spark, [], _RESULT_SCHEMA)
 
     has_df = "df" in q_terms.columns
     per_q: dict[str, int] = {}
@@ -837,7 +831,7 @@ def local_server(index: InvertedIndex) -> LocalIndexServer:
 def score_local(index: InvertedIndex, q_terms: DataFrame, k: int = 10) -> DataFrame:
     """Low-latency serving path as a DataFrame: run the warm
     LocalIndexServer per query and lift results back into Spark (one
-    createDataFrame, no joins — doc ids decode from the server's resident
+    local relation, no joins — doc ids decode from the server's resident
     map). Rank-identical to score_wand/score_exhaustive (the served dense
     kernel: f32 products, f64 accumulation, the same tie rule)."""
     spark = index.postings.sparkSession
@@ -849,7 +843,7 @@ def score_local(index: InvertedIndex, q_terms: DataFrame, k: int = 10) -> DataFr
     for qid, pairs in by_query.items():
         for rank, (doc_id, score) in enumerate(srv.search_ids(pairs, k), 1):
             out_rows.append((qid, rank, doc_id, score))
-    return spark.createDataFrame(out_rows, schema=_RESULT_SCHEMA)
+    return local_frame(spark, out_rows, _RESULT_SCHEMA)
 
 
 def retrieve(

@@ -12,7 +12,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def default_cpus() -> int:
@@ -99,4 +102,20 @@ def warm_python_workers(spark: SparkSession, width: int | None = None) -> None:
         spark.range(width * 4, numPartitions=width)
         .mapInPandas(_noop, schema="id long")
         .count()
+    )
+
+
+def local_frame(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """Small driver-side ``rows`` (tuples in ``schema`` column order) as a
+    DataFrame with the DDL ``schema``. It is built from a pyarrow table,
+    so it plans as a ``LocalRelation`` that runs no Python task; a Python
+    list would become a Python-RDD scan (``LogicalRDD``) paying a Python
+    worker task per partition on every execution."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                 schema=arrow),
+        schema=struct,
     )

@@ -132,8 +132,9 @@ def build_index_from_batches(
     spark: SparkSession, out_dir: str, cfg: EngineConfig = DEFAULT
 ) -> InvertedIndex:
     """Fold every arrived micro-batch shard into a full index (stage 2 of
-    the batch engine, indexing.index_from_tf). Records the folded batch
-    ids in metadata so ``fold_new_batches`` can later continue
+    the batch engine, indexing.index_from_tf: numbered, sized and
+    finished like ``build_index``, so it equals a direct build over the
+    arrived docs). Records the folded batch ids in metadata so ``fold_new_batches`` can later continue
     INCREMENTALLY from this index.
 
     The read is PINNED to the batch partitions that exist right now

@@ -180,6 +180,49 @@ def test_candidate_blocks_query_side_is_local_relation(spark, corpus,
     assert not re.search(r"LogicalRDD \[[^\]]*qtf", plan), plan
 
 
+def _index_rows(idx):
+    """Every postings row (block bytes included), every doc_dim row and
+    the metadata of an index."""
+    return (
+        sorted(tuple(r) for r in idx.postings.collect()),
+        sorted(tuple(r) for r in
+               idx.doc_dim.select("doc_idx", "doc_id", "dl").collect()),
+        idx.meta,
+    )
+
+
+def test_build_entry_points_give_one_build(spark, corpus):
+    """``index_from_tf`` numbers, sizes and finishes like ``build_index``:
+    from the same corpus it gives the same index, for BM25 impacts and
+    for external weights. The default config is used on purpose — its
+    ``index_partitions`` cap of 32 is what a small build must not pay."""
+    from splade_spark.functions.expander import expand_terms
+    from splade_spark.operators.indexing import (
+        _task_width, doc_term_frequencies, index_from_tf,
+    )
+
+    pages, _ = corpus
+    docs = spark.createDataFrame(pages[["url", "text"]]).withColumnRenamed(
+        "url", "doc_id"
+    )
+    tf, doc_len = doc_term_frequencies(docs)
+    dw = expand_terms(docs)
+    pairs = [
+        (index_from_tf(tf, doc_len), build_index(docs)),
+        (index_from_tf(tf, doc_len, weighted_terms=dw),
+         build_index(docs, weighted_terms=dw)),
+    ]
+    width = _task_width(N_DOCS, 32)
+    for from_tf, built in pairs:
+        assert _index_rows(from_tf) == _index_rows(built)
+        assert from_tf.doc_dim.rdd.getNumPartitions() == width
+        assert from_tf.term_dict.rdd.getNumPartitions() == width
+        from_tf.unpersist()
+        built.unpersist()
+    assert pairs[0][0].meta["weighting"] == "bm25"
+    assert pairs[1][0].meta["weighting"] == "external"
+
+
 def test_oov_query_empty(spark, spark_index):
     qdf = spark.createDataFrame([("qx", "zzznotaword qqqalsonot")], "query_id string, text string")
     assert retrieve(spark_index, qdf, k=5).count() == 0

@@ -20,6 +20,7 @@ from splade_spark.operators.positional import (
 )
 from splade_spark.operators.query import retrieve_conjunctive
 from splade_spark.oracle import build_oracle_index
+from splade_spark.session import local_frame
 
 DOCS = [
     ("d01", "hash join strategy beats nested loop join"),
@@ -125,6 +126,25 @@ def test_retrieve_web_no_phrase_equals_conjunctive(spark, built):
     ).collect()
     key = lambda rows: sorted((r["rank"], r["doc_id"]) for r in rows)
     assert key(web) == key(conj)
+
+
+def test_phrase_and_web_plans_scan_no_python_rdd(spark):
+    """The phrase, query and per-query count tables of the distributed
+    phrase and web paths are local relations. A ``createDataFrame`` of a
+    Python list would plan as a Python-RDD scan (``LogicalRDD``) that runs
+    a Python task per partition on every execution."""
+    docs = local_frame(spark, DOCS, "doc_id string, text string")
+    idx = build_index(docs)
+    phrases = [("p1", "hash join"), ("p2", "build side")]
+    plans = [
+        phrase_search(docs, phrases),
+        retrieve_web(idx, positional_postings(docs), WEBQ, k=10),
+    ]
+    for df in plans:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation [query_id" in plan, plan
+        assert "LogicalRDD" not in plan, plan
+    idx.unpersist()
 
 
 def test_saved_positional_parity(spark, built, tmp_path):
