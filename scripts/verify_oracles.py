@@ -1,6 +1,7 @@
 """Local replica of the driver's correctness gate: run every REGISTRY query
 on Spark and its DuckDB oracle at a given sf dir, compare row count, column
-names, and an order-insensitive value hash. Usage:
+names, and an order-insensitive value hash, in a host-sized session
+(``get_spark()``: local[nproc], or ``SPARK_GRAFT_CPUS``). Usage:
 
     python scripts/verify_oracles.py [sf_dir] [query ...]
 """
@@ -41,7 +42,7 @@ def main() -> int:
     from splade_spark.entry_queries import REGISTRY
     from splade_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark()
 
     con = duckdb.connect()
     for t in TABLES:

@@ -42,11 +42,11 @@ class EngineConfig:
     # here never enter the dictionary or postings, and queries mirror the
     # exclusion from index metadata
     exclude_terms: tuple = ()
-    # WAND routing: a query whose estimated candidate postings (Σ df over
-    # its terms) exceed this cap runs as a partial WAND phase — its blocks
-    # split into ceil(Σdf/cap) doc-disjoint range shards, the kernel runs
-    # per (query, shard) task, per-shard top-ks merge exactly — instead of
-    # landing the whole posting set in one task
+    # WAND shard tiers: a query's blocks are split into ceil(Σdf/cap)
+    # doc-disjoint range shards (Σ df over its terms estimates its
+    # candidate postings), the kernel runs per (query, shard) task and the
+    # per-shard top-ks merge exactly — a query within the cap runs as one
+    # task, a heavier one never lands its whole posting set in one task
     wand_postings_cap: int = 4_000_000
     # BM25 (classic path impact weights; pinned in index_meta)
     k1: float = 1.2
@@ -64,12 +64,11 @@ class EngineConfig:
     top_k: int = 10
     # metric cutoffs — reference testing.k_list
     k_list: tuple = (1, 5, 10, 50, 100)
-    # build parallelism hints: index_partitions is the CLUSTER-side cap
-    # (sized to ~total executor cores); build_index downsizes to
-    # ceil(n_docs / docs_per_partition) for small corpora so tiny builds
-    # don't pay 32 tasks of scheduling overhead per stage
+    # build parallelism hint: the CLUSTER-side cap (sized to ~total
+    # executor cores); builds downsize below it for small corpora
+    # (indexing._task_width) so tiny builds don't pay 32 tasks of
+    # scheduling overhead per stage
     index_partitions: int = 32
-    docs_per_partition: int = 3000
 
 
 DEFAULT = EngineConfig()

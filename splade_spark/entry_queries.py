@@ -610,12 +610,12 @@ def bm25_topk_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("bm25_topk_heavy_partial", _BM25_SQL_DUCK_RANKONLY)
 def bm25_topk_heavy_partial(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The heavy-query partial-WAND phase with a BINDING cap: with
+    """WAND shard tiers above one shard, with a BINDING cap: with
     wand_postings_cap=500 every benchmark query's estimated postings
-    (Σ df over its terms) exceeds the cap, so all of them run as
-    doc-disjoint shard tasks merged exactly (query._wand_scores_sharded)
-    instead of one kernel task per query. Ranks must equal the same
-    DuckDB BM25 oracle as the unsharded engine entry."""
+    (Σ df over its terms) exceeds the cap, so each runs in a tier of 2+
+    doc-disjoint shard tasks merged exactly (query._wand_scores) instead
+    of one kernel task per query. Ranks must equal the same DuckDB BM25
+    oracle as the unsharded engine entry."""
     from .config import EngineConfig
     from .operators.indexing import build_index
     from .operators.query import retrieve

@@ -9,7 +9,7 @@ between runs, but contiguous ordered ranges + in-partition sort always
 produce the same global rank for a given key set).
 
 Physical plan (terasort pattern, all JVM — no Python workers):
-  repartitionByRange(key) → sortWithinPartitions(key) → persist →
+  repartitionByRange(key) → sortWithinPartitions(key) → localCheckpoint →
   per-partition counts (1 small job) → driver prefix-sums →
   ``id = offsets[spark_partition_id()] + row``, where ``row`` is the low
   bits of monotonically_increasing_id and ``offsets`` is the exclusive
@@ -38,7 +38,6 @@ def ranged_prefix_offsets(
     key: str,
     num_partitions: int,
     measures: dict[str, Column],
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, dict[str, list[int]], dict[str, int]]:
     """The terasort prefix-sum scaffold shared by every global-prefix
     operator (doc numbering here, the fused build numbering in
@@ -59,14 +58,13 @@ def ranged_prefix_offsets(
     assign_global_ids below for the full failure modes): without it the
     counts job and later data jobs re-sample range boundaries under
     different column-pruned plans and the per-partition offsets no
-    longer describe the data the later jobs see. Callers that skip it
-    (``checkpoint=False``) take on that risk knowingly.
+    longer describe the data the later jobs see.
     """
+    # eager=False checkpoint: materializes inside the counts job (single
+    # pass), then the lineage is truncated at the checkpointed blocks
     ranged = df.repartitionByRange(
         num_partitions, F.col(key)
-    ).sortWithinPartitions(key)
-    if checkpoint:
-        ranged = ranged.localCheckpoint(eager=False)
+    ).sortWithinPartitions(key).localCheckpoint(eager=False)
     rows = {
         int(r["_pid"]): r
         for r in ranged.groupBy(F.spark_partition_id().alias("_pid"))
@@ -108,10 +106,10 @@ def assign_global_ids(
     df: DataFrame,
     key: str,
     id_col: str,
-    num_partitions: int | None = None,
-    persist: bool = True,
+    num_partitions: int,
 ) -> DataFrame:
-    """Add ``id_col`` (long, 0-based dense rank of ``key`` asc) to ``df``.
+    """Add ``id_col`` (long, 0-based dense rank of ``key`` asc) to ``df``,
+    range-partitioned ``num_partitions`` ways.
 
     Keys must be unique. The internal materialization of the ranged sort
     is a CORRECTNESS requirement, not a cache: the partition-counts job
@@ -130,11 +128,7 @@ def assign_global_ids(
     invalidation; if blocks are lost (executor death) the job fails
     loudly instead of recomputing wrong ids.
     """
-    spark = df.sparkSession
-    n_part = num_partitions or spark.sparkContext.defaultParallelism
-    # eager=False checkpoint: materializes inside the counts job (single
-    # pass), then the lineage is truncated at the checkpointed blocks
     ranged, offsets, _totals = ranged_prefix_offsets(
-        df, key, n_part, {"_n": F.count(F.lit(1))}, checkpoint=persist
+        df, key, num_partitions, {"_n": F.count(F.lit(1))}
     )
     return ranged.withColumn(id_col, global_rank(offsets["_n"]))

@@ -194,24 +194,25 @@ def build_index(
         return _build_index_classic(docs, id_col, text_col, cfg, n_part)
 
 
-def _task_width(
-    n_docs: int, cap: int, docs_per_partition: int = DEFAULT.docs_per_partition
-) -> int:
+# docs per build task below the cluster-side cap (_task_width)
+_DOCS_PER_PARTITION = 3000
+
+
+def _task_width(n_docs: int, cap: int) -> int:
     """Task width for an ``n_docs`` corpus: ceil(n_docs /
-    docs_per_partition), at least 4, capped by the cluster-side
+    _DOCS_PER_PARTITION), at least 4, capped by the cluster-side
     ``index_partitions`` knob ``cap``. A 5k-doc build runs 4-wide instead
     of paying 32 tasks of scheduling overhead per stage, while web-scale
     corpora always hit the cap. Shared by the build, the write-path fold
     (merge.py) and ``InvertedIndex.save``."""
-    per = max(1, int(docs_per_partition))
-    return max(4, min(int(cap), -(-int(n_docs) // per)))
+    return max(4, min(int(cap), -(-int(n_docs) // _DOCS_PER_PARTITION)))
 
 
 @contextmanager
 def _build_width(spark: SparkSession, cfg: EngineConfig, n_docs: int):
     """Yield ``_task_width`` of an ``n_docs`` corpus, with
     ``spark.sql.shuffle.partitions`` scoped to it for the build's stages."""
-    n_part = _task_width(n_docs, cfg.index_partitions, cfg.docs_per_partition)
+    n_part = _task_width(n_docs, cfg.index_partitions)
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
     try:

@@ -265,75 +265,21 @@ def pair_proximity(
 ) -> DataFrame:
     """Minimal token distance between two DISTINCT terms per document:
     (query_id, term_a, term_b) rows → (query_id, doc_id, min_dist int)
-    for every doc containing both terms.
-
-    The scan is LINEAR in tf_a + tf_b, not the tf_a × tf_b cross: both
-    position lists merge into one ascending tagged array and a single
-    ``aggregate`` fold tracks the last position seen on each side — the
-    global min |a − b| is always realized by some (current, most recent
-    opposite) adjacency in merged order. Pure Catalyst expressions, no
-    Python in the row path; the pair dimension broadcasts and prunes
-    both postings reads. This is the primitive under proximity-boosted
-    ranking ("terms near each other score higher") at web scale, where
-    a stopword pair's tf product would be quadratic but tf sum is not.
-    """
-    spark = positional.sparkSession
-    pdf = local_frame(
-        spark, pairs, "query_id string, term_a string, term_b string"
-    )
+    for every doc containing both terms. The two-term case of
+    :func:`min_term_gap`'s linear fold (``_min_gap``) — LINEAR in
+    tf_a + tf_b, never the tf_a × tf_b cross a stopword pair would make
+    quadratic. The terms are matched as given (not re-tokenized); each
+    ``query_id`` names one pair."""
     if any(a == b for _, a, b in pairs):
         raise ValueError("pair_proximity: term_a must differ from term_b")
-    pa = positional.join(
-        F.broadcast(pdf.select(F.col("term_a").alias("term")).distinct()),
-        "term",
-    ).select(
-        F.col("term").alias("term_a"), "doc_id",
-        F.col("positions").alias("pos_a"),
+    if len({q for q, _, _ in pairs}) < len(pairs):
+        raise ValueError("pair_proximity: query_id must be unique per pair")
+    qterms = local_frame(
+        positional.sparkSession,
+        [(q, t) for q, a, b in pairs for t in (a, b)],
+        "query_id string, term string",
     )
-    pb = positional.join(
-        F.broadcast(pdf.select(F.col("term_b").alias("term")).distinct()),
-        "term",
-    ).select(
-        F.col("term").alias("term_b"), "doc_id",
-        F.col("positions").alias("pos_b"),
-    )
-    j = pa.join(F.broadcast(pdf), "term_a").join(pb, ["term_b", "doc_id"])
-    tagged = F.array_sort(
-        F.concat(
-            F.transform(
-                "pos_a",
-                lambda p: F.struct(p.alias("p"), F.lit(0).alias("s")),
-            ),
-            F.transform(
-                "pos_b",
-                lambda p: F.struct(p.alias("p"), F.lit(1).alias("s")),
-            ),
-        )
-    )
-    init = F.struct(
-        F.lit(None).cast("int").alias("la"),
-        F.lit(None).cast("int").alias("lb"),
-        F.lit(None).cast("int").alias("best"),
-    )
-
-    def step(acc, x):
-        cand = F.when(x["s"] == 0, x["p"] - acc["lb"]).otherwise(
-            x["p"] - acc["la"]
-        )
-        return F.struct(
-            F.when(x["s"] == 0, x["p"]).otherwise(acc["la"]).alias("la"),
-            F.when(x["s"] == 1, x["p"]).otherwise(acc["lb"]).alias("lb"),
-            # least() skips nulls: unseen-opposite candidates drop out
-            F.least(acc["best"], cand).alias("best"),
-        )
-
-    return j.select(
-        "query_id",
-        "doc_id",
-        F.aggregate(tagged, init, step, lambda a: a["best"]).alias(
-            "min_dist"
-        ),
-    ).filter(F.col("min_dist").isNotNull())
+    return _min_gap(positional, qterms).withColumnRenamed("min_gap", "min_dist")
 
 
 def best_snippet(
@@ -485,6 +431,14 @@ def min_term_gap(
             F.array_distinct(tokens_col("text", cfg.max_tokens))
         ).alias("term"),
     )
+    return _min_gap(positional, qterms)
+
+
+def _min_gap(positional: DataFrame, qterms: DataFrame) -> DataFrame:
+    """The min-distance fold over distinct (query_id, term) rows →
+    (query_id, doc_id, min_gap) for docs holding ≥2 of the query's terms:
+    one sorted (pos, term) array per (query, doc), one ``aggregate`` pass
+    comparing each position with the previous one of a different term."""
     hits = positional.join(F.broadcast(qterms), "term").select(
         "query_id",
         "doc_id",

@@ -32,14 +32,14 @@ Three physical strategies over the same compressed index:
   decoding. The kernel is LINEAR: a sorted candidate accumulator is
   merged with amortized doubling (never re-processing history), and θ is
   refreshed at merge points (a stale-low θ only weakens pruning, never
-  correctness). Queries whose candidate postings exceed
-  ``cfg.wand_postings_cap`` (est. Σ df over query terms) run as a
-  PARTIAL WAND phase instead of one task: their blocks are split into
-  doc-disjoint range shards (ceil(Σdf/cap) of them) and the same kernel
-  runs per (query, shard) with per-shard top-k merged exactly — a
-  stopword-sized posting set at 10^12 docs fans out over many ~cap-sized
-  tasks while keeping block-max pruning. Exactness is asserted by tests
-  (WAND ≡ sharded-WAND ≡ exhaustive ≡ oracle).
+  correctness). There is one plan: the query terms' blocks are split into
+  doc-disjoint range shards and the kernel runs per (query, shard) task,
+  per-shard top-ks merged exactly. A query whose candidate postings
+  (est. Σ df over its terms) fit ``cfg.wand_postings_cap`` gets one shard
+  — one task, no split stage — and a heavier one ceil(Σdf/cap) of them,
+  so a stopword-sized posting set at 10^12 docs fans out over many
+  ~cap-sized tasks while keeping block-max pruning. Exactness is
+  asserted by tests (WAND at any shard count ≡ exhaustive ≡ oracle).
 - ``local`` / :class:`LocalIndexServer`: warm in-process serving. The
   reference's own serving shape — its query loop scores postings
   in-process against a memory-mapped index
@@ -67,7 +67,6 @@ from ..functions.tokenize import tokenize_py, tokens_col
 from ..session import local_frame
 from .indexing import InvertedIndex, _require_complete, explode_postings
 
-_Q_SCHEMA = "query_id string, term_id bigint, qtf float, df bigint"
 _RESULT_SCHEMA = "query_id string, rank int, doc_id string, score float"
 
 
@@ -153,8 +152,8 @@ def sparsify_query_terms(
 
 
 # above this many distinct query term_ids, skip the isin literal pushdown
-# (codegen on huge IN lists costs more than it saves) and rely on the
-# broadcast join alone
+# (codegen on huge IN lists costs more than it saves) and prune with a
+# broadcast left-semi join instead (_term_blocks)
 _ISIN_PUSHDOWN_CAP = 2048
 
 # the query side is a QUERY SET, not a corpus — the driver collects it
@@ -184,31 +183,41 @@ def _q_local(spark, rows: list) -> DataFrame:
     )
 
 
+def _term_blocks(index: InvertedIndex, rows: list) -> DataFrame:
+    """The postings blocks of the collected query terms — the one place
+    postings are pruned by query term. Up to ``_ISIN_PUSHDOWN_CAP``
+    distinct term_ids become an ``isin`` predicate PUSHED INTO the
+    postings scan (on the term_id-sorted parquet layout this prunes row
+    groups before any decode); beyond that a broadcast left-semi join on
+    the term_ids does the pruning. Either way it lands below anything the
+    caller stacks on top — the WAND shard split's ``mapInArrow`` is a
+    barrier Catalyst cannot push a later join through."""
+    terms = sorted({r["term_id"] for r in rows})
+    if len(terms) <= _ISIN_PUSHDOWN_CAP:
+        return index.postings.filter(F.col("term_id").isin(terms))
+    ids = local_frame(
+        index.postings.sparkSession, [(t,) for t in terms], "term_id bigint"
+    )
+    return index.postings.join(F.broadcast(ids), "term_id", "left_semi")
+
+
 def _candidate_blocks(
     index: InvertedIndex, q_terms: DataFrame, rows: list | None = None
 ) -> DataFrame:
-    """Postings blocks of the query terms.
+    """Postings blocks of the query terms joined to their (query_id, qtf).
 
     The query side is tiny by contract (a query set, not a corpus), so it
     is collected once and re-emitted as a literal local relation: the
-    broadcast then costs no extra job, and the distinct term_ids become an
-    ``isin`` predicate PUSHED INTO the postings scan — on the term_id-sorted
-    parquet layout this prunes row groups before any decode. At 10^12 docs
-    this is the difference between scanning the full postings table and
-    touching only the query terms' blocks."""
+    broadcast then costs no extra job, and ``_term_blocks`` prunes the
+    postings scan to the query terms. At 10^12 docs this is the
+    difference between scanning the full postings table and touching only
+    the query terms' blocks."""
     spark = index.postings.sparkSession
     if rows is None:
         rows = _collect_q_terms(q_terms)
-    if not rows:
-        return local_frame(spark, [], _Q_SCHEMA).join(
-            index.postings, "term_id"
-        )
-    q_local = _q_local(spark, rows)
-    terms = sorted({r["term_id"] for r in rows})
-    base = index.postings
-    if len(terms) <= _ISIN_PUSHDOWN_CAP:
-        base = base.filter(F.col("term_id").isin(terms))
-    return base.join(F.broadcast(q_local), "term_id")
+    return _term_blocks(index, rows).join(
+        F.broadcast(_q_local(spark, rows)), "term_id"
+    )
 
 
 def score_exhaustive(
@@ -424,10 +433,12 @@ def _wand_topk(
             flush()
         # θ is exact over merged history (a lower bound of the true kth
         # score once pending exists); any unseen doc is bounded by
-        # suffix[i] → once suffix[i] < θ the candidate set is closed
-        # (strict: an unseen doc tying θ could still win the doc_idx
-        # tie-break, so it must stay reachable)
-        if (merged_n or pend_n) and suffix[i] < theta:
+        # suffix[i] → once f32(suffix[i]) < f32(θ) the candidate set is
+        # closed. Ranks compare f32 scores, so the cut compares f32 bounds
+        # (the broker's rule, sharding.ShardedServer._fan_out): an unseen
+        # doc below θ in f64 can still round to θ's f32 value and win the
+        # doc_idx tie-break. Strict for the same reason.
+        if (merged_n or pend_n) and np.float32(suffix[i]) < np.float32(theta):
             stop_at = i
             break
         oi = order[i]
@@ -468,12 +479,13 @@ def score_wand(
 ) -> DataFrame:
     """Block-max pruned scoring; identical results to score_exhaustive.
 
-    Scale safety: a query whose estimated candidate postings (Σ df over
-    its terms) exceed ``cfg.wand_postings_cap`` would put a corpus-sized
-    posting set into one Python task — such queries run as the partial
-    WAND phase instead (``_wand_scores_sharded``: doc-disjoint shard
-    split → per-(query, shard) kernel → exact merge); light queries keep
-    the single-task kernel (their postings are small by construction).
+    Scale safety: one plan with a doc-range shard count per query, so no
+    task gets a corpus-sized posting set. A query whose estimated
+    candidate postings (Σ df over its terms) fit ``cfg.wand_postings_cap``
+    runs in one task (tier 1); a heavier one fans out over
+    ceil(Σdf / cap) shards, rounded up to 2, 8, 32, … so all queries in a
+    tier share one ``_wand_scores`` plan (2-3 tiers in practice), and
+    never more shards than docs.
     """
     spark = index.postings.sparkSession
     rows = _collect_q_terms(q_terms)
@@ -485,31 +497,19 @@ def score_wand(
     for r in rows:
         est = int(r["df"] or 0) if has_df else 0
         per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + est
-    cap = int(cfg.wand_postings_cap)
-    heavy = {q for q, n in per_q.items() if n > cap}
-    light_rows = [r for r in rows if r["query_id"] not in heavy]
-    heavy_rows = [r for r in rows if r["query_id"] in heavy]
-
-    parts: list[DataFrame] = []
-    if light_rows:
-        parts.append(_wand_scores(index, q_terms, k, light_rows))
-    if heavy_rows:
-        # size doc-range shards so each (query, shard) task sees ~cap
-        # postings — per TIER, not off the single heaviest query: shard
-        # needs are rounded up to the next power of 4, so a query just
-        # over the cap fans out 2-4 ways while a stopword query still gets
-        # its thousands, and all queries in a tier share one plan (2-3
-        # tiers in practice). Never more shards than docs.
-        n_docs = int(index.meta["n_docs"])
-        tiers: dict[int, list] = {}
-        for r in heavy_rows:
-            need = -(-per_q[r["query_id"]] // max(1, cap))
-            t = 2
-            while t < need:
-                t *= 4
-            tiers.setdefault(max(2, min(4096, n_docs, t)), []).append(r)
-        for n_shards, tier_rows in sorted(tiers.items()):
-            parts.append(_wand_scores_sharded(index, k, tier_rows, n_shards))
+    cap = max(1, int(cfg.wand_postings_cap))
+    n_docs = int(index.meta["n_docs"])
+    tiers: dict[int, list] = {}
+    for r in rows:
+        need = -(-per_q[r["query_id"]] // cap)
+        t = 1 if need <= 1 else 2
+        while t < need:
+            t *= 4
+        tiers.setdefault(max(1, min(4096, n_docs, t)), []).append(r)
+    parts = [
+        _wand_scores(index, k, tier_rows, n_shards)
+        for n_shards, tier_rows in sorted(tiers.items())
+    ]
     scores = parts[0]
     for p in parts[1:]:
         scores = scores.unionByName(p)
@@ -517,14 +517,32 @@ def score_wand(
 
 
 def _wand_scores(
-    index: InvertedIndex, q_terms: DataFrame, k: int, rows: list
+    index: InvertedIndex, k: int, rows: list, n_shards: int
 ) -> DataFrame:
-    cand = _candidate_blocks(index, q_terms, rows).select(
-        "query_id", "qtf", "min_doc", "max_doc", "max_weight",
+    """The WAND plan of one shard tier: the term-pruned blocks are split
+    into ``n_shards`` doc-disjoint range shards (sharding.shard_blocks —
+    narrow, no shuffle, and no Python stage at one shard), joined to the
+    query side, and the block-max kernel runs per (query, shard) task;
+    the per-shard top-ks merge exactly in the shared ``_topk`` window.
+
+    Exactness: every doc's postings live entirely in one shard, so each
+    (query, shard) task computes COMPLETE scores for its docs and the
+    global top-k is a subset of the union of per-shard top-ks — the same
+    argument as the sharded serving broker. θ-pruning is per-shard
+    (weaker than global, never wrong). A stopword-sized posting set fans
+    out over tasks of ~cap postings each, keeping WAND's block skipping
+    (reference accumulate semantics: sparse_index.py:661-748)."""
+    from .sharding import shard_blocks
+
+    spark = index.postings.sparkSession
+    sharded = shard_blocks(
+        _term_blocks(index, rows), int(index.meta["n_docs"]), n_shards
+    )
+    cand = sharded.join(F.broadcast(_q_local(spark, rows)), "term_id").select(
+        "query_id", "shard_id", "qtf", "min_doc", "max_doc", "max_weight",
         "doc_gaps", "weights",
     )
-
-    return cand.groupBy("query_id").applyInPandas(
+    return cand.groupBy("query_id", "shard_id").applyInPandas(
         lambda pdf: _wand_group(pdf, k), schema=_SCORES_SCHEMA
     )
 
@@ -533,9 +551,8 @@ _SCORES_SCHEMA = "query_id string, doc_idx bigint, score float"
 
 
 def _wand_group(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
-    """One grouped-map task: run the shared kernel over this group's
-    candidate blocks (group key = query_id, or (query_id, shard_id) in
-    the partial phase — the kernel is key-agnostic)."""
+    """One grouped-map task: run the shared kernel over the candidate
+    blocks of one (query_id, shard_id) group."""
     qid = pdf["query_id"].iloc[0]
     docs, scores = _wand_topk(
         pdf["qtf"].to_numpy(np.float32),
@@ -549,52 +566,6 @@ def _wand_group(pdf: pd.DataFrame, k: int) -> pd.DataFrame:
     return pd.DataFrame(
         {"query_id": np.repeat(qid, docs.size), "doc_idx": docs,
          "score": scores}
-    )
-
-
-def _wand_scores_sharded(
-    index: InvertedIndex, k: int, rows: list, n_shards: int
-) -> DataFrame:
-    """Partial WAND phase + merge for HEAVY queries (Σ df over terms >
-    wand_postings_cap): candidate blocks are split into ``n_shards``
-    doc-disjoint range shards (sharding.shard_blocks — narrow, no
-    shuffle), the block-max kernel runs per (query, shard) task, and the
-    per-shard top-ks merge exactly in the shared ``_topk`` window.
-
-    Exactness: every doc's postings live entirely in one shard, so each
-    (query, shard) task computes COMPLETE scores for its docs and the
-    global top-k is a subset of the union of per-shard top-ks — the same
-    argument as the sharded serving broker. θ-pruning is per-shard
-    (weaker than global, never wrong). This replaces the old
-    route-to-exhaustive fallback: a stopword-sized posting set now fans
-    out over ceil(Σdf / cap) tasks of ~cap postings each, keeping WAND's
-    block skipping instead of abandoning it
-    (reference accumulate semantics: sparse_index.py:661-748)."""
-    from .sharding import shard_blocks
-
-    spark = index.postings.sparkSession
-    q_local = _q_local(spark, rows)
-    base = index.postings
-    terms = sorted({r["term_id"] for r in rows})
-    if len(terms) <= _ISIN_PUSHDOWN_CAP:
-        base = base.filter(F.col("term_id").isin(terms))
-    else:
-        # term pruning MUST land below the shard split regardless — the
-        # split's mapInArrow is a barrier Catalyst can't push the later
-        # join through, and splitting the whole table decodes every
-        # boundary block corpus-wide
-        base = base.join(
-            F.broadcast(q_local.select("term_id").distinct()),
-            "term_id", "left_semi",
-        )
-    sharded = shard_blocks(base, int(index.meta["n_docs"]), n_shards)
-    cand = sharded.join(F.broadcast(q_local), "term_id").select(
-        "query_id", "shard_id", "qtf", "min_doc", "max_doc", "max_weight",
-        "doc_gaps", "weights",
-    )
-
-    return cand.groupBy("query_id", "shard_id").applyInPandas(
-        lambda pdf: _wand_group(pdf, k), schema=_SCORES_SCHEMA
     )
 
 

@@ -69,12 +69,15 @@ def shard_postings(index: InvertedIndex, n_shards: int) -> DataFrame:
 def shard_blocks(postings: DataFrame, n_docs: int, n_shards: int) -> DataFrame:
     """The doc-range splitter on any POSTINGS_SCHEMA DataFrame. Narrow —
     no shuffle; the query engine applies it to an already term-pruned
-    block set to give the partial WAND phase doc-disjoint tasks
-    (query.py:_wand_scores_sharded)."""
+    block set to give each WAND shard tier doc-disjoint tasks
+    (query.py:_wand_scores). One shard is every block unchanged with
+    ``shard_id`` 0 — a projection, no ``mapInArrow`` Python stage."""
     if n_shards < 1:
         raise ValueError("n_shards must be >= 1")
-    dps = _dps(n_docs, n_shards)
     postings = postings.select(*_COLS[1:])  # POSTINGS_SCHEMA order
+    if n_shards == 1:
+        return postings.select(F.lit(0).alias("shard_id"), "*")
+    dps = _dps(n_docs, n_shards)
 
     def split_batches(batches):
         for b in batches:

@@ -198,6 +198,30 @@ def test_wand_kernel_equals_brute_force(blocks):
         assert gd == wd and np.float32(gs) == ws, (got, want)
 
 
+def test_wand_stop_compares_f32_bounds():
+    """The θ-cut must compare f32 values: after two blocks doc 100 sums to
+    1 + 2^-30 in f64, above the unseen bound 1.0, but both round to f32
+    1.0 — so unseen doc 0 ties the kth score and wins on doc_idx."""
+    blocks = [
+        (np.arange(100, 1124), np.ones(1024)),
+        (np.r_[100, np.arange(3000, 4023)], np.r_[2.0**-30, np.ones(1023)]),
+        (np.array([0]), np.ones(1)),
+    ]
+    gaps, wts, max_w, min_d, max_d = [], [], [], [], []
+    for d, w in blocks:
+        g, wb = encode_block(d.astype(np.int64), w.astype(np.float32))
+        gaps.append(g)
+        wts.append(wb)
+        max_w.append(float(w.max()))
+        min_d.append(int(d[0]))
+        max_d.append(int(d[-1]))
+    docs, scores = _wand_topk(
+        np.ones(3, dtype=np.float32), np.asarray(max_w, dtype=np.float32),
+        np.asarray(min_d), np.asarray(max_d), gaps, wts, 1,
+    )
+    assert docs.tolist() == [0] and scores.tolist() == [1.0]
+
+
 # ---------------------------------------------------------------------------
 # served dense kernel (LocalIndexServer) vs brute force
 # ---------------------------------------------------------------------------

@@ -16,15 +16,17 @@ from pyspark.sql import functions as F
 
 from splade_spark.config import EngineConfig
 from splade_spark.fixtures import gen_pages, gen_queries
-from splade_spark.functions.codec import decode_block
-from splade_spark.operators.indexing import build_index
+from splade_spark.functions.codec import decode_block, encode_block
+from splade_spark.operators.indexing import POSTINGS_SCHEMA, build_index
 from splade_spark.operators.query import local_server, retrieve
 from splade_spark.operators.sharding import (
     ShardedServer,
     load_shard,
     save_sharded,
+    shard_blocks,
     shard_postings,
 )
+from splade_spark.session import local_frame
 
 N_DOCS = 300
 N_QUERIES = 25
@@ -88,6 +90,27 @@ def test_shard_postings_preserves_postings(index, n_shards):
 
     if n_shards > 1:
         assert sharded["shard_id"].nunique() > 1  # split actually happened
+
+
+def test_one_shard_split_is_a_projection(spark):
+    """One shard is every block unchanged with shard_id 0, planned as a
+    projection — no MapInArrow Python stage (the one-task WAND tier).
+    The blocks are a local relation, since a built index's cached plan
+    holds the build's own MapInArrow."""
+    rows = []
+    for tid, bid, docs in [(1, 0, [0, 3, 9]), (1, 1, [10, 12]), (2, 0, [5])]:
+        d = np.asarray(docs, dtype=np.int64)
+        w = np.linspace(0.5, 1.0, d.size).astype(np.float32)
+        g, wb = encode_block(d, w)
+        rows.append((tid, bid, d.size, int(d[0]), int(d[-1]),
+                     float(w.max()), g, wb))
+    out = shard_blocks(local_frame(spark, rows, POSTINGS_SCHEMA), 13, 1)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" not in plan
+    assert out.columns[0] == "shard_id"
+    assert sorted(tuple(r) for r in out.collect()) == sorted(
+        (0, *r) for r in rows
+    )
 
 
 def test_sharded_server_parity(spark, index, corpus):

@@ -197,11 +197,12 @@ def test_save_load_roundtrip_and_server(spark, corpus, tmp_path):
 
 
 def test_wand_heavy_query_routing_equivalent(spark, corpus):
-    """Scale safety valve: with wand_postings_cap=0 EVERY query is 'heavy'
-    and runs through the partial-WAND phase (doc-disjoint shard split →
-    per-(query, shard) kernel → exact merge) at MAXIMAL sharding (one doc
-    per shard, since n_shards caps at n_docs) — results must be identical
-    to the plain exhaustive strategy (and to default single-task WAND)."""
+    """Scale safety valve: with wand_postings_cap=0 EVERY query whose
+    terms hold more than one posting gets a shard tier above one
+    (doc-disjoint shard split → per-(query, shard) kernel → exact merge),
+    up to MAXIMAL sharding (one doc per shard, since n_shards caps at
+    n_docs) — results must be identical to the plain exhaustive strategy
+    (and to default one-shard WAND)."""
     pages, queries = corpus
     cfg = EngineConfig(block_size=64, index_partitions=4)
     docs = spark.createDataFrame(pages[["url", "text"]])

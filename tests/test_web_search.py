@@ -197,6 +197,16 @@ def test_pair_proximity_rejects_equal_terms(spark, built):
         pair_proximity(positional, [("p", "hash", "hash")])
 
 
+def test_pair_proximity_rejects_repeated_query_id(spark, built):
+    """One pair per query_id: a repeated id would merge two pairs' terms
+    into one (query, doc) fold."""
+    _, _, _, positional = built
+    with pytest.raises(ValueError, match="unique"):
+        pair_proximity(
+            positional, [("p", "hash", "join"), ("p", "strategy", "hash")]
+        )
+
+
 def test_best_snippet_matches_bruteforce(spark, built):
     docs, idx, oi, positional = built
     W = 5
