@@ -1181,6 +1181,8 @@ JACCARD_MIN_MILLI = 100
 # before pairing — at corpus scale an uncapped stop-shingle would join
 # O(df^2) pairs; similarity is defined over the rare-shingle subsets
 JACCARD_SHINGLE_DF_CAP = 50
+# |A ∩ B| / |A ∪ B| in milli, rounded half up in integer arithmetic
+_JACCARD_MILLI_DUCK = _half_up_ratio("i", "sa.n + sb.n - i", 1000, "//")
 
 
 @register(
@@ -1203,11 +1205,11 @@ inter AS (
   GROUP BY a.doc_id, b.doc_id
 )
 SELECT doc_a, doc_b,
-       CAST(round(i * 1000.0 / (sa.n + sb.n - i)) AS BIGINT) AS jaccard_milli
+       CAST({_JACCARD_MILLI_DUCK} AS BIGINT) AS jaccard_milli
 FROM inter
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
-WHERE round(i * 1000.0 / (sa.n + sb.n - i)) >= {JACCARD_MIN_MILLI}
+WHERE {_JACCARD_MILLI_DUCK} >= {JACCARD_MIN_MILLI}
 """,
 )
 def jaccard_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1216,7 +1218,8 @@ def jaccard_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline), FREQUENCY-CAPPED: shingles with df > cap are dropped
     before the self-join (a stop-shingle would otherwise explode the join
     at corpus scale), and similarity is defined over the rare-shingle
-    subsets — identically on both the Spark and oracle sides."""
+    subsets — identically on both the Spark and oracle sides. The ratio
+    is rounded in integer arithmetic (``_half_up_ratio``)."""
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < JACCARD_MAX_DOC)
     ds0 = docs.select("doc_id", F.explode(_shingles_col()).alias("s")).distinct()
     sdf = ds0.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
@@ -1232,7 +1235,7 @@ def jaccard_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count(F.lit(1)).alias("i"))
     )
-    jac = F.round(F.col("i") * 1000.0 / (F.col("sa.n") + F.col("sb.n") - F.col("i")))
+    jac = F.expr(_half_up_ratio("i", "sa.n + sb.n - i", 1000))
     return (
         inter.join(sizes.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
         .join(sizes.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
@@ -2863,9 +2866,9 @@ SELECT f.doc_id, f.n_lines,
        CAST(round(f.dlf * 1000) AS BIGINT) AS dup_line_frac_milli,
        f.n_tokens,
        CAST(coalesce(top.maxc, 0) AS BIGINT) AS top_bigram_count,
-       CAST(round(CASE WHEN f.n_tokens >= 2
-                       THEN 2.0 * coalesce(top.maxc, 0) / f.n_tokens
-                       ELSE 0.0 END * 1000) AS BIGINT) AS top_bigram_frac_milli
+       CAST(CASE WHEN f.n_tokens >= 2
+                 THEN {_half_up_ratio('2 * coalesce(top.maxc, 0)', 'f.n_tokens', 1000, '//')}
+                 ELSE 0 END AS BIGINT) AS top_bigram_frac_milli
 FROM feat f LEFT JOIN top ON f.doc_id = top.doc_id
 """,
 )
@@ -2876,7 +2879,10 @@ def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own first-4-token header (an extra copy every third doc), so the
     dup-line fraction is non-trivially varied; the bigram side runs over
     the full token stream. The oracle re-derives both features
-    independently (list ops + an unnest-range bigram join)."""
+    independently (list ops + an unnest-range bigram join). The bigram
+    coverage is a ratio of integers, rounded in integer arithmetic
+    (``_half_up_ratio``); ``repetition_stats`` exposes no distinct-line
+    count, so the duplicate-line fraction keeps milli-rounding."""
     from .operators.textstats import repetition_stats
 
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 200)
@@ -2895,8 +2901,11 @@ def repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("dup_line_frac") * 1000).cast("bigint")
         .alias("dup_line_frac_milli"),
         "n_tokens", "top_bigram_count",
-        F.round(F.col("top_bigram_frac") * 1000).cast("bigint")
-        .alias("top_bigram_frac_milli"),
+        F.expr(
+            "CASE WHEN n_tokens >= 2 THEN "
+            f"{_half_up_ratio('2 * top_bigram_count', 'n_tokens', 1000)} "
+            "ELSE 0 END"
+        ).cast("bigint").alias("top_bigram_frac_milli"),
     )
 
 
@@ -4633,7 +4642,7 @@ def bm25_topk_synonyms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-time synonym expansion (query.expand_queries_with_synonyms
     feeding the external-weights retrieval path): each query term adds
     its synonyms at 0.6x weight, contributions to the same term sum, and
-    retrieval runs the weighted accumulation (encode_queries_weighted —
+    retrieval runs the weighted accumulation (query.query_terms —
     the same q_w·d_w path neural expansion uses, W3 sparsify included).
     OOV synonyms vanish at the dictionary join on both engines. The
     expansion never touches postings — it is query-side-only Column work

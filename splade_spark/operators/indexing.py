@@ -166,7 +166,6 @@ def build_index(
     text_col: str = "text",
     cfg: EngineConfig = DEFAULT,
     weighted_terms: DataFrame | None = None,
-    n_docs_hint: int | None = None,
 ) -> InvertedIndex:
     """Build the full index from a corpus DataFrame.
 
@@ -185,12 +184,7 @@ def build_index(
         tf, doc_len = doc_term_frequencies(docs, id_col, text_col, cfg)
         return index_from_tf(tf, doc_len, cfg=cfg, weighted_terms=weighted_terms)
 
-    # The sizing count is metadata-cheap on a bare parquet scan (row-group
-    # stats) but a full pass on a filtered or Iceberg source — callers with
-    # such inputs pass ``n_docs_hint`` (any upper-bound estimate works; it
-    # only picks a task width) to skip the pass entirely.
-    n_est = docs.count() if n_docs_hint is None else int(n_docs_hint)
-    with _build_width(docs.sparkSession, cfg, n_est) as n_part:
+    with _build_width(docs.sparkSession, cfg, docs.count()) as n_part:
         return _build_index_classic(docs, id_col, text_col, cfg, n_part)
 
 
@@ -236,6 +230,24 @@ def _require_complete(meta: dict, who: str) -> None:
             f"top_k_terms={cap}, max_tokens={max_t} — pruned postings "
             "make term presence undecidable and cannot be reconstructed"
         )
+
+
+def cfg_from_meta(meta: dict) -> EngineConfig:
+    """EngineConfig frozen from an index's metadata snapshot: the settings
+    the index was built with. Every reader of an index takes them from
+    here, not from a caller's config — the write-path fold (merge.py) and
+    every query encoder (query.query_terms, positional.retrieve_web)."""
+    return EngineConfig(
+        max_tokens=int(meta["max_tokens"]),
+        top_k_terms=int(meta["top_k_terms"]),
+        min_weight=float(meta["min_weight"]),
+        exclude_terms=tuple(meta.get("exclude_terms", ())),
+        k1=float(meta["k1"]),
+        b=float(meta["b"]),
+        block_size=int(meta["block_size"]),
+        value_dtype=str(meta.get("value_dtype", "float32")),
+        index_partitions=int(meta["index_partitions"]),
+    )
 
 
 def _build_index_classic(

@@ -55,7 +55,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..config import EngineConfig
 from .ids import assign_global_ids
 from .indexing import (
     InvertedIndex,
@@ -63,25 +62,10 @@ from .indexing import (
     _doc_totals,
     _finish,
     _require_complete,
+    cfg_from_meta,
     doc_term_frequencies,
     explode_postings,
 )
-
-
-def cfg_from_meta(meta: dict) -> EngineConfig:
-    """EngineConfig frozen from an index's metadata snapshot — the fold
-    must use the settings the index was built with, not the caller's."""
-    return EngineConfig(
-        max_tokens=int(meta["max_tokens"]),
-        top_k_terms=int(meta["top_k_terms"]),
-        min_weight=float(meta["min_weight"]),
-        exclude_terms=tuple(meta.get("exclude_terms", ())),
-        k1=float(meta["k1"]),
-        b=float(meta["b"]),
-        block_size=int(meta["block_size"]),
-        value_dtype=str(meta.get("value_dtype", "float32")),
-        index_partitions=int(meta["index_partitions"]),
-    )
 
 
 def reconstruct_tf(index: InvertedIndex) -> DataFrame:

@@ -59,6 +59,7 @@ from ..functions.codec import (
 )
 from ..functions.tokenize import tokenize_py, tokens_col
 from ..session import local_frame
+from .indexing import cfg_from_meta
 
 
 def positional_postings(
@@ -482,7 +483,6 @@ def retrieve_proximity(
     queries: list[tuple[str, str]],
     k: int = 10,
     alpha: float = 1.0,
-    cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
     """Proximity-boosted conjunctive retrieval: candidates contain every
     distinct query token (implicit AND), ranked by
@@ -492,14 +492,15 @@ def retrieve_proximity(
     AND-candidate of a ≥2-term query has a defined gap (it contains all
     terms); single-term queries rank by plain BM25 (boost 0 via the
     left join). Both planes are single-pass (conjunctive_scores;
-    min_term_gap) and join on (query, doc) before the top-k cut.
+    min_term_gap) and join on (query, doc) before the top-k cut. Both
+    tokenize under the index's own settings (``cfg_from_meta``).
     """
     from .query import _topk, conjunctive_scores
 
     spark = positional.sparkSession
     qdf = local_frame(spark, queries, "query_id string, text string")
-    scores = conjunctive_scores(index, qdf, cfg)
-    gaps = min_term_gap(positional, qdf, cfg).join(
+    scores = conjunctive_scores(index, qdf)
+    gaps = min_term_gap(positional, qdf, cfg_from_meta(index.meta)).join(
         index.doc_dim.select("doc_id", "doc_idx"), "doc_id"
     ).select("query_id", "doc_idx", "min_gap")
     boosted = (
@@ -548,7 +549,6 @@ def retrieve_web(
     positional: DataFrame,
     queries: list[tuple[str, str]],
     k: int = 10,
-    cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
     """Web-style query: ``'"exact phrase" other terms'`` → documents
     matching EVERY quoted phrase (positional plane) AND containing every
@@ -561,7 +561,9 @@ def retrieve_web(
     phrase id per (query, quoted segment), folded to a per-(query, doc)
     satisfied-count and compared to the query's phrase count. Docs
     join back through doc_dim (broadcast at serving scale); queries
-    with no quoted segment skip the phrase plane entirely.
+    with no quoted segment skip the phrase plane entirely. Both planes
+    tokenize under the index's own settings (``cfg_from_meta``), as the
+    served ``webserve.WebQueryServer`` does.
     """
     from .query import _topk, conjunctive_scores
 
@@ -569,9 +571,10 @@ def retrieve_web(
         raise ValueError(
             "retrieve_web: '#' is reserved for synthetic phrase ids"
         )
+    cfg = cfg_from_meta(index.meta)
     spark = positional.sparkSession
     qdf = local_frame(spark, queries, "query_id string, text string")
-    scores = conjunctive_scores(index, qdf, cfg)
+    scores = conjunctive_scores(index, qdf)
 
     phrase_rows = [
         (f"{qid}#{i}", ph)

@@ -3,11 +3,14 @@
 Reference semantics reproduced:
 - bag-of-words query encoding (doc_only mode)
   (/root/reference/src/model/retriever/sparse/neural/splade.py:243-265)
-- query-side sparsify mirrored from INDEX metadata — exclusions, strict
-  min_weight, top-k terms — exactly as the reference mirrors the encode
-  settings stored with the index
+- every query-side setting read from INDEX metadata — the tokenizer's
+  max_tokens, exclusions, strict min_weight, top-k terms — exactly as the
+  reference mirrors the encode settings stored with the index
   (/root/reference/src/model/pl_module/retrieval.py:133-144,
-  /root/reference/src/indexing/sparse_index.py:539-578)
+  /root/reference/src/indexing/sparse_index.py:539-578). One encoder per
+  plane: ``query_terms`` for the distributed strategies,
+  ``LocalIndexServer._parse`` / ``_sparsify`` for served nodes; neither
+  takes a caller's config
 - token exclusion (pad/cls/sep analogue: a term exclusion list,
   /root/reference/src/indexing/sparse_index.py:61-63,556-558)
 - score accumulation `scores[doc] += q_w * d_w`
@@ -61,94 +64,85 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..config import DEFAULT, TERMS_PER_TOKEN_BOUND, EngineConfig
+from ..config import DEFAULT, EngineConfig
 from ..functions.codec import decode_block
 from ..functions.tokenize import tokenize_py, tokens_col
 from ..session import local_frame
-from .indexing import InvertedIndex, _require_complete, explode_postings
+from .indexing import (
+    InvertedIndex,
+    _require_complete,
+    cfg_from_meta,
+    explode_postings,
+)
 
 _RESULT_SCHEMA = "query_id string, rank int, doc_id string, score float"
 
 
-def encode_queries(
-    queries: DataFrame,
-    term_dict: DataFrame,
-    cfg: EngineConfig = DEFAULT,
-    meta: dict | None = None,
-) -> DataFrame:
-    """(query_id, text) → (query_id, term_id, qtf float, df). Bag-of-words
-    with the index's own tokenizer; OOV terms dropped by the inner
-    dictionary join (the query side is tiny → broadcast). ``meta`` applies
-    the index's exclusion list (P2) before the dictionary join; the
-    numeric sparsify (W3) happens in :func:`sparsify_query_terms`."""
-    qt = (
+def _query_bag(max_tokens: int, queries: DataFrame) -> DataFrame:
+    """(query_id, term, qtf float): the bag of words of (query_id, text)
+    queries under the classic tokenizer truncated at ``max_tokens``."""
+    return (
         queries.select(
             F.col("query_id").cast("string").alias("query_id"),
-            F.explode(tokens_col("text", cfg.max_tokens)).alias("term"),
+            F.explode(tokens_col("text", max_tokens)).alias("term"),
         )
         .groupBy("query_id", "term")
         .agg(F.count(F.lit(1)).cast("float").alias("qtf"))
     )
-    exclude = tuple((meta or {}).get("exclude_terms", ()) or ())
-    if exclude:
-        qt = qt.filter(~F.col("term").isin(*exclude))
-    return term_dict.select("term", "term_id", "df").join(
-        F.broadcast(qt), "term"
-    ).select("query_id", "term_id", "qtf", "df")
 
 
-def encode_queries_weighted(
-    query_weights: DataFrame, term_dict: DataFrame, meta: dict | None = None
+def _query_vector(
+    index: InvertedIndex, cfg: EngineConfig, bag: DataFrame,
+    external: bool = False,
 ) -> DataFrame:
-    """Pre-expanded query vectors (query_id, term, weight) — e.g. the
-    SPLADE-style expander applied to query text — mapped into term-id
-    space. The weight takes the place of qtf in the identical downstream
-    accumulation (the reference scores q_w·d_w the same way for neural and
-    bag-of-words queries, sparse_index.py:661-686)."""
-    qt = query_weights.select(
-        F.col("query_id").cast("string").alias("query_id"),
-        "term",
-        F.col("weight").cast("float").alias("qtf"),
+    """A (query_id, term, qtf) bag in term-id space, (query_id, term_id,
+    qtf, df): the inner dictionary join (the query side is tiny →
+    broadcast) drops OOV and excluded terms (P2: the build gives an
+    excluded term no term_id), then W3 with the index's own settings:
+    strict ``qtf > min_weight``, then the ``top_k_terms`` heaviest terms
+    per query (weight desc, term_id asc). A text bag holds at most
+    ``max_tokens`` terms, so the cap window runs only below that, or for
+    ``external`` weight vectors, which have no such bound. ``cfg`` is
+    ``cfg_from_meta(index.meta)``."""
+    out = (
+        index.term_dict.select("term", "term_id", "df")
+        .join(F.broadcast(bag), "term")
+        .select("query_id", "term_id", "qtf", "df")
+        .filter(F.col("qtf") > float(cfg.min_weight))
     )
-    exclude = tuple((meta or {}).get("exclude_terms", ()) or ())
-    if exclude:
-        qt = qt.filter(~F.col("term").isin(*exclude))
-    return term_dict.select("term", "term_id", "df").join(
-        F.broadcast(qt), "term"
-    ).select("query_id", "term_id", "qtf", "df")
-
-
-def sparsify_query_terms(
-    q_terms: DataFrame, meta: dict, bounded_by_encoder: bool = True
-) -> DataFrame:
-    """W3: prune the query vector with the INDEX's own settings, mirrored
-    from metadata (reference retrieval.py:133-144 → sparse_index.py:539-578):
-    strict ``qtf > min_weight``, then keep the ``top_k_terms``
-    highest-weight terms per query (ties: weight desc, term_id asc).
-
-    ``bounded_by_encoder``: True when the query vectors came from this
-    repo's encoders (bag-of-words / surrogate expander), whose per-query
-    term count is provably ≤ TERMS_PER_TOKEN_BOUND·max_tokens — only then
-    may the cap window be skipped as never-binding. Externally supplied
-    weight vectors have no such bound, so the window always runs for them
-    (every strategy then agrees with LocalIndexServer, which always
-    applies the cap)."""
-    mw = float(meta.get("min_weight", 0.0))
-    out = q_terms.filter(F.col("qtf") > mw)
-    qk = int(meta.get("top_k_terms", 1 << 30))
-    max_tokens = int(meta.get("max_tokens", DEFAULT.max_tokens))
-    # a cap at or above the encoder's terms-per-query bound can never
-    # bind — skip the window (the mirror of indexing._finish's skip)
-    if not bounded_by_encoder or qk < TERMS_PER_TOKEN_BOUND * max_tokens:
+    if external or cfg.top_k_terms < cfg.max_tokens:
         w = Window.partitionBy("query_id").orderBy(
             F.desc("qtf"), F.asc("term_id")
         )
         out = (
             out.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= qk)
+            .filter(F.col("_rn") <= cfg.top_k_terms)
             .drop("_rn")
         )
     return out
+
+
+def query_terms(
+    index: InvertedIndex,
+    queries: DataFrame | None,
+    query_weights: DataFrame | None = None,
+) -> DataFrame:
+    """The distributed query encoder: (query_id, text) ``queries``, or
+    pre-expanded ``query_weights`` (query_id, term, weight) used as given
+    (e.g. the SPLADE-style expander's; the weight takes the place of qtf
+    in the same q_w·d_w accumulation, reference sparse_index.py:661-686)
+    → (query_id, term_id, qtf float, df). Every setting — the tokenizer's
+    ``max_tokens``, ``exclude_terms``, ``min_weight``, ``top_k_terms`` —
+    is the index's own (``cfg_from_meta``), as the reference mirrors the
+    encode settings stored with the index (retrieval.py:133-144 →
+    sparse_index.py:539-578) and as ``LocalIndexServer._parse`` does."""
+    cfg = cfg_from_meta(index.meta)
+    if query_weights is None:
+        return _query_vector(index, cfg, _query_bag(cfg.max_tokens, queries))
+    return _query_vector(index, cfg, query_weights.select(
+        F.col("query_id").cast("string").alias("query_id"), "term",
+        F.col("weight").cast("float").alias("qtf"),
+    ), external=True)
 
 
 # above this many distinct query term_ids, skip the isin literal pushdown
@@ -268,34 +262,44 @@ def _exhaustive_scores(
     return partials.groupBy("query_id", "doc_idx").agg(*aggs)
 
 
+def _matching_scores(
+    index: InvertedIndex, q_terms: DataFrame, need: int | DataFrame, who: str
+) -> DataFrame:
+    """(query_id, doc_idx, score) of the docs holding at least ``need``
+    DISTINCT query terms — an int for every query, or a (query_id, _need)
+    frame of one int per query (broadcast). Scores stay the full sum, tie
+    rule unchanged. The count rides the score aggregation's own
+    map-side-combined shuffle (``_exhaustive_scores(with_counts=True)``):
+    no second pass, no extra shuffle vs the OR plan. Needs a complete
+    index: a pruned one (``min_weight > 0`` or a binding per-doc term cap)
+    could hide a term a doc holds and make term presence undecidable."""
+    _require_complete(index.meta, who)
+    scores = _exhaustive_scores(index, q_terms, with_counts=True)
+    if isinstance(need, DataFrame):
+        scores = scores.join(F.broadcast(need), "query_id")
+        need = F.col("_need")
+    return scores.filter(F.col("_nterms") >= need).select(
+        "query_id", "doc_idx", "score"
+    )
+
+
 def retrieve_msm(
     index: InvertedIndex,
     queries: DataFrame,
     k: int = 10,
     msm: int = 2,
-    cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
     """Minimum-should-match retrieval — the standard middle ground
     between OR (WAND) and implicit AND: a doc ranks iff it contains at
     least ``msm`` DISTINCT query terms; scores stay the full BM25 sum,
     tie rule unchanged. OOV query tokens simply can't be matched (they
     don't kill the query as AND does); ``msm=1`` degenerates to
-    exhaustive OR. The distinct-term count rides the score
-    aggregation's own map-side-combined shuffle — no requirement
-    dimension, no second pass. Same completeness preconditions as the
-    conjunctive path (a pruned index makes term-presence undecidable).
-    """
-    meta = index.meta
-    _require_complete(meta, "retrieve_msm")
+    exhaustive OR. Same plan and completeness precondition as the
+    conjunctive path (``_matching_scores``)."""
     if msm < 1:
         raise ValueError("retrieve_msm: msm must be >= 1")
-    q_terms = sparsify_query_terms(
-        encode_queries(queries, index.term_dict, cfg, meta), meta
-    )
-    scores = (
-        _exhaustive_scores(index, q_terms, with_counts=True)
-        .filter(F.col("_nterms") >= msm)
-        .select("query_id", "doc_idx", "score")
+    scores = _matching_scores(
+        index, query_terms(index, queries), msm, "retrieve_msm"
     )
     return _topk(scores, index, k)
 
@@ -304,7 +308,6 @@ def retrieve_conjunctive(
     index: InvertedIndex,
     queries: DataFrame,
     k: int = 10,
-    cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
     """AND-semantics top-k: only documents containing EVERY distinct
     (non-excluded) token of the query text are ranked; scores are the
@@ -317,53 +320,32 @@ def retrieve_conjunctive(
     single map-side-combined shuffle as the score aggregation (count(*)
     over the decoded partials — one posting row per (term, doc) because
     blocks hold disjoint doc ranges within a term); the requirement
-    dimension (one int per query) broadcasts. No second pass, no extra
-    shuffle vs the OR plan; at 10^12 docs the conjunctive filter only
-    SHRINKS the ranked set (the candidate scan is identical, which is
-    why engines layer WAND on top for OR and intersection for AND — the
-    exhaustive agg here is the strategy-agnostic exact form).
-
-    Exactness preconditions (checked): the index must retain every
-    posting — ``min_weight > 0`` or a binding per-doc term cap could hide
-    a term the doc actually contains and falsify the AND test.
+    dimension (one int per query) broadcasts. At 10^12 docs the
+    conjunctive filter only SHRINKS the ranked set (the candidate scan is
+    identical, which is why engines layer WAND on top for OR and
+    intersection for AND — the exhaustive agg here is the
+    strategy-agnostic exact form). Raises on a pruned index
+    (``_matching_scores``).
     """
-    return _topk(conjunctive_scores(index, queries, cfg), index, k)
+    return _topk(conjunctive_scores(index, queries), index, k)
 
 
-def conjunctive_scores(
-    index: InvertedIndex,
-    queries: DataFrame,
-    cfg: EngineConfig = DEFAULT,
-) -> DataFrame:
+def conjunctive_scores(index: InvertedIndex, queries: DataFrame) -> DataFrame:
     """The pre-topk body of ``retrieve_conjunctive``: (query_id, doc_idx,
     score) for docs containing every distinct query token. Exposed so
     composite retrieval (positional.retrieve_web) can add further
     filters BEFORE the rank cut — filtering after top-k would silently
-    drop docs that should rise into the k. Raises on indexes whose
-    pruning knobs would make the all-terms test undecidable."""
-    meta = index.meta
-    _require_complete(meta, "conjunctive retrieval")
-    max_tokens = int(meta.get("max_tokens", cfg.max_tokens))
-    q_terms = sparsify_query_terms(
-        encode_queries(queries, index.term_dict, cfg, meta), meta
-    )
-    exclude = tuple(meta.get("exclude_terms", ()) or ())
-    toks = queries.select(
-        F.col("query_id").cast("string").alias("query_id"),
-        F.explode(
-            F.array_distinct(tokens_col("text", max_tokens))
-        ).alias("term"),
-    )
-    if exclude:
-        toks = toks.filter(~F.col("term").isin(*exclude))
-    required = toks.groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("_nreq")
-    )
-    scores = _exhaustive_scores(index, q_terms, with_counts=True)
-    return (
-        scores.join(F.broadcast(required), "query_id")
-        .filter(F.col("_nterms") == F.col("_nreq"))
-        .select("query_id", "doc_idx", "score")
+    drop docs that should rise into the k. The query text is tokenized
+    once, under the index's settings: its bag of non-excluded tokens (OOV
+    included) sets each query's requirement, and its dictionary terms are
+    the query vector (W3 cannot bind on the complete index AND needs)."""
+    cfg = cfg_from_meta(index.meta)
+    bag = _query_bag(cfg.max_tokens, queries)
+    if cfg.exclude_terms:
+        bag = bag.filter(~F.col("term").isin(*cfg.exclude_terms))
+    need = bag.groupBy("query_id").agg(F.count(F.lit(1)).alias("_need"))
+    return _matching_scores(
+        index, _query_vector(index, cfg, bag), need, "conjunctive retrieval"
     )
 
 
@@ -492,11 +474,9 @@ def score_wand(
     if not rows:
         return local_frame(spark, [], _RESULT_SCHEMA)
 
-    has_df = "df" in q_terms.columns
     per_q: dict[str, int] = {}
     for r in rows:
-        est = int(r["df"] or 0) if has_df else 0
-        per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + est
+        per_q[r["query_id"]] = per_q.get(r["query_id"], 0) + int(r["df"])
     cap = max(1, int(cfg.wand_postings_cap))
     n_docs = int(index.meta["n_docs"])
     tiers: dict[int, list] = {}
@@ -826,26 +806,24 @@ def retrieve(
     query_weights: DataFrame | None = None,
     allowed_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """Top-k retrieval. ``allowed_docs`` (one ``doc_id`` column) makes it
-    a FILTERED query: the ranking is restricted to the allowed subset
-    while scores keep full-corpus statistics (the standard engine
-    semantics for metadata filters). Filtered queries always run the
+    """Top-k retrieval of (query_id, text) ``queries``, or of
+    pre-expanded ``query_weights`` (query_id, term, weight) when given;
+    both encode through :func:`query_terms`, under the index's own
+    settings. ``cfg`` sets only ``wand_postings_cap``, the WAND shard-tier
+    width (``score_wand``; the ``bm25_topk_heavy_partial`` entry binds
+    it); nothing else of it is read.
+
+    ``allowed_docs`` (one ``doc_id`` column) makes it a FILTERED query:
+    the ranking is restricted to the allowed subset while scores keep
+    full-corpus statistics (the standard engine semantics for metadata
+    filters). Filtered queries always run the
     exhaustive plan regardless of ``strategy``: the WAND kernels emit
     per-task top-k before any filter could apply, and their block-max
     bounds are filter-agnostic — pruning against an arbitrary,
     possibly corpus-sized allowed set would need filter-aware θ
     bookkeeping for no plan advantage over the scale-safe exhaustive
     aggregation + post-agg semi-join."""
-    meta = index.meta
-    if query_weights is not None:
-        q_terms = encode_queries_weighted(query_weights, index.term_dict, meta)
-    else:
-        q_terms = encode_queries(queries, index.term_dict, cfg, meta)
-    # external weight vectors carry no per-query term-count bound — the
-    # sparsify cap window must always run for them (ADVICE r2)
-    q_terms = sparsify_query_terms(
-        q_terms, meta, bounded_by_encoder=query_weights is None
-    )
+    q_terms = query_terms(index, queries, query_weights)
     if allowed_docs is not None:
         return score_exhaustive(index, q_terms, k, allowed_docs=allowed_docs)
     if strategy == "wand":
@@ -862,7 +840,6 @@ def retrieve_with_prior(
     *,
     k: int = 10,
     beta: float = 1.0,
-    cfg: EngineConfig = DEFAULT,
     id_col: str = "doc_id",
     prior_col: str = "prior",
 ) -> DataFrame:
@@ -885,13 +862,11 @@ def retrieve_with_prior(
     map-side-combined score shuffle. ``n_prior`` is one count() on the
     static table — metadata-cheap on parquet and amortized across every
     query set served from the same prior snapshot. The blend itself is
-    pure Column arithmetic; the top-k window is unchanged.
+    pure Column arithmetic; the top-k window is unchanged. The query
+    text encodes through :func:`query_terms`, under the index's own
+    settings.
     """
-    meta = index.meta
-    q_terms = sparsify_query_terms(
-        encode_queries(queries, index.term_dict, cfg, meta), meta
-    )
-    scores = _exhaustive_scores(index, q_terms)
+    scores = _exhaustive_scores(index, query_terms(index, queries))
     n_prior = priors.count()
     boost = priors.select(
         F.col(id_col).cast("string").alias("doc_id"),
@@ -981,7 +956,7 @@ def expand_queries_with_synonyms(
     weights) unions one row per (query term → synonym) at
     ``syn_weight`` x the source term's count; the same term reached from
     several sources sums its contributions (order-free f64 sum, cast to
-    f32 once inside ``encode_queries_weighted``). Synonyms the corpus
+    f32 once inside :func:`query_terms`). Synonyms the corpus
     never says simply vanish at the dictionary join — expansion can add
     recall, never noise terms the index cannot score.
 
@@ -991,15 +966,8 @@ def expand_queries_with_synonyms(
     the whole expansion stays on the tiny query side — nothing touches
     postings until retrieval itself.
     """
-    from splade_spark.functions.tokenize import tokens_col
-
-    base = (
-        queries.select(
-            F.col("query_id").cast("string").alias("query_id"),
-            F.explode(tokens_col("text", cfg.max_tokens)).alias("term"),
-        )
-        .groupBy("query_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("_qtf"))
+    base = _query_bag(cfg.max_tokens, queries).select(
+        "query_id", "term", F.col("qtf").cast("double").alias("_qtf")
     )
     syn = (
         base.join(

@@ -2,7 +2,7 @@
 
 The reference engine has no correction stage; a served web tier needs
 one — a misspelled term otherwise just falls out at the dictionary join
-(``query.encode_queries`` drops OOV) and the query silently weakens.
+(``query.query_terms`` drops OOV) and the query silently weakens.
 
 Spark-first shape: both sides explode into distinct character n-grams
 and meet in a hash equi-join on the gram key — candidate generation is

@@ -39,13 +39,11 @@ served results are rank-identical to positional.retrieve_web
 from __future__ import annotations
 
 from collections.abc import Iterable
-from dataclasses import replace
 from itertools import chain
 
 import numpy as np
 import pandas as pd
 
-from ..config import DEFAULT
 # decode_block is not called here (LocalIndexServer._accumulate decodes
 # for this node too), but perfbench/tracing.py wraps it by this module's
 # name, so the import stays
@@ -55,7 +53,7 @@ from ..functions.codec import (  # noqa: F401
     decode_rows,
 )
 from ..functions.tokenize import tokenize_py
-from .indexing import _require_complete
+from .indexing import _require_complete, cfg_from_meta
 from .positional import parse_web_query
 from .query import LocalIndexServer
 from .sharding import ShardedServer
@@ -217,6 +215,9 @@ class WebQueryServer:
         self.srv = srv
         self.store = store
         _require_complete(srv.meta, "WebQueryServer")
+        # the index's settings govern the phrase parse, as in the
+        # distributed positional.retrieve_web
+        self.cfg = cfg_from_meta(srv.meta)
         node = {d: i for i, d in enumerate(srv.doc_ids, srv.doc_base)}
         # store doc number -> this node's global doc_idx (-1: not here)
         self.store_doc_idx = np.array(
@@ -253,14 +254,7 @@ class WebQueryServer:
             qtf.items() if known else (), every_term=True
         )
         if cand.size:
-            # the index's own max_tokens (from saved meta) must govern the
-            # phrase parse too — an empty-after-tokenize quoted segment is
-            # pruned only under the SAME truncation rule the distributed
-            # retrieve_web(cfg=...) path applies, keeping served/distributed
-            # rank identity for non-default configs.
-            for ph in parse_web_query(
-                raw, replace(DEFAULT, max_tokens=srv.max_tokens)
-            ):
+            for ph in parse_web_query(raw, self.cfg):
                 among = self.doc_store[cand - srv.doc_base]
                 hit = self.store.docs_with_phrase(
                     tokenize_py(ph, srv.max_tokens),

@@ -167,11 +167,11 @@ def test_candidate_blocks_query_side_is_local_relation(spark, corpus,
                                                        spark_index):
     import re
 
-    from splade_spark.operators.query import _candidate_blocks, encode_queries
+    from splade_spark.operators.query import _candidate_blocks, query_terms
 
     _, queries = corpus
     qdf = spark.createDataFrame(queries[["query_id", "text"]].head(5))
-    q_terms = encode_queries(qdf, spark_index.term_dict, CFG, spark_index.meta)
+    q_terms = query_terms(spark_index, qdf)
     plan = _candidate_blocks(spark_index, q_terms)._jdf.queryExecution() \
         .optimizedPlan().toString()
     # collected query rows re-enter the plan as a LocalRelation, which no

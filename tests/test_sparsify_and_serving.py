@@ -231,6 +231,35 @@ def test_wand_heavy_query_routing_equivalent(spark, corpus):
     idx.unpersist()
 
 
+def test_distributed_query_reads_index_max_tokens(spark):
+    """The distributed plane tokenizes queries under the INDEX's
+    max_tokens, as the served node does, not under a caller's config:
+    the query's 5th token ("red") lies past the index's 4-token horizon,
+    so it neither scores in any strategy nor counts toward AND."""
+    from dataclasses import replace
+
+    from splade_spark.config import DEFAULT
+    from splade_spark.operators.query import retrieve_conjunctive
+
+    docs = spark.createDataFrame(
+        [("w1", "red fox jumps high"), ("w2", "blue fox sits low"),
+         ("w3", "sits low blue red"), ("w4", "sits blue low fox")],
+        "doc_id string, text string",
+    )
+    idx = build_index(docs, cfg=replace(DEFAULT, max_tokens=4))
+    text = "sits low blue fox red"
+    qdf = spark.createDataFrame([("q", text)], "query_id string, text string")
+    served = [d for d, _ in local_server(idx).search(text, k=K)]
+    assert len(served) == 4
+    for strategy in ("exhaustive", "wand", "local"):
+        rows = sorted(retrieve(idx, qdf, k=K, strategy=strategy).collect(),
+                      key=lambda r: r["rank"])
+        assert [r["doc_id"] for r in rows] == served, strategy
+    got = {r["doc_id"] for r in retrieve_conjunctive(idx, qdf).collect()}
+    assert got == {"w2", "w4"}
+    idx.unpersist()
+
+
 def test_corpus_sized_query_set_rejected(spark, corpus):
     """The query-side driver collect is a CONTRACT (query set, not a
     corpus) — enforced, not assumed."""

@@ -154,7 +154,8 @@ def test_sharded_web_from_saved_matches_single(spark, served, tmp_path):
 def test_served_matches_distributed_nondefault_max_tokens(spark):
     """ADVICE r4: the served path must thread the INDEX's max_tokens into
     parse_web_query (not DEFAULT) so phrase pruning and truncation agree
-    with retrieve_web(cfg=...) for non-default configs."""
+    with retrieve_web, which reads them from the index, for non-default
+    configs."""
     from dataclasses import replace
 
     from splade_spark.config import DEFAULT
@@ -176,7 +177,7 @@ def test_served_matches_distributed_nondefault_max_tokens(spark):
     idx = build_index(docs, cfg=cfg)
     positional = positional_postings(docs, cfg=cfg)
     dist = {}
-    for r in retrieve_web(idx, positional, queries, k=10, cfg=cfg).collect():
+    for r in retrieve_web(idx, positional, queries, k=10).collect():
         dist.setdefault(r["query_id"], []).append(
             (r["rank"], r["doc_id"], r["score"])
         )
